@@ -193,7 +193,6 @@ def _with_signatures_expr(
     )
 
     sh = F.array_distinct(shingles(tokens(text_col), SHINGLE_K))
-    fill_base = wmul_const(F.col("gmin"), _FILL_C1)
 
     def band_bucket(b: Column) -> Column:
         parts = [
@@ -217,8 +216,13 @@ def _with_signatures_expr(
     # map-probe form paid P try_element_at calls per doc, each a
     # linear scan of the run-head map (r11 optimization, guide §4.1:
     # sig stage 1.84 → 1.21 s at sf0.1, bit-identical signatures).
+    # `fill_base` (~60 expression nodes) is its own column, computed
+    # once per document: captured inside the lambda it was re-evaluated,
+    # interpreted, for every empty slot (~84 of 128 per document).
+    # Pinned by tests/test_minhash_expr.py: the optimizer must not
+    # inline it back.
     def fill(k):
-        return fill_base.bitwiseXOR(k.cast("long") * F.lit(_FILL_C2))
+        return F.col("fill_base").bitwiseXOR(k.cast("long") * F.lit(_FILL_C2))
 
     rh = F.filter(
         F.col("pairs"),
@@ -240,6 +244,7 @@ def _with_signatures_expr(
         .where(F.size("sh") > 0)
         .withColumn("hashes", F.transform("sh", h64_md5))
         .withColumn("gmin", F.array_min("hashes"))
+        .withColumn("fill_base", wmul_const(F.col("gmin"), _FILL_C1))
         .withColumn(
             "pairs",
             F.array_sort(

@@ -22,12 +22,17 @@ This mirrors the reference corpus' exact-money model (Avro
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-__all__ = ["t", "m", "dsum", "davg", "o_m", "o_dsum", "o_davg", "md5_bucket", "ensure_parallelism", "local_df", "release_checkpoint", "revenue", "O_REVENUE", "centi_band", "o_centi_band", "bucketed_rank", "ntile_case"]
+__all__ = ["t", "m", "dsum", "davg", "o_m", "o_dsum", "o_davg", "md5_bucket", "ensure_parallelism", "local_df", "release_checkpoint", "release_counts", "revenue", "O_REVENUE", "centi_band", "o_centi_band", "bucketed_rank", "ntile_case"]
+
+
+_log = logging.getLogger(__name__)
+_release_counts = {"released": 0, "failed": 0}
 
 
 def release_checkpoint(df: DataFrame) -> None:
@@ -52,6 +57,10 @@ def release_checkpoint(df: DataFrame) -> None:
     CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND rather than silently recomputing.
     Safe no-op for plans that read no checkpoint (unpersisting a
     never-persisted RDD does nothing).
+
+    Best-effort: a failure never fails the query, but it is counted in
+    ``release_counts()`` and the first one is logged, so a drifted
+    py4j plan contract cannot silently turn releases off.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -60,9 +69,17 @@ def release_checkpoint(df: DataFrame) -> None:
             leaf = leaves.apply(i)
             if leaf.getClass().getSimpleName() == "LogicalRDD":
                 leaf.rdd().unpersist(False)
+                _release_counts["released"] += 1
     except Exception:
-        # best-effort: releasing storage must never fail a query
-        pass
+        _release_counts["failed"] += 1
+        if _release_counts["failed"] == 1:
+            _log.warning("release_checkpoint failed; blocks are left to GC", exc_info=True)
+
+
+def release_counts() -> dict[str, int]:
+    """Process-wide ``release_checkpoint`` totals: checkpoint RDDs
+    ``released`` and calls that ``failed``."""
+    return dict(_release_counts)
 
 
 def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:

@@ -23,6 +23,8 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_session", "default_parallelism"]
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -77,5 +79,12 @@ def get_session(app_name: str = "emr-datasources-spark", master: str | None = No
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # Python workers fork from daemon.py, which stops every task
+        # from re-reading pyspark.zip's directory (~300 ms a task on
+        # Python < 3.13). The daemon starts as `python -m` in the JVM's
+        # working directory; the package's parent dir on the workers'
+        # PYTHONPATH keeps it importable from any directory.
+        .config("spark.python.daemon.module", f"{__package__}.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()

@@ -308,12 +308,11 @@ class LogShardStreamReader(DataSourceStreamReader):
     # argument, and on a fresh start it runs BEFORE initialOffset
     # (traced against pyspark 4.1's python_streaming_source_runner) —
     # so an empty tracker cannot distinguish fresh start from
-    # checkpoint restart. Clamping against a zero baseline on restart
-    # would return an end offset BEHIND the checkpointed start and
-    # re-emit committed rows. Protocol instead:
-    #   * first latestOffset (tracker unset) returns EARLIEST (all
-    #     zeros): safe in both cases — one empty trigger, no jump past
-    #     data, no regression beyond what the engine already planned;
+    # checkpoint restart. Protocol:
+    #   * first latestOffset (tracker unset) clamps from zero: on a
+    #     fresh start that is batch 0's real end, so batch 0 carries
+    #     rows; on a restart the end may fall BEHIND the checkpointed
+    #     start, which partitions() turns into an empty batch (below);
     #   * partitions() maintains `_floor`, the per-shard max of every
     #     engine-planned start/end: replayed or regressed starts are
     #     clipped to it (rows below the floor were already emitted by
@@ -330,11 +329,7 @@ class LogShardStreamReader(DataSourceStreamReader):
             s: _shard_rows(os.path.join(self.path, s))
             for s in _list_shards(self.path)
         }
-        prev = getattr(self, "_last", None)
-        if prev is None:
-            earliest = {s: 0 for s in latest}
-            self._last = earliest
-            return earliest
+        prev = getattr(self, "_last", None) or {}
         if self.max_per_trigger <= 0:
             self._last = latest
             return latest

@@ -84,6 +84,41 @@ def test_minhash_expr_signatures_match_pandas_leg(spark):
         assert e.bands == r.bands, e.doc_id
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` in a plan string, parens matched."""
+    out = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth, i = 0, start + len("lambdafunction")
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+            if depth == 0:
+                break
+        out.append(plan[start:i])
+        start = plan.find("lambdafunction(", start + 1)
+    return out
+
+
+def test_minhash_fill_base_is_not_inlined_into_lambdas(spark):
+    """The densification filler's ``wmul_const(gmin, _FILL_C1)`` is a
+    ~60-node tree computed ONCE per document as column ``fill_base``.
+    Inlined back into the fill lambdas it runs once per empty slot,
+    interpreted — the optimizer must keep the lambdas reading the
+    column."""
+    plan = (
+        minhash._with_signatures_expr(_docs(spark))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    fills = [b for b in _lambda_bodies(plan) if str(minhash._FILL_C2) in b]
+    assert fills, plan
+    for body in fills:
+        assert "fill_base#" in body, body
+        assert "gmin#" not in body and "shiftleft" not in body, body
+
+
 def test_simhash_expr_matches_pandas_leg(spark):
     from aliyun_emapreduce_datasources_spark.dedup.simhash import _fingerprint
 

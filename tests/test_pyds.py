@@ -173,6 +173,31 @@ def test_emrlog_rate_limit_and_shard_discovery(spark, tmp_path):
         q.stop()
 
 
+def test_emrlog_rate_limited_batch0_carries_rows(spark, tmp_path):
+    """A fresh query's first latestOffset clamps from zero, so batch 0
+    reads up to the rate limit instead of being an empty trigger."""
+    d = str(tmp_path)
+    _write_shard(d, 0, 30)
+    q = (
+        spark.readStream.format("emrlog")
+        .option("path", d)
+        .option("schema", "k bigint, v string")
+        .option("maxOffsetsPerTrigger", "10")
+        .load()
+        .writeStream.format("memory")
+        .queryName("emrlog_batch0")
+        .outputMode("append")
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    try:
+        assert _wait_rows(spark, "emrlog_batch0", 30) == 30
+        batch0 = [p["numInputRows"] for p in q.recentProgress if p["batchId"] == 0]
+        assert batch0 and max(batch0) == 10, q.recentProgress[:2]
+    finally:
+        q.stop()
+
+
 def test_emrlog_append_resumes_from_cursor(spark, tmp_path):
     d = str(tmp_path)
     _write_shard(d, 0, 5)
@@ -280,8 +305,9 @@ def test_emrlog_rate_limited_restart_no_duplicates(spark, tmp_path):
     in-memory rate cursor dies with the driver, and Spark calls
     latestOffset before initialOffset, so a naive clamp-from-zero
     would hand back offsets BEHIND the checkpointed start and replay
-    committed rows. The restart protocol (earliest-on-first-call +
-    planned-floor clipping) must deliver exactly the new rows."""
+    committed rows. The restart protocol (planned-floor clipping of an
+    end offset behind the checkpoint) must deliver exactly the new
+    rows."""
     d = str(tmp_path / "shards")
     os.makedirs(d)
     cp = str(tmp_path / "ckpt")
