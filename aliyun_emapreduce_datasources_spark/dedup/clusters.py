@@ -175,12 +175,6 @@ def _propagate_components(
             .localCheckpoint(eager=False)
         )
         cur = labels.agg(F.sum("cluster_id")).collect()[0][0]
-        if edges_src is not None:
-            # the persisted edge projections above were filled by this
-            # first round's join — the upstream edge pipeline (often an
-            # eagerly checkpointed candidate table) is now dead weight
-            release_checkpoint(edges_src)
-            edges_src = None
         # round N's checkpoint just materialized (the agg above), so
         # round N-1's blocks are dead — drop them now instead of
         # leaving up to MAX_ROUNDS label tables for a driver GC
@@ -203,9 +197,14 @@ def _propagate_components(
         )
     # the final labels are materialized (every round's localCheckpoint
     # is realized by its convergence agg), so the edge caches can be
-    # dropped before returning without forcing a recompute
+    # dropped before returning without forcing a recompute. Only then
+    # is the upstream edge pipeline (often an eagerly checkpointed
+    # candidate table) dead: the caches' lineage leads into it, so a
+    # lost cache block in any round recomputes from it.
     sym.unpersist()
     edges.unpersist()
+    if edges_src is not None:
+        release_checkpoint(edges_src)
     return nodes.join(labels, "doc_id", "left").select(
         "doc_id",
         F.coalesce("cluster_id", "doc_id").alias("cluster_id"),

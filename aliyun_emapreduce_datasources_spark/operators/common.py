@@ -241,10 +241,15 @@ def bucketed_rank(
     does not reuse the shared subplan across the two branches (0
     ReusedExchange measured on text_ccnet_buckets — the caller's whole
     upstream LM pipeline executed twice), so the input is materialized
-    ONCE via localCheckpoint (the events_robust_outliers /
-    emb_kmeans_train convention): both passes read the narrow
-    (part, order-key) projection from executor-local storage instead
-    of recomputing the corpus-sized upstream."""
+    ONCE via a lazy persist: both passes read the narrow (part,
+    order-key) projection from the cache instead of recomputing the
+    corpus-sized upstream.
+
+    ``bucket`` must be deterministic; a nondeterministic one (``rand``,
+    ``uuid``, a nondeterministic UDF) raises ``ValueError``. The persist
+    keeps lineage, so a lost cache block recomputes the bucket, and a
+    recomputed nondeterministic bucket would give the count pass and
+    the join-back different ``_rb`` values: inconsistent ranks."""
     part_cols = list(part_cols)
     # withColumn silently REPLACES an existing column, so a caller
     # whose frame already carries one of the internal working names
@@ -258,6 +263,15 @@ def bucketed_rank(
         raise ValueError(
             f"bucketed_rank: input columns {sorted(clash)} collide with "
             "internal working/output names — rename them first"
+        )
+    # the analyzed expression: an unresolved function (rand, uuid)
+    # reports itself deterministic until it is resolved
+    analyzed = df.select(bucket)._jdf.queryExecution().analyzed()
+    if not analyzed.projectList().head().deterministic():
+        raise ValueError(
+            "bucketed_rank: the bucket expression is nondeterministic; a "
+            "recomputed bucket would make the count pass and the join-back "
+            "disagree — bucket by a deterministic expression"
         )
     # lazy persist (r12, was an eager localCheckpoint): both passes
     # read the cache, no separate materialization job, and the blocks

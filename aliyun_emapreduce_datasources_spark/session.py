@@ -16,14 +16,20 @@ Design notes (100 TB target, tested on local[32]):
 
 from __future__ import annotations
 
+import logging
 import multiprocessing
 import os
+import sys
 
+import pyspark
 from pyspark.sql import SparkSession
 
 __all__ = ["get_session", "default_parallelism"]
 
-_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+_PACKAGE_PARENT = os.path.dirname(_PACKAGE_DIR)
+_LAUNCHER = os.path.join(_PACKAGE_DIR, "launcher.sh")
+_log = logging.getLogger(__name__)
 
 
 def default_parallelism() -> int:
@@ -79,12 +85,44 @@ def get_session(app_name: str = "emr-datasources-spark", master: str | None = No
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        # Python workers fork from daemon.py, which stops every task
-        # from re-reading pyspark.zip's directory (~300 ms a task on
-        # Python < 3.13). The daemon starts as `python -m` in the JVM's
-        # working directory; the package's parent dir on the workers'
-        # PYTHONPATH keeps it importable from any directory.
-        .config("spark.python.daemon.module", f"{__package__}.daemon")
+        # workers unpickle package functions: keep the package
+        # importable from any working directory
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _use_launcher(spark)
+    return spark
+
+
+def _use_launcher(spark: SparkSession) -> None:
+    """Start every Python process Spark spawns through ``launcher.sh``.
+
+    Spark puts ``$SPARK_HOME/python/lib/pyspark.zip`` first on each
+    Python process's path. The zip holds ~1,170 sources and no
+    ``.pyc``, so each fresh process (a worker daemon, a data-source
+    planner runner, every streaming query's source runner) compiles
+    pyspark again: importing the source runner plus pyarrow took
+    0.84-1.02 s from the zip against 0.21-0.25 s from site-packages
+    (pyspark 4.1.2, Python 3.11, a 4-core x86-64 host).
+    ``PYSPARK_PYTHON=python`` may also resolve through a version-manager
+    shim that costs ~65 ms per process start. The launcher drops Spark's
+    archives from ``PYTHONPATH`` and execs this driver's interpreter.
+
+    PySpark reads ``sc.pythonExec`` when it wraps each UDF and each
+    ``spark.dataSource.register`` call, so this must run before any is
+    made. It applies only where the driver's pyspark is Spark's own
+    version, outside a zip, on the same host (a local master);
+    elsewhere Spark's default stays."""
+    sc = spark.sparkContext
+    local = sc.master == "local" or sc.master.startswith("local[")
+    same = pyspark.__version__ == spark.version and os.path.isfile(pyspark.__file__)
+    if not (local and same):
+        _log.warning(
+            "Python processes keep Spark's default executable %r: launcher.sh "
+            "needs a local master (got %s) and the driver's pyspark outside a "
+            "zip (got %s) at Spark's version %s (got %s)",
+            sc.pythonExec, sc.master, pyspark.__file__, spark.version, pyspark.__version__,
+        )
+        return
+    sc.environment["EMR_DATASOURCES_PYTHON"] = sys.executable
+    sc.pythonExec = _LAUNCHER

@@ -25,10 +25,11 @@ of a JVM port:
                spread across shards, shards appearing between batches
                start from 0 (LoghubSource.scala:130-161 new-shard path).
 
-Read path yields ``pyarrow.RecordBatch`` (Arrow transfer, no per-row
-Python boxing); at scale each partition maps to one parquet row-group
-span / one shard slice, so parallelism follows the data layout exactly
-like the reference's split planners.
+The ``emrkv`` read path yields ``pyarrow.RecordBatch`` (Arrow
+transfer, no per-row Python boxing); ``emrlog`` parses JSON lines and
+yields one tuple per row. At scale each partition maps to one parquet
+row-group span / one shard slice, so parallelism follows the data
+layout exactly like the reference's split planners.
 """
 
 from __future__ import annotations

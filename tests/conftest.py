@@ -71,10 +71,11 @@ def oracle():
 #   default oracle-parity file already value-checks one by one).
 # - SLOW_TESTS: individual >=5 s tests inside otherwise-fast files.
 #
-# The worker daemon (daemon.py) cut ~300 ms from every Python task, so
-# the emrlog rate-limit and restart tests, the no-Python-worker plan pin
-# and the materialize-once pin are back in the default gate (1-10 s
-# each; gate 13:21 at local[4]).
+# Python tasks no longer re-read zip archives on every task (no zip
+# stays on the workers' path; see launcher.sh), so the emrlog
+# rate-limit and restart tests, the no-Python-worker plan pin and the
+# materialize-once pin are back in the default gate (1-10 s each; gate
+# 13:21 at local[4]).
 
 SLOW_FILES = {
     "test_null_robustness.py",       # 141 cases, ~3-28 s each tail

@@ -12,6 +12,7 @@ asserts row-for-row equality against the raw window forms
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Window
@@ -77,3 +78,9 @@ def test_bucketed_rank_matches_raw_window(spark, rows, width, asc, k, use_parts)
         want.select("part", "v", "id", "rn", "n_part", "tile"),
         "id",
     )
+
+
+def test_bucketed_rank_rejects_nondeterministic_bucket(spark):
+    df = spark.range(20).withColumnRenamed("id", "v")
+    with pytest.raises(ValueError, match="nondeterministic"):
+        bucketed_rank(df, bucket=F.floor(F.rand() * 4), order=[F.col("v")])
