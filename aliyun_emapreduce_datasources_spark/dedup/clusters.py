@@ -344,15 +344,10 @@ def minhash_cluster_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     property vs the exact high-Jaccard clusters stays pinned by
     `dedup_minhash_cluster_containment_check` and tests/test_dedup.py.
     """
-    from aliyun_emapreduce_datasources_spark.dedup.minhash import (
-        CATALOG_HASH,
-        minhash_dedup_pairs,
-    )
+    from aliyun_emapreduce_datasources_spark.dedup.minhash import minhash_dedup_pairs
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    pairs = minhash_dedup_pairs(
-        spark, sf_dir, threshold=0.5, hash_name=CATALOG_HASH
-    ).select("doc_a", "doc_b")
+    pairs = minhash_dedup_pairs(spark, sf_dir, threshold=0.5).select("doc_a", "doc_b")
     # consume_edges: see dedup_cluster_resolve — the MinHash pipeline's
     # checkpointed pair table dies as soon as the closure has it
     labels = connected_components(docs, pairs, consume_edges=True)

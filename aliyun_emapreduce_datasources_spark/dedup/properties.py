@@ -283,28 +283,13 @@ def _simhash_shift_mask(text: str) -> int:
 
     import numpy as np
 
-    from aliyun_emapreduce_datasources_spark.dedup.simhash import CATALOG_HASH
-
     toks = set(text.split(" "))
     if not toks:
         return 0
-    if CATALOG_HASH == "md5":
-        # md5 int = big-endian read of the first 8 digest bytes (the
-        # operator parses hexdigest[:16] instead — same value, other
-        # route)
-        it = (
-            int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big")
-            for s in toks
-        )
-    else:
-        it = (
-            int.from_bytes(
-                hashlib.blake2b(s.encode(), digest_size=8).digest(), "little"
-            )
-            for s in toks
-        )
+    # md5 int = big-endian read of the first 8 digest bytes (the
+    # operator parses hexdigest[:16] instead — same value, other route)
     hs = np.fromiter(
-        it,
+        (int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") for s in toks),
         dtype=np.uint64,
         count=len(toks),
     )

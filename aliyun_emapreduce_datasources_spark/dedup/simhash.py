@@ -4,14 +4,12 @@
 bit position according to its own 64-bit hash; the sign of each bit
 sum is the fingerprint bit. Near-dups = small Hamming distance.
 
-Fingerprinting is per-document map-side work. The portable md5 family
-runs as a pure JVM expression tree (``simhash64_expr`` — round-9
-verdict ask #3: one SQL higher-order aggregate does the 64-bit vote,
-no Python worker); blake2b keeps the Arrow-batched ``mapInPandas``
-pass with the voting vectorized (hash bytes → unpackbits → column
-sums). Either way: no token explode to a shuffle, no 64-column
-relational aggregate — at 100 TB this is the shape that fingerprints
-at scan speed.
+Fingerprinting is per-document map-side work: the portable md5 family
+runs as a pure JVM expression tree (``simhash64`` — round-9 verdict
+ask #3: one SQL higher-order aggregate does the 64-bit vote, no Python
+worker). No token explode to a shuffle, no 64-column relational
+aggregate — at 100 TB this is the shape that fingerprints at scan
+speed.
 
 Candidate generation uses the Manku trick: split the 64-bit print into
 4 × 16-bit blocks; any pair within Hamming distance ≤ 3 must agree on
@@ -23,13 +21,10 @@ both sides of the self-join read it.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from aliyun_emapreduce_datasources_spark.operators.common import ensure_parallelism, t
 
@@ -39,51 +34,33 @@ N_BLOCKS = 4
 BLOCK_BITS = 64 // N_BLOCKS
 MAX_HAMMING = 3
 
-# Hash family for the token votes. "blake2b" is the library default
-# (keyed-hash family, fastest digest in hashlib); "md5" is the
-# ENGINE-PORTABLE choice — DuckDB's md5() reproduces the exact same
-# 64-bit token hashes ('0x' || substr(md5(tok),1,16)), which turns the
-# whole SimHash pipeline into a full value-hash oracle (round-7
-# verdict ask #5, the sketch_cms_topk portable-md5 precedent). The
-# catalog entry pins md5 so the driver can hash-check it; swap back to
-# blake2b (or xxhash64 in expression form) when orace-portability
-# doesn't matter.
+# The one hash family for the token votes: md5 is ENGINE-PORTABLE —
+# DuckDB's md5() reproduces the exact same 64-bit token hashes
+# ('0x' || substr(md5(tok),1,16)), which turns the whole SimHash
+# pipeline into a full value-hash oracle (round-7 verdict ask #5, the
+# sketch_cms_topk portable-md5 precedent).
 CATALOG_HASH = "md5"
 
-FP_SCHEMA = T.StructType(
-    [T.StructField("doc_id", T.LongType()), T.StructField("simhash", T.LongType())]
-)
+
+def _token_hashes(toks) -> np.ndarray:
+    """64-bit signed hash per token: the integer named by the first
+    16 hex chars of the md5 digest (big-endian, exactly what DuckDB's
+    ('0x' || substr(md5(tok), 1, 16)) casts to), reinterpreted as
+    int64."""
+    return np.fromiter(
+        (int(hashlib.md5(s.encode()).hexdigest()[:16], 16) for s in toks),
+        dtype=np.uint64,
+        count=len(toks),
+    ).view(np.int64)
 
 
-def _token_hashes(toks, hash_name: str) -> np.ndarray:
-    """64-bit signed hash per token. md5: the integer named by the
-    first 16 hex chars of the digest (big-endian, exactly what
-    DuckDB's ('0x' || substr(md5(tok), 1, 16)) casts to), reinterpreted
-    as int64."""
-    if hash_name == "blake2b":
-        return np.fromiter(
-            (
-                np.frombuffer(hashlib.blake2b(s.encode(), digest_size=8).digest(), dtype=np.int64)[0]
-                for s in toks
-            ),
-            dtype=np.int64,
-            count=len(toks),
-        )
-    if hash_name == "md5":
-        return np.fromiter(
-            (int(hashlib.md5(s.encode()).hexdigest()[:16], 16) for s in toks),
-            dtype=np.uint64,
-            count=len(toks),
-        ).view(np.int64)
-    raise ValueError(f"simhash: unknown hash family {hash_name!r}")
-
-
-def _fingerprint(text: str, hash_name: str = "blake2b") -> int:
-    """64-bit SimHash of a document's distinct whitespace tokens."""
+def _fingerprint(text: str) -> int:
+    """64-bit SimHash of a document's distinct whitespace tokens —
+    the plain-Python reference ``simhash64`` is tested against."""
     toks = set(text.split(" "))
     if not toks:
         return 0
-    hs = _token_hashes(toks, hash_name)
+    hs = _token_hashes(toks)
     # bit i of each hash, little-endian layout → column i
     bits = np.unpackbits(hs.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
     votes = bits.sum(axis=0, dtype=np.int64) * 2 - len(toks)
@@ -91,13 +68,13 @@ def _fingerprint(text: str, hash_name: str = "blake2b") -> int:
     return int(np.packbits(fp_bits, bitorder="little").view(np.int64)[0])
 
 
-def simhash64_expr(
+def simhash64(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """(doc_id, simhash) as a pure JVM expression tree — md5 family
-    only. Identical semantics to ``_fingerprint(..., "md5")``: hash
+    """(doc_id, simhash long) per document as a pure JVM expression
+    tree, one map-side pass. Identical semantics to ``_fingerprint``: hash
     each DISTINCT whitespace token (signed md5-64), majority-vote per
     bit (strict: bit set iff 2*ones > n), pack little-endian into a
     signed 64-bit fingerprint.
@@ -133,32 +110,6 @@ def simhash64_expr(
         .withColumn("n", F.size("toks"))
         .select("doc_id", fp.alias("simhash"))
     )
-
-
-def simhash64(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_name: str = "blake2b",
-) -> DataFrame:
-    """(doc_id, simhash long) per document, one map-side pass. The md5
-    family routes to the JVM expression tree (no Python worker);
-    blake2b keeps the Arrow-batched map pass."""
-    if hash_name == "md5":
-        return simhash64_expr(docs, id_col, text_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "simhash": pdf[text_col]
-                    .map(lambda s: _fingerprint(s, hash_name))
-                    .astype("int64"),
-                }
-            )
-
-    return ensure_parallelism(docs.select(id_col, text_col)).mapInPandas(run, FP_SCHEMA)
 
 
 def _hamming(a: F.Column, b: F.Column) -> F.Column:
@@ -198,12 +149,12 @@ def simhash_candidates(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def QUERY(spark: SparkSession, sf_dir: str, materialize: bool = True) -> DataFrame:
-    # NULL-text docs carry no shingles/fingerprint — the pandas UDFs
-    # would crash on None; skip them like every per-text operator.
-    # materialize=False: fully lazy plan for plan inspection only
-    # (tests/test_minhash_expr.py's no-Python-worker pin).
+    # NULL-text docs carry no fingerprint; skip them like every
+    # per-text operator. materialize=False: fully lazy plan for plan
+    # inspection only (tests/test_minhash_expr.py's no-Python-worker
+    # pin).
     docs = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    fps = simhash64(docs, hash_name=CATALOG_HASH)
+    fps = simhash64(docs)
     if not materialize:
         return simhash_candidates(fps)
     fps = fps.persist()

@@ -3,10 +3,11 @@ pipelines.
 
 Design: media travels as opaque ``binary`` columns next to a typed
 metadata struct (modality, format, width/height/duration, byte size,
-content digest). All Spark-side plumbing — schema, partition sizing,
-Arrow batch shape, mapInPandas signatures — is real and tested; only
-the codec call itself is stubbed (this container ships no image/audio
-libraries), clearly marked and swappable for PIL/ffmpeg decoders.
+content digest). Every codec is a real pure-numpy parser of genuine
+container bytes — BMP, PNG (DEFLATE), baseline JPEG (Huffman + IDCT),
+WAV and uncompressed AVI — so the oracles check real decodes, not
+stubs. Compressed formats that would need external libraries (mp3,
+h264) are refused loudly, never faked.
 
 Scale notes: batches are bounded by bytes not rows
 (``maxRecordsPerBatch`` alone is wrong for 10 MB blobs); decode

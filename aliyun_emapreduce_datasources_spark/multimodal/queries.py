@@ -41,10 +41,11 @@ from aliyun_emapreduce_datasources_spark.multimodal.media import (
     png_image_metrics,
     video_frame_metrics,
 )
-from aliyun_emapreduce_datasources_spark.multimodal import audiohash as _audiohash
-from aliyun_emapreduce_datasources_spark.multimodal import imagehash as _imagehash
-from aliyun_emapreduce_datasources_spark.multimodal import mixed as _mixed
-from aliyun_emapreduce_datasources_spark.multimodal import videohash as _videohash
+from aliyun_emapreduce_datasources_spark.multimodal.neardup import (
+    CODECS,
+    neardup_pairs,
+    oracle,
+)
 from aliyun_emapreduce_datasources_spark.operators.common import ensure_parallelism, t
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -251,7 +252,7 @@ def media_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     restart handling bug, or IDCT normalization error hash-mismatches."""
     # synth needs only ids; project before the partition spread so the
     # single-file local fixture fans the per-row codec work across
-    # cores without shuffling document text (imagehash's move)
+    # cores without shuffling document text (neardup_pairs' move)
     docs = ensure_parallelism(
         t(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
@@ -300,7 +301,7 @@ def media_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     image-near-dup entry tying the multimodal codecs to the dedup
     machinery; the oracle re-derives every hash from the law, so the
     container decode is the thing under test."""
-    return _imagehash.QUERY(spark, sf_dir)
+    return neardup_pairs(spark, sf_dir, CODECS["image"])
 
 
 def media_mixed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,7 +311,7 @@ def media_mixed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Manku block join at hamming <= 3. Round 11: cross-container
     near-dup — the oracle is format-blind, so any format-dependent
     decode defect breaks the one invariant it pins."""
-    return _mixed.QUERY(spark, sf_dir)
+    return neardup_pairs(spark, sf_dir, CODECS["mixed"])
 
 
 def media_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,7 +322,7 @@ def media_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans BOTH shipped modalities — the audio twin of
     media_image_neardup, with per-id window lengths exercising the
     duration-invariance leg."""
-    return _audiohash.QUERY(spark, sf_dir)
+    return neardup_pairs(spark, sf_dir, CODECS["audio"])
 
 
 def media_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -332,7 +333,7 @@ def media_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 11: with image, mixed-container, audio, and now video,
     every modality the repo decodes feeds the same near-dup
     machinery."""
-    return _videohash.QUERY(spark, sf_dir)
+    return neardup_pairs(spark, sf_dir, CODECS["video"])
 
 
 QUERIES = {
@@ -352,8 +353,5 @@ ORACLES = {
     "media_video_frames": ORACLE_VIDEO,
     "media_png_features": ORACLE_PNG,
     "media_jpeg_features": ORACLE_JPEG,
-    "media_image_neardup": _imagehash.ORACLE,
-    "media_mixed_neardup": _mixed.ORACLE,
-    "media_audio_neardup": _audiohash.ORACLE,
-    "media_video_neardup": _videohash.ORACLE,
+    **{f"media_{name}_neardup": oracle(c) for name, c in CODECS.items()},
 }

@@ -198,7 +198,7 @@ class NearDupIngest:
     micro-batch of (doc_id, text):
 
     1. builds OPH signatures with the SAME JVM expression tree the
-       batch operator uses (dedup/minhash._with_signatures_expr — no
+       batch operator uses (dedup/minhash._with_signatures — no
        Python worker),
     2. resolves IN-BATCH near-dups exactly like the batch pipeline:
        banded candidates → exact-Jaccard verify at ``tau`` →
@@ -265,13 +265,13 @@ class NearDupIngest:
             connected_components,
         )
         from aliyun_emapreduce_datasources_spark.dedup.minhash import (
-            _with_signatures_expr,
+            _with_signatures,
             lsh_candidate_pairs,
         )
         from aliyun_emapreduce_datasources_spark.functions.inthash import h64_md5
 
         spark = batch_df.sparkSession
-        with_sig = _with_signatures_expr(
+        with_sig = _with_signatures(
             batch_df.where(F.col("text").isNotNull())
         ).persist()  # lsh_candidate_pairs' caller contract
         if with_sig.count() == 0:

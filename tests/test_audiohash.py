@@ -1,5 +1,5 @@
-"""media_audio_neardup (multimodal/audiohash.py) — the WAV twin of the
-image dHash entry: perceptual near-dup over the decoded time envelope.
+"""media_audio_neardup (the audio codec of multimodal/neardup.py) —
+perceptual near-dup over the decoded WAV time envelope.
 
 Value parity vs the DuckDB law oracle runs in test_oracle_parity.py
 like every catalog entry; this file pins what parity can't see:
@@ -16,49 +16,39 @@ like every catalog entry; this file pins what parity can't see:
 
 from __future__ import annotations
 
-import contextlib
-import io
-
-import numpy as np
 import pytest
+from neardup_helpers import assert_banded_plan, banded_pairs, sample_fps
 from pyspark.sql import functions as F
 
-from aliyun_emapreduce_datasources_spark.multimodal import audiohash
+from aliyun_emapreduce_datasources_spark.multimodal import neardup
 from aliyun_emapreduce_datasources_spark.multimodal.wav import decode_wav
 
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    return buf.getvalue()
+AUDIO = neardup.CODECS["audio"]
 
 
 def test_banded_plan_never_all_pairs(spark, sf_dir):
-    plan = _plan(audiohash.audio_neardup_pairs(spark, sf_dir, materialize=False))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert_banded_plan(spark, sf_dir, "audio")
 
 
 def test_law_cells_survive_container_roundtrip(spark):
     """Attach → REAL decode → pool recovers the amplitude law exactly
     for every window-length class (40/60/80 samples)."""
     df = spark.range(12).select(F.col("id").alias("doc_id"))
-    media = audiohash.attach_wav_group_audio(df, "doc_id")
+    media = neardup.attach(df, "doc_id", AUDIO)
     rows = media.select("media_id", "payload", "meta").collect()
     for r in rows:
         pcm, sr = decode_wav(bytes(r["payload"]))
-        assert sr == audiohash.SR
-        win = audiohash._WIN_CHOICES[r["media_id"] % 3]
+        assert sr == neardup.SR
+        win = neardup._WIN_CHOICES[r["media_id"] % 3]
         assert pcm.shape == (72 * win, 1)
-        assert r["meta"]["duration_ms"] == 72 * win * 1000 // audiohash.SR
+        assert r["meta"]["duration_ms"] == 72 * win * 1000 // neardup.SR
     out = {
         r["media_id"]: r["cells"]
-        for r in audiohash.audio_dhash_cells(media).collect()
+        for r in neardup.dhash_cells(media, AUDIO).collect()
     }
     assert len(out) == 12
     for mid, cells in out.items():
-        assert cells == audiohash._law_cells(mid).tolist(), mid
+        assert cells == neardup.law_cells(AUDIO, mid).tolist(), mid
 
 
 def test_hash_comes_from_decoded_bytes(spark):
@@ -66,7 +56,7 @@ def test_hash_comes_from_decoded_bytes(spark):
     proof the pipeline reads the BYTES, not the law; truncation
     refuses loudly."""
     df = spark.range(1).select(F.col("id").alias("doc_id"))
-    row = audiohash.attach_wav_group_audio(df, "doc_id").collect()[0]
+    row = neardup.attach(df, "doc_id", AUDIO).collect()[0]
     payload = bytearray(row["payload"])
     base, _ = decode_wav(bytes(payload))
     # byte 45 is the high byte of sample 0 (44-byte canonical header)
@@ -84,7 +74,7 @@ def test_bit_layout_matches_oracle_arithmetic(spark):
         cells = [0] * 72
         cells[k + 1] = 1  # single rising gradient at position k
         df = spark.createDataFrame([(1, cells)], "media_id long, cells array<int>")
-        h = df.select(audiohash.dhash64(F.col("cells")).alias("h")).collect()[0]["h"]
+        h = df.select(neardup.dhash64(F.col("cells")).alias("h")).collect()[0]["h"]
         expect_bits = {(k // 9) * 8 + (k % 9)}
         # the crafted array also sets the falling edge back to 0 at
         # k+1 -> k+2 only if k+2 exists in the same row — a falling
@@ -97,26 +87,9 @@ def test_bit_layout_matches_oracle_arithmetic(spark):
 
 
 def test_neardup_pairs_exist_and_respect_cut(spark, sf_dir):
-    docs = (
-        audiohash.t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select("doc_id")
-        .limit(120)
-    )
-    media = audiohash.attach_wav_group_audio(docs, "doc_id")
-    fps = audiohash.audio_dhash_cells(media).select(
-        "media_id", audiohash.dhash64(F.col("cells")).alias("simhash")
-    )
-    from aliyun_emapreduce_datasources_spark.dedup.simhash import (
-        simhash_candidates,
-    )
-
-    pairs = [
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_candidates(fps, id_col="media_id").collect()
-    ]
+    pairs = banded_pairs(sample_fps(spark, sf_dir, "audio"))
     assert pairs, "fixture produced no near-dup pairs — vacuous test"
-    assert all(h <= audiohash.MAX_HAMMING for _, _, h in pairs)
+    assert all(h <= neardup.MAX_HAMMING for _, _, h in pairs)
     # different window-length classes must still match (duration
     # invariance): some pair crosses id%3 classes
     assert any(a % 3 != b % 3 for a, b, _ in pairs)

@@ -1,6 +1,5 @@
-"""media_image_neardup (multimodal/imagehash.py) — the dHash entry
-tying the real BMP codec to the dedup block-join machinery (r10
-verdict ask #3).
+"""media_image_neardup (the image codec of multimodal/neardup.py) — the
+dHash entry tying the real BMP codec to the dedup block-join machinery.
 
 Value parity vs the DuckDB law oracle runs in test_oracle_parity.py
 like every catalog entry; this file pins what parity can't see:
@@ -18,30 +17,19 @@ like every catalog entry; this file pins what parity can't see:
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import numpy as np
 import pytest
+from neardup_helpers import assert_banded_plan, banded_pairs, sample_fps
 from pyspark.sql import functions as F
 
-from aliyun_emapreduce_datasources_spark.multimodal import imagehash
+from aliyun_emapreduce_datasources_spark.multimodal import neardup
 from aliyun_emapreduce_datasources_spark.multimodal.bmp import decode_bmp
 
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    return buf.getvalue()
+IMAGE = neardup.CODECS["image"]
 
 
 def test_banded_plan_never_all_pairs(spark, sf_dir):
-    # materialize=False: the catalog path eagerly checkpoints (cache
-    # release), which would reduce the inspected plan to an RDD scan
-    plan = _plan(imagehash.image_neardup_pairs(spark, sf_dir, materialize=False))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert_banded_plan(spark, sf_dir, "image")
 
 
 def test_law_cells_survive_container_roundtrip(spark):
@@ -49,15 +37,14 @@ def test_law_cells_survive_container_roundtrip(spark):
     every (sx, sy) scale class — the resize leg of a real dHash is
     exercised even though the oracle never models it."""
     df = spark.range(12).select(F.col("id").alias("doc_id"))
-    media = imagehash.attach_dhash_group_images(df, "doc_id")
+    media = neardup.attach(df, "doc_id", IMAGE)
     out = {
         r["media_id"]: r["cells"]
-        for r in imagehash.image_dhash_cells(media).collect()
+        for r in neardup.dhash_cells(media, IMAGE).collect()
     }
     assert len(out) == 12
     for mid, cells in out.items():
-        expect = imagehash._law_cells(mid).ravel().tolist()
-        assert cells == expect, mid
+        assert cells == neardup.law_cells(IMAGE, mid).tolist(), mid
 
 
 def test_hash_comes_from_decoded_bytes(spark):
@@ -65,7 +52,7 @@ def test_hash_comes_from_decoded_bytes(spark):
     cells (and with them the hash) — proof the pipeline reads the
     BYTES, not the law."""
     df = spark.range(1).select(F.col("id").alias("doc_id"))
-    row = imagehash.attach_dhash_group_images(df, "doc_id").collect()[0]
+    row = neardup.attach(df, "doc_id", IMAGE).collect()[0]
     payload = bytearray(row["payload"])
     base = decode_bmp(bytes(payload))
     # flip the R channel of the top-left decoded pixel: BMP rows are
@@ -88,31 +75,14 @@ def test_pigeonhole_banded_equals_bruteforce(spark, sf_dir):
     EXACT: compare against brute-force all-pairs hamming over the same
     fingerprints (test-only collect — the entry itself never does
     this)."""
-    docs = (
-        imagehash.t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select("doc_id")
-        .limit(120)
-    )
-    media = imagehash.attach_dhash_group_images(docs, "doc_id")
-    fps = imagehash.image_dhash_cells(media).select(
-        "media_id", imagehash.dhash64(F.col("cells")).alias("simhash")
-    )
+    fps = sample_fps(spark, sf_dir, "image")
     rows = {r["media_id"]: r["simhash"] for r in fps.collect()}
     brute = set()
     ids = sorted(rows)
     for i, a in enumerate(ids):
         for b in ids[i + 1 :]:
             d = bin((rows[a] ^ rows[b]) & ((1 << 64) - 1)).count("1")
-            if d <= imagehash.MAX_HAMMING:
+            if d <= neardup.MAX_HAMMING:
                 brute.add((a, b, d))
-    from aliyun_emapreduce_datasources_spark.dedup.simhash import (
-        simhash_candidates,
-    )
-
-    banded = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_candidates(fps, id_col="media_id").collect()
-    }
-    assert banded == brute
+    assert banded_pairs(fps) == brute
     assert brute, "fixture produced no near-dup pairs — vacuous test"

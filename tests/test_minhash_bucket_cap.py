@@ -29,7 +29,7 @@ def boiler_sig(spark):
     docs = spark.createDataFrame(
         [(i, BOILERPLATE) for i in range(N_DOCS)], "doc_id long, text string"
     )
-    sig = minhash._with_signatures(docs, hash_name="md5").persist()
+    sig = minhash._with_signatures(docs).persist()
     sig.count()
     yield sig
     sig.unpersist()
@@ -67,7 +67,7 @@ def test_at_cap_bucket_keeps_exact_all_pairs(spark):
         [(i, BOILERPLATE) for i in range(minhash.BUCKET_CAP)],
         "doc_id long, text string",
     )
-    sig = minhash._with_signatures(docs, hash_name="md5").persist()
+    sig = minhash._with_signatures(docs).persist()
     try:
         n = minhash.lsh_candidate_pairs(sig).count()
     finally:
@@ -85,7 +85,7 @@ def test_catalog_fixtures_stay_under_cap(spark, sf_dir):
     # through the LAZY expr tree lets the optimizer inline the whole
     # signature fold into the downstream Generate (sig referenced 128x
     # by the band probes) — a ~100x per-row evaluation blowup
-    sig = minhash._with_signatures(docs, hash_name="md5").persist()
+    sig = minhash._with_signatures(docs).persist()
     try:
         sig.count()
         max_bucket = (

@@ -1,13 +1,13 @@
-"""JVM expression signature legs vs their mapInPandas definitions.
+"""JVM expression signature legs vs their plain-Python md5 references.
 
 Round-9 verdict ask #3: the MinHash OPH and SimHash signature stages
 moved from mapInPandas to whole-stage-codegen expression trees. The
 oracle rows already pin end-to-end values; these tests pin the two
 things the oracle can't see:
 
-1. SIGNATURE-LEVEL parity — the expression tree reproduces the pandas
-   leg's (sh, bands) / simhash values exactly, doc by doc (not just
-   the post-join survivors).
+1. SIGNATURE-LEVEL parity — the expression tree reproduces the
+   plain-Python (sh, bands) / simhash values exactly, doc by doc (not
+   just the post-join survivors).
 2. NO PYTHON WORKER — the physical plan of the catalog entries has no
    Arrow/Python eval node; a regression that silently reroutes
    through Python shows up here, not as a wall-clock mystery two
@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from aliyun_emapreduce_datasources_spark.dedup import minhash, simhash
 from aliyun_emapreduce_datasources_spark.operators.common import t
@@ -35,11 +36,19 @@ def _docs(spark):
     )
 
 
+SIG_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("sh", T.ArrayType(T.StringType())),
+        T.StructField("bands", T.ArrayType(T.LongType())),
+    ]
+)
+
+
 def _pandas_signatures(docs):
-    """The original Arrow-batched md5 leg, bypassing the md5->expr
-    routing in _with_signatures: the parity baseline."""
+    """The plain-Python md5 ``_signature`` run as an Arrow-batched map
+    pass: the parity baseline."""
     from aliyun_emapreduce_datasources_spark.dedup.minhash import (
-        SIG_SCHEMA,
         _signature,
         N_PERM,
         N_BANDS,
@@ -51,9 +60,7 @@ def _pandas_signatures(docs):
         for pdf in batches:
             out = {"doc_id": [], "sh": [], "bands": []}
             for _, row in pdf.iterrows():
-                sh, bands = _signature(
-                    row["text"], N_PERM, N_BANDS, ROWS_PER_BAND, "md5"
-                )
+                sh, bands = _signature(row["text"], N_PERM, N_BANDS, ROWS_PER_BAND)
                 if not sh:
                     continue
                 out["doc_id"].append(int(row["doc_id"]))
@@ -66,7 +73,7 @@ def _pandas_signatures(docs):
 
 def test_minhash_expr_signatures_match_pandas_leg(spark):
     expr = (
-        minhash._with_signatures_expr(_docs(spark))
+        minhash._with_signatures(_docs(spark))
         .select("doc_id", F.sort_array("sh").alias("sh"), "bands")
         .orderBy("doc_id")
         .collect()
@@ -107,7 +114,7 @@ def test_minhash_fill_base_is_not_inlined_into_lambdas(spark):
     interpreted — the optimizer must keep the lambdas reading the
     column."""
     plan = (
-        minhash._with_signatures_expr(_docs(spark))
+        minhash._with_signatures(_docs(spark))
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -124,11 +131,9 @@ def test_simhash_expr_matches_pandas_leg(spark):
 
     got = {
         r.doc_id: r.simhash
-        for r in simhash.simhash64_expr(_docs(spark)).collect()
+        for r in simhash.simhash64(_docs(spark)).collect()
     }
-    ref = {
-        r.doc_id: _fingerprint(r.text, "md5") for r in _docs(spark).collect()
-    }
+    ref = {r.doc_id: _fingerprint(r.text) for r in _docs(spark).collect()}
     assert got == ref and len(got) > 0
 
 
@@ -152,13 +157,8 @@ def test_catalog_plans_have_no_python_worker(spark, entry):
         assert node not in plan, (entry, node)
 
 
-def test_blake2b_leg_still_routes_through_pandas(spark):
-    """The non-portable family has no JVM twin — it must keep the
-    Arrow leg (guards against the routing accidentally dropping it)."""
-    plan = (
-        minhash._with_signatures(_docs(spark), hash_name="blake2b")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInPandas" in plan
+def test_minhash_rejects_other_hash_families(spark):
+    """md5 is the only signature hash family: any other name fails
+    loudly before a plan is built."""
+    with pytest.raises(ValueError, match="md5"):
+        minhash.minhash_dedup_pairs(spark, SF_DIR, hash_name="blake2b")

@@ -1,5 +1,6 @@
-"""media_mixed_neardup (multimodal/mixed.py) — cross-container dHash
-near-dup over magic-byte decode dispatch (BMP / PNG / JPEG).
+"""media_mixed_neardup (the mixed codec of multimodal/neardup.py) —
+cross-container dHash near-dup over magic-byte decode dispatch
+(BMP / PNG / JPEG).
 
 Value parity vs the format-blind DuckDB law oracle runs in
 test_oracle_parity.py like every catalog entry; this file pins what
@@ -19,28 +20,19 @@ parity can't see:
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import numpy as np
 import pytest
+from neardup_helpers import assert_banded_plan, banded_pairs, sample_fps
 from pyspark.sql import functions as F
 
-from aliyun_emapreduce_datasources_spark.multimodal import mixed
+from aliyun_emapreduce_datasources_spark.multimodal import neardup
 from aliyun_emapreduce_datasources_spark.multimodal.jpeg import decode_jpeg
 
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    return buf.getvalue()
+MIXED = neardup.CODECS["mixed"]
 
 
 def test_banded_plan_never_all_pairs(spark, sf_dir):
-    plan = _plan(mixed.mixed_neardup_pairs(spark, sf_dir, materialize=False))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert_banded_plan(spark, sf_dir, "mixed")
 
 
 def test_all_three_formats_decode_to_the_same_law(spark):
@@ -48,22 +40,23 @@ def test_all_three_formats_decode_to_the_same_law(spark):
     an id landed in, the dispatch + pool recovers the law cells
     exactly — including the lossy-JPEG leg."""
     df = spark.range(12).select(F.col("id").alias("doc_id"))
-    media = mixed.attach_mixed_group_images(df, "doc_id")
+    media = neardup.attach(df, "doc_id", MIXED)
     rows = media.select("media_id", "payload", "meta").collect()
     fmts = {r["meta"]["format"] for r in rows}
     assert fmts == {"bmp", "png", "jpeg"}
     for r in rows:
         blob = bytes(r["payload"])
-        expect_fmt = mixed._FORMATS[r["media_id"] % 3]
+        expect_fmt = neardup._FORMATS[r["media_id"] % 3]
         assert r["meta"]["format"] == expect_fmt
         magic = {"bmp": b"BM", "png": b"\x89PNG", "jpeg": b"\xff\xd8"}[expect_fmt]
         assert blob[: len(magic)] == magic
     out = {
-        r["media_id"]: r["cells"] for r in mixed.mixed_dhash_cells(media).collect()
+        r["media_id"]: r["cells"]
+        for r in neardup.dhash_cells(media, MIXED).collect()
     }
     assert len(out) == 12
     for mid, cells in out.items():
-        assert cells == mixed._law_cells(mid).ravel().tolist(), mid
+        assert cells == neardup.law_cells(MIXED, mid).tolist(), mid
 
 
 def test_jpeg_leg_is_real_huffman_machinery():
@@ -71,15 +64,15 @@ def test_jpeg_leg_is_real_huffman_machinery():
     runs DC prediction over 72 MCUs, and perturbing one scan byte
     either changes pixels or refuses — it is not a disguised raw
     dump. (id 2 is the first JPEG id.)"""
-    cells = mixed._law_cells(2)
+    cells = neardup.law_cells(MIXED, 2).reshape(neardup.CH, neardup.CW)
     px = (
-        cells.repeat(mixed._JPEG_SCALE, axis=0)
-        .repeat(mixed._JPEG_SCALE, axis=1)
+        cells.repeat(neardup._JPEG_SCALE, axis=0)
+        .repeat(neardup._JPEG_SCALE, axis=1)
         .astype(np.uint8)
     )
     from aliyun_emapreduce_datasources_spark.multimodal.jpeg import encode_jpeg
 
-    blob = encode_jpeg(px, quant_luma=mixed._JPEG_Q16)
+    blob = encode_jpeg(px, quant_luma=neardup._JPEG_Q16)
     np.testing.assert_array_equal(decode_jpeg(blob), px)
     # the compressed scan is far smaller than the raw plane — real
     # entropy coding, and nowhere near a stored-pixel container
@@ -95,34 +88,17 @@ def test_jpeg_leg_is_real_huffman_machinery():
 
 def test_dispatch_refuses_unknown_magic():
     with pytest.raises(ValueError, match="unknown container magic"):
-        mixed._decode_any(b"GIF89a" + b"\x00" * 64)
+        neardup._decode_any(b"GIF89a" + b"\x00" * 64)
     with pytest.raises(ValueError, match="unknown container magic"):
-        mixed._decode_any(b"\x00")
+        neardup._decode_any(b"\x00")
 
 
 def test_neardup_pairs_cross_the_container_boundary(spark, sf_dir):
     """The point of the entry: a pair whose members live in DIFFERENT
     container formats. Groups of 5 consecutive ids span formats
     (id % 3 cycles), so low-variant near-dups must cross."""
-    docs = (
-        mixed.t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select("doc_id")
-        .limit(120)
-    )
-    media = mixed.attach_mixed_group_images(docs, "doc_id")
-    fps = mixed.mixed_dhash_cells(media).select(
-        "media_id", mixed.dhash64(F.col("cells")).alias("simhash")
-    )
-    from aliyun_emapreduce_datasources_spark.dedup.simhash import (
-        simhash_candidates,
-    )
-
-    pairs = [
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_candidates(fps, id_col="media_id").collect()
-    ]
+    pairs = banded_pairs(sample_fps(spark, sf_dir, "mixed"))
     assert pairs, "fixture produced no near-dup pairs — vacuous test"
     cross = [(a, b) for a, b, _ in pairs if a % 3 != b % 3]
     assert cross, "no pair crossed the container boundary"
-    assert all(h <= mixed.MAX_HAMMING for _, _, h in pairs)
+    assert all(h <= neardup.MAX_HAMMING for _, _, h in pairs)

@@ -102,7 +102,7 @@ def test_accepted_store_is_self_clean_under_banding_recall(spark, tmp_path):
     corpus with many near-dup groups arriving interleaved across
     batches."""
     from aliyun_emapreduce_datasources_spark.dedup.minhash import (
-        _with_signatures_expr,
+        _with_signatures,
         lsh_candidate_pairs,
     )
 
@@ -125,7 +125,7 @@ def test_accepted_store_is_self_clean_under_banding_recall(spark, tmp_path):
     accepted_ids = sink.accepted(spark).select("doc_id")
     full = spark.createDataFrame(docs, DOCS_SCHEMA)
     acc_docs = full.join(accepted_ids, "doc_id")
-    with_sig = _with_signatures_expr(acc_docs).persist()
+    with_sig = _with_signatures(acc_docs).persist()
     with_sig.count()
     sh_only = with_sig.select("doc_id", "sh")
     jac = F.size(F.array_intersect("a_sh", "b_sh")).cast("double") / F.size(

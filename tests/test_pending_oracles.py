@@ -59,7 +59,7 @@ def test_minhash_oracle_rejects_dropped_pair(spark, oracle, sf_dir):
 
 def test_md5_variant_requires_power_of_two_perms():
     with pytest.raises(ValueError, match="power-of-two"):
-        minhash._signature("a b c d e f", 100, 25, 4, "md5")
+        minhash._signature("a b c d e f", 100, 25, 4)
 
 
 def test_bloom_catalog_hash_is_portable():

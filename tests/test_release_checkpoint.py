@@ -1,6 +1,7 @@
 """``release_checkpoint``: counted releases, a failure that is counted
-and logged once instead of swallowed, and the release order of
-connected components' consumed edges."""
+and logged once instead of swallowed, the release order of connected
+components' consumed edges, and the releases of the scrub fixpoint and
+BPE merge loops."""
 
 from __future__ import annotations
 
@@ -68,3 +69,61 @@ def test_consumed_edges_released_once_after_propagation(spark, monkeypatch):
     assert [c for c in calls if c[0]] == [(True, 1)]  # once, one checkpoint
     assert calls[-1][0] and len(calls) > 1  # after every round's release
     assert release_counts() == {"released": len(calls), "failed": 0}
+
+
+def _count_checkpoints(spark, monkeypatch) -> list:
+    """Record every ``localCheckpoint`` call made from now on."""
+    made = []
+    cls = type(spark.range(1))  # the concrete (classic) DataFrame class
+    real = cls.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        made.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counting)
+    return made
+
+
+def test_scrub_fixpoint_releases_every_pass_but_the_last(spark, monkeypatch, tmp_path):
+    """Each scrub pass checkpoints its output and releases the previous
+    pass's checkpoint, so a loop of N passes releases N-1; the last one
+    backs the result, which stays readable."""
+    from aliyun_emapreduce_datasources_spark.dedup.spans import scrub_spans_fixpoint
+
+    rows = [  # pass 2 catches the bridge pass 1 creates; pass 3 confirms
+        (0, "a b c d", "en", "s0", 7),
+        (1, "r1 r2 r3", "en", "s0", 8),
+        (2, "a b r1 r2 r3 c d", "en", "s1", 16),
+    ]
+    spark.createDataFrame(rows, ["doc_id", "text", "lang", "source", "n_chars"]).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    monkeypatch.setattr(common, "_release_counts", {"released": 0, "failed": 0})
+    passes = _count_checkpoints(spark, monkeypatch)
+    out = scrub_spans_fixpoint(spark, str(tmp_path))
+
+    assert len(passes) == 3
+    assert release_counts() == {"released": len(passes) - 1, "failed": 0}
+    want = {0: ("a b c d", 0), 1: ("r1 r2 r3", 0), 2: ("", 7)}
+    for _ in range(2):  # twice: the result's checkpoint was not released
+        assert {r.doc_id: (r.clean_text, r.n_removed) for r in out.collect()} == want
+
+
+def test_bpe_train_releases_every_materialized_checkpoint(spark, monkeypatch):
+    """Every checkpoint the merge loop materializes is released exactly
+    once by the time ``train_merges`` returns, and the merges match a
+    plain-Python ``merge_word`` replay."""
+    from test_bpe_train import py_bpe
+
+    from aliyun_emapreduce_datasources_spark.functions.bpe_train import train_merges
+
+    word_counts = {"low": 5, "lower": 2, "newest": 6, "widest": 3}
+    words = spark.createDataFrame(list(word_counts.items()), "w string, cnt long")
+    monkeypatch.setattr(common, "_release_counts", {"released": 0, "failed": 0})
+    made = _count_checkpoints(spark, monkeypatch)
+    merges = train_merges(words, 4)
+
+    assert len(made) == 4  # one per merge step, each materialized by its pair count
+    assert release_counts() == {"released": len(made), "failed": 0}
+    assert merges == py_bpe(word_counts, 4)

@@ -1,6 +1,5 @@
-"""media_video_neardup (multimodal/videohash.py) — the AVI member of
-the near-dup family: perceptual matching over the decoded temporal
-envelope.
+"""media_video_neardup (the video codec of multimodal/neardup.py) —
+perceptual matching over the decoded AVI temporal envelope.
 
 Value parity vs the DuckDB law oracle runs in test_oracle_parity.py;
 this file pins what parity can't see:
@@ -17,54 +16,45 @@ this file pins what parity can't see:
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import numpy as np
 import pytest
+from neardup_helpers import assert_banded_plan, banded_pairs, sample_fps
 from pyspark.sql import functions as F
 
-from aliyun_emapreduce_datasources_spark.multimodal import videohash
+from aliyun_emapreduce_datasources_spark.multimodal import neardup
 from aliyun_emapreduce_datasources_spark.multimodal.avi import decode_avi
 
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    return buf.getvalue()
+VIDEO = neardup.CODECS["video"]
 
 
 def test_banded_plan_never_all_pairs(spark, sf_dir):
-    plan = _plan(videohash.video_neardup_pairs(spark, sf_dir, materialize=False))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert_banded_plan(spark, sf_dir, "video")
 
 
 def test_law_cells_survive_container_roundtrip(spark):
     df = spark.range(12).select(F.col("id").alias("doc_id"))
-    media = videohash.attach_avi_group_videos(df, "doc_id")
+    media = neardup.attach(df, "doc_id", VIDEO)
     rows = media.select("media_id", "payload", "meta").collect()
     for r in rows:
         frames, fps = decode_avi(bytes(r["payload"]))
-        assert fps == videohash.FPS
+        assert fps == neardup.FPS
         fpw = r["media_id"] % 2 + 1
-        assert frames.shape == (72 * fpw, videohash.FRAME_H, videohash.FRAME_W, 3)
+        assert frames.shape == (72 * fpw, neardup.FRAME_H, neardup.FRAME_W, 3)
         # channel offsets present: R != G != B on the decoded frames
         assert frames[0, 0, 0, 1] == (int(frames[0, 0, 0, 0]) + 85) % 256
         assert frames[0, 0, 0, 2] == (int(frames[0, 0, 0, 0]) + 170) % 256
     out = {
         r["media_id"]: r["cells"]
-        for r in videohash.video_dhash_cells(media).collect()
+        for r in neardup.dhash_cells(media, VIDEO).collect()
     }
     assert len(out) == 12
     for mid, cells in out.items():
-        assert cells == videohash._law_cells(mid).tolist(), mid
+        assert cells == neardup.law_cells(VIDEO, mid).tolist(), mid
 
 
 def test_cells_come_from_decoded_bytes(spark):
     df = spark.range(1).select(F.col("id").alias("doc_id"))
-    row = videohash.attach_avi_group_videos(df, "doc_id").collect()[0]
+    row = neardup.attach(df, "doc_id", VIDEO).collect()[0]
     payload = bytearray(row["payload"])
     base, _ = decode_avi(bytes(payload))
     # movi frame data sits near the end; flip a byte inside the last
@@ -77,26 +67,9 @@ def test_cells_come_from_decoded_bytes(spark):
 
 
 def test_neardup_pairs_cross_frame_rate_classes(spark, sf_dir):
-    docs = (
-        videohash.t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select("doc_id")
-        .limit(120)
-    )
-    media = videohash.attach_avi_group_videos(docs, "doc_id")
-    fps_df = videohash.video_dhash_cells(media).select(
-        "media_id", videohash.dhash64(F.col("cells")).alias("simhash")
-    )
-    from aliyun_emapreduce_datasources_spark.dedup.simhash import (
-        simhash_candidates,
-    )
-
-    pairs = [
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_candidates(fps_df, id_col="media_id").collect()
-    ]
+    pairs = banded_pairs(sample_fps(spark, sf_dir, "video"))
     assert pairs, "fixture produced no near-dup pairs — vacuous test"
-    assert all(h <= videohash.MAX_HAMMING for _, _, h in pairs)
+    assert all(h <= neardup.MAX_HAMMING for _, _, h in pairs)
     # a 72-frame video must match a 144-frame near-twin (id parity
     # differs -> different frames-per-window)
     assert any(a % 2 != b % 2 for a, b, _ in pairs)

@@ -16,10 +16,10 @@ from aliyun_emapreduce_datasources_spark.dedup import simhash as _sh  # noqa: E4
 from aliyun_emapreduce_datasources_spark.dedup.containment import (  # noqa: E402
     containment_pairs as _containment_pairs,
 )
-from aliyun_emapreduce_datasources_spark.multimodal import audiohash as _audiohash  # noqa: E402
-from aliyun_emapreduce_datasources_spark.multimodal import imagehash as _imagehash  # noqa: E402
-from aliyun_emapreduce_datasources_spark.multimodal import mixed as _mixed  # noqa: E402
-from aliyun_emapreduce_datasources_spark.multimodal import videohash as _videohash  # noqa: E402
+from aliyun_emapreduce_datasources_spark.multimodal.neardup import (  # noqa: E402
+    CODECS,
+    neardup_pairs,
+)
 from aliyun_emapreduce_datasources_spark.operators.catalog import QUERIES  # noqa: E402
 from aliyun_emapreduce_datasources_spark.session import get_session  # noqa: E402
 
@@ -27,23 +27,13 @@ from aliyun_emapreduce_datasources_spark.session import get_session  # noqa: E40
 # release, r10 ask #2) — dump the materialize=False lazy twin so the
 # audit shows the executing shape, not a checkpointed-RDD scan
 LAZY = {
-    "dedup_minhash_lsh": lambda s, d: _mh.minhash_dedup_pairs(
-        s, d, hash_name=_mh.CATALOG_HASH, materialize=False
-    ),
+    "dedup_minhash_lsh": lambda s, d: _mh.minhash_dedup_pairs(s, d, materialize=False),
     "dedup_simhash": lambda s, d: _sh.QUERY(s, d, materialize=False),
     "dedup_containment": lambda s, d: _containment_pairs(s, d, materialize=False),
-    "media_image_neardup": lambda s, d: _imagehash.image_neardup_pairs(
-        s, d, materialize=False
-    ),
-    "media_mixed_neardup": lambda s, d: _mixed.mixed_neardup_pairs(
-        s, d, materialize=False
-    ),
-    "media_audio_neardup": lambda s, d: _audiohash.audio_neardup_pairs(
-        s, d, materialize=False
-    ),
-    "media_video_neardup": lambda s, d: _videohash.video_neardup_pairs(
-        s, d, materialize=False
-    ),
+    **{
+        f"media_{name}_neardup": lambda s, d, c=c: neardup_pairs(s, d, c, materialize=False)
+        for name, c in CODECS.items()
+    },
 }
 
 COMMENT = {
@@ -51,13 +41,13 @@ COMMENT = {
     "q6_forecast_revenue": "All three predicates in PushedFilters at the parquet scan; ReadSchema is the 3-column projection; single partial+final HashAggregate.",
     "dedup_embedding_cosine": "Multi-table LSH blocking under the round-10 quantized-integer portable law: one MapInPandas emits (tbl, sig)-keyed signature rows (exact integer dots), one hashpartitioning Exchange into the grouped per-bucket exact-integer verify, then a pair-distinct — compute bounded by bucket occupancy, no all-pairs stage, no driver collect.",
     "dedup_minhash_lsh": "OPH signatures as a whole-stage expression tree since round 10 (portable md5 via conv, ANSI-safe wrap filler) — NO Python worker anywhere in the plan; band-bucket self-join is a shuffled hash join on (band, bucket) — shuffle volume O(docs×bands), star-capped on over-BUCKET_CAP hot buckets since round 11; the exact-verify join touches only candidate pairs. (Catalog path eagerly checkpoints; the plan dumped here is the materialize=False lazy twin, the shape that actually executes.)",
-    "media_image_neardup": "Attach + decode/pool are two narrow MapInPandas legs (real BMP codec, blobs never on the driver); the 64-bit dHash packs as a flat whole-stage-codegen OR chain (no higher-order functions); the hamming join is the SimHash Manku block equi-join — one (blk, key) shuffle, never all-pairs. (Catalog path persists the fingerprints; the dumped plan is the materialize=False lazy twin.)",
+    "media_image_neardup": "One fused synth + decode/pool MapInPandas per join side (real BMP codec; blobs never cross the JVM boundary); the 64-bit dHash packs as a flat whole-stage-codegen OR chain (no higher-order functions); the hamming join is the SimHash Manku block equi-join on (blk, key), never all-pairs. (The catalog path persists the fingerprints, so the fused pass runs once there; the dumped plan is the materialize=False lazy twin, which runs it per side.)",
     "ann_ivf_drift_check": "Index build + frozen-quantizer append land partitioned-by-cluster parquet; the drift leg is ONE column-pruned (cluster, resid) scan into a 16-row aggregate joined against the stamped baselines — no embeddings read, no re-assignment, broadcast of the scalar median.",
     "media_png_features": "Genuine-PNG synth + decode are two narrow MapInPandas legs (per-row zlib DEFLATE/inflate — necessarily Python, blobs never on the driver); no Exchange anywhere: scan → synth → decode → project.",
     "media_jpeg_features": "Genuine baseline-JPEG synth + decode are two narrow MapInPandas legs (per-row Huffman entropy coding + vectorized block IDCT — necessarily Python, blobs never on the driver); no Exchange anywhere: scan → synth → decode → project.",
-    "media_mixed_neardup": "Magic-byte decode dispatch (BMP/PNG/JPEG) rides the same two narrow MapInPandas legs; the 64-bit dHash packs as a flat OR chain and the hamming join is the SimHash Manku block equi-join — one (blk, key) shuffle shared across all three container formats, never all-pairs. (Catalog path persists the fingerprints; the dumped plan is the materialize=False lazy twin.)",
-    "media_audio_neardup": "The WAV twin: chunk-walk decode + envelope pooling are the same two narrow MapInPandas legs, the hash is the same flat OR chain, the hamming join the same Manku block equi-join — one modality-agnostic shuffle shape. (Catalog path persists the fingerprints; the dumped plan is the materialize=False lazy twin.)",
-    "media_video_neardup": "The AVI twin: chunk-walk decode + temporal-envelope pooling ride the same two narrow MapInPandas legs into the same OR-chain hash and Manku block equi-join — the fourth modality through one shuffle shape. (Catalog path persists the fingerprints; the dumped plan is the materialize=False lazy twin.)",
+    "media_mixed_neardup": "Magic-byte decode dispatch (BMP/PNG/JPEG) rides the same fused synth + decode/pool MapInPandas, one per join side; the 64-bit dHash packs as a flat OR chain and the hamming join is the SimHash Manku block equi-join on (blk, key), shared across all three container formats, never all-pairs. (The catalog path persists the fingerprints; the dumped plan is the materialize=False lazy twin.)",
+    "media_audio_neardup": "The WAV codec: chunk-walk decode + envelope pooling ride the same fused synth + decode MapInPandas, one per join side; the hash is the same flat OR chain, the hamming join the same Manku block equi-join — one modality-agnostic plan shape. (The catalog path persists the fingerprints; the dumped plan is the materialize=False lazy twin.)",
+    "media_video_neardup": "The AVI codec: chunk-walk decode + temporal-envelope pooling ride the same fused synth + decode MapInPandas, one per join side, into the same OR-chain hash and Manku block equi-join — the fourth codec through one plan shape. (The catalog path persists the fingerprints; the dumped plan is the materialize=False lazy twin.)",
     "dsir_importance": "Bigram postings reduce map-side (partial HashAggregate before their Exchange); the 256-row bucket-stats side is BroadcastExchange; one doc_id shuffle for the final rollup.",
     "text_rare_bigram_ratio": "Double aggregation over bigrams with map-side partials; corpus frequency table joined back broadcast-eligible; the 1-row scalar rides a BroadcastNestedLoopJoin of bytes.",
     "chunk_documents": "Pure narrow plan: Scan → Project(split/sequence/transform) → Generate(posexplode) → Project, inside one WholeStageCodegen span; the only Exchange is the catalog's deterministic final sort.",

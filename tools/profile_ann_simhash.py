@@ -48,11 +48,11 @@ def main() -> None:
     docs = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     noop = lambda df: df.write.format("noop").mode("overwrite").save()  # noqa: E731
     # warm
-    noop(sh.simhash64(docs, hash_name=sh.CATALOG_HASH))
+    noop(sh.simhash64(docs))
 
-    timed(spark, "simhash:fingerprint", lambda: noop(sh.simhash64(docs, hash_name=sh.CATALOG_HASH)), reps, out)
+    timed(spark, "simhash:fingerprint", lambda: noop(sh.simhash64(docs)), reps, out)
 
-    fps = sh.simhash64(docs, hash_name=sh.CATALOG_HASH).persist()
+    fps = sh.simhash64(docs).persist()
     fps.count()
     timed(spark, "simhash:candidates(cached fps)", lambda: noop(sh.simhash_candidates(fps)), reps, out)
     fps.unpersist()

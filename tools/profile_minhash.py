@@ -43,7 +43,7 @@ def main() -> None:
 
     for _ in range(REPS):
         docs = t(spark, SF_DIR, "documents").where(F.col("text").isNotNull())
-        with_sig = minhash._with_signatures(docs, hash_name=minhash.CATALOG_HASH)
+        with_sig = minhash._with_signatures(docs)
         with_sig = with_sig.persist()
         phase("sig_persist_count", lambda: with_sig.count())
         cand = minhash.lsh_candidate_pairs(with_sig)

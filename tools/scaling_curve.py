@@ -74,8 +74,10 @@ def measure_work(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     out: dict[str, int] = {"n_docs": n_docs, "n_emb": n_emb}
 
     # minhash: distinct band-bucket candidates = the Jaccard-verify load
-    sigs = minhash._with_signatures(docs)
+    # persisted first: lsh_candidate_pairs' caller contract
+    sigs = minhash._with_signatures(docs).persist()
     out["minhash_candidates"] = minhash.lsh_candidate_pairs(sigs).count()
+    sigs.unpersist()
 
     # embedding LSH: Σ C(bucket, 2) across tables = BLAS comparisons
     dim = emb.select(F.size("embedding")).limit(1).collect()[0][0]
