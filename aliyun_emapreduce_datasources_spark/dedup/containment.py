@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.dedup.decontaminate import _O_SH
+from aliyun_emapreduce_datasources_spark.dedup.pairs import materialized_pairs, overlap_counts
 from aliyun_emapreduce_datasources_spark.functions.text import shingles, tokens
 from aliyun_emapreduce_datasources_spark.operators.common import ensure_parallelism, t
 
@@ -82,35 +83,15 @@ def containment_pairs(
             "n_kept", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
         )
     )
-    if materialize:
-        kept = kept.persist()  # both self-join sides; released below
-    a, b = kept.alias("a"), kept.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_kept").alias("n_a"),
-            F.col("b.n_kept").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    containment = F.col("inter").cast("double") / F.least("n_a", "n_b")
-    result = inter.select(
-        "doc_a", "doc_b", containment.alias("containment")
-    ).where(F.col("containment") >= CONTAINMENT_THRESHOLD)
-    if not materialize:
-        return result
-    # eager checkpoint, NOT persist: plan truncation for the consumer
-    # entries (see dedup/minhash.py, r12); releases the postings now
-    out = result.localCheckpoint(eager=True)
-    kept.unpersist()
-    return out
+
+    def build(post: DataFrame) -> DataFrame:
+        inter = overlap_counts(post, ["source", "s"], "n_kept")
+        containment = F.col("n_shared").cast("double") / F.least("n_a", "n_b")
+        return inter.select(
+            "doc_a", "doc_b", containment.alias("containment")
+        ).where(F.col("containment") >= CONTAINMENT_THRESHOLD)
+
+    return materialized_pairs(kept, build, fill=False, materialize=materialize)
 
 
 QUERY = containment_pairs

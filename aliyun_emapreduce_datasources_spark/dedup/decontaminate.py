@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from aliyun_emapreduce_datasources_spark.functions.text import shingles, tokens
+from aliyun_emapreduce_datasources_spark.functions.text import shingle_hashes
 from aliyun_emapreduce_datasources_spark.operators.common import t
 
 __all__ = ["decontaminate", "QUERY", "ORACLE"]
@@ -51,12 +51,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings = docs.select(
         "doc_id",
         (F.col("doc_id") % 10 == 0).alias("is_eval"),
-        F.explode(
-            F.transform(
-                F.array_distinct(shingles(tokens("text"))),
-                lambda s: F.xxhash64(s),
-            )
-        ).alias("s"),
+        F.explode(shingle_hashes("text")).alias("s"),
     )
     w = Window.partitionBy("s")
     return (
@@ -88,12 +83,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     postings = docs.select(
         "source",
-        F.explode(
-            F.transform(
-                F.array_distinct(shingles(tokens("text"))),
-                lambda s: F.xxhash64(s),
-            )
-        ).alias("s"),
+        F.explode(shingle_hashes("text")).alias("s"),
     )
     per_shingle = postings.groupBy("s").agg(
         F.array_sort(F.collect_set("source")).alias("srcs")

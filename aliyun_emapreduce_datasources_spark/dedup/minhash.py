@@ -33,12 +33,14 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aliyun_emapreduce_datasources_spark.dedup.pairs import materialized_pairs
 from aliyun_emapreduce_datasources_spark.functions.text import shingles, tokens
 from aliyun_emapreduce_datasources_spark.operators.common import ensure_parallelism, t
 
 __all__ = [
     "minhash_signature",
     "lsh_candidate_pairs",
+    "jaccard_verify",
     "minhash_dedup_pairs",
     "QUERY",
     "ORACLE",
@@ -371,6 +373,23 @@ def lsh_candidate_pairs(
     return all_pairs.unionByName(star_pairs).distinct()
 
 
+def jaccard_verify(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the pairs of ``cand`` whose exact
+    shingle-Jaccard is >= ``threshold``. Each member's shingle array
+    is joined on from ``sh`` (doc_id, sh) and compared in-row."""
+    sh_only = sh.select("doc_id", "sh")
+    jac = (
+        F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
+        / F.size(F.array_distinct(F.concat("a_sh", "b_sh")))
+    )
+    return (
+        cand.join(sh_only.withColumnsRenamed({"doc_id": "doc_a", "sh": "a_sh"}), "doc_a")
+        .join(sh_only.withColumnsRenamed({"doc_id": "doc_b", "sh": "b_sh"}), "doc_b")
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def minhash_dedup_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -379,22 +398,17 @@ def minhash_dedup_pairs(
     materialize: bool = True,
 ) -> DataFrame:
     """Confirmed near-dup pairs: LSH candidates verified with exact
-    shingle-Jaccard. The signature table is persisted eagerly — the
-    band self-join and the two verify joins all read it (at cluster
-    scale this is a checkpointed intermediate) — and RELEASED
-    deterministically once the (tiny) pair result is materialized:
-    an unreferenced cache is otherwise only reclaimed when a JVM GC
-    lets ContextCleaner see the dead weak ref, which is exactly the
-    heap debt that made this family's wall GC-CADENCE-COUPLED in the
-    r10 sweeps (14.75 s loaded vs 4.0 s per-entry-GC — r10 verdict
-    ask #2). The fat blocks here are the per-doc shingle arrays; the
-    checkpointed pair list is O(near-dups).
+    shingle-Jaccard. The signature table is persisted and filled — the
+    band self-join and the two verify joins all read it — and released
+    once the pair result is checkpointed (``materialized_pairs``; in
+    the r10 sweeps the unreleased per-doc shingle arrays made this
+    family's wall GC-cadence-coupled, 14.75 s loaded vs 4.0 s
+    per-entry-GC).
 
-    ``materialize=False`` returns the fully LAZY plan — no persist, no
-    checkpoint — for plan inspection only (the no-Python-worker pin in
+    ``materialize=False`` returns the fully LAZY plan for plan
+    inspection only: the no-Python-worker pin in
     tests/test_minhash_expr.py reads the REAL pipeline plan, which the
-    materialized path hides behind a checkpointed-RDD scan); executing
-    through it would recompute the signature stage per consumer.
+    materialized path hides behind a checkpointed-RDD scan.
 
     ``hash_name`` accepts only ``CATALOG_HASH`` ("md5"), the one hash
     family; anything else raises ``ValueError``."""
@@ -406,11 +420,6 @@ def minhash_dedup_pairs(
     # NULL-text docs carry no shingles — skip them like every
     # per-text operator
     docs = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    with_sig = _with_signatures(docs)
-    jac = (
-        F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
-        / F.size(F.array_distinct(F.concat("a_sh", "b_sh")))
-    )
     # A slim-cache variant (persist only (doc_id, bands), eagerly
     # checkpoint the candidate list, re-shingle only the pair MEMBERS
     # for the verify) was prototyped in the r11 optimization round and
@@ -420,30 +429,12 @@ def minhash_dedup_pairs(
     # legs plus one extra eager job cost more than reading the cached
     # arrays whose computation the signature pass already paid — see
     # OPTIMIZATION_r11.md. The persisted-signature shape stays.
-    if materialize:
-        with_sig = with_sig.persist()
-        with_sig.count()
-    cand = lsh_candidate_pairs(with_sig)
-    sh_only = with_sig.select("doc_id", "sh")
-    result = (
-        cand.join(sh_only.withColumnsRenamed({"doc_id": "doc_a", "sh": "a_sh"}), "doc_a")
-        .join(sh_only.withColumnsRenamed({"doc_id": "doc_b", "sh": "b_sh"}), "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+    return materialized_pairs(
+        _with_signatures(docs),
+        lambda ws: jaccard_verify(lsh_candidate_pairs(ws), ws, threshold),
+        fill=True,
+        materialize=materialize,
     )
-    if not materialize:
-        return result
-    # eager localCheckpoint, NOT persist (re-measured r12): the
-    # checkpoint TRUNCATES the plan to one LogicalRDD leaf, so the
-    # check/cluster entries that read this table several times carry a
-    # one-leaf subplan. The persist form kept the whole pipeline (plus
-    # its internal caches) in every consumer's logical plan — Catalyst
-    # re-analysis alone took ~6 s per consumer entry
-    # (dedup_minhash_precision_check 4.4 → 16.7 s isolated). The small
-    # pair blocks riding until a driver GC is the cheaper side.
-    out = result.localCheckpoint(eager=True)
-    with_sig.unpersist()
-    return out
 
 
 def QUERY(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,6 +26,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aliyun_emapreduce_datasources_spark.dedup.pairs import materialized_pairs
 from aliyun_emapreduce_datasources_spark.operators.common import ensure_parallelism, t
 
 __all__ = ["simhash64", "simhash_candidates", "QUERY", "ORACLE", "CATALOG_HASH"]
@@ -154,19 +155,9 @@ def QUERY(spark: SparkSession, sf_dir: str, materialize: bool = True) -> DataFra
     # inspection only (tests/test_minhash_expr.py's no-Python-worker
     # pin).
     docs = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    fps = simhash64(docs)
-    if not materialize:
-        return simhash_candidates(fps)
-    fps = fps.persist()
-    fps.count()  # materialize once; both self-join sides read the cache
-    # deterministic release (r10 verdict ask #2's pattern): checkpoint
-    # the small pair result eagerly, then free the cache NOW instead
-    # of waiting for a JVM GC to surface the dead weak ref. Eager
-    # checkpoint, NOT persist — the checkpoint truncates the plan for
-    # the bits_check consumer (see dedup/minhash.py, r12)
-    out = simhash_candidates(fps).localCheckpoint(eager=True)
-    fps.unpersist()
-    return out
+    return materialized_pairs(
+        simhash64(docs), simhash_candidates, fill=True, materialize=materialize
+    )
 
 
 # Full DuckDB twin of QUERY under CATALOG_HASH = "md5": token hash =

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.dedup.decontaminate import _O_SH
-from aliyun_emapreduce_datasources_spark.functions.text import shingles, tokens
+from aliyun_emapreduce_datasources_spark.functions.text import shingle_hashes, shingles, tokens
 from aliyun_emapreduce_datasources_spark.operators.common import (
     release_checkpoint,
     t,
@@ -56,12 +56,7 @@ def dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     postings = docs.select(
         "doc_id",
-        F.explode(
-            F.transform(
-                F.array_distinct(shingles(tokens("text"))),
-                lambda s: F.xxhash64(s),
-            )
-        ).alias("s"),
+        F.explode(shingle_hashes("text")).alias("s"),
     )
     w = Window.partitionBy("s")
     return (

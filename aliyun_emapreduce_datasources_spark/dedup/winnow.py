@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aliyun_emapreduce_datasources_spark.dedup.pairs import materialized_pairs, overlap_counts
 from aliyun_emapreduce_datasources_spark.operators.common import ensure_parallelism, t
 
 __all__ = [
@@ -173,16 +174,11 @@ def winnow_dedup_pairs(
     # NULL-text docs carry no shingles/fingerprint — the pandas UDFs
     # would crash on None; skip them like every per-text operator
     docs = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    fps = winnow_fingerprints(docs).persist()
-    # deterministic release (r10 verdict ask #2's pattern): checkpoint
-    # the small pair result eagerly, free the postings cache NOW. Eager
-    # checkpoint, NOT persist — plan truncation for the containment
-    # check consumer (see dedup/minhash.py, r12)
-    out = winnow_pairs_from_fingerprints(
-        fps, min_containment, prefix_filter
-    ).localCheckpoint(eager=True)
-    fps.unpersist()
-    return out
+    return materialized_pairs(
+        winnow_fingerprints(docs),
+        lambda fps: winnow_pairs_from_fingerprints(fps, min_containment, prefix_filter),
+        fill=False,
+    )
 
 
 def winnow_pairs_from_fingerprints(
@@ -198,22 +194,7 @@ def winnow_pairs_from_fingerprints(
     tests/test_dedup.py::test_winnow_prefix_filter_matches_plain_join."""
     counts = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
     if not prefix_filter:
-        with_n = fps.join(counts, "doc_id")
-        a, b = with_n.alias("a"), with_n.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.fp") == F.col("b.fp"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.n_fp").alias("n_a"),
-                F.col("b.n_fp").alias("n_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-        )
+        pairs = overlap_counts(fps.join(counts, "doc_id"), ["fp"], "n_fp")
         containment = F.col("n_shared").cast("double") / F.least("n_a", "n_b")
         return pairs.select(
             "doc_a", "doc_b", containment.alias("containment")

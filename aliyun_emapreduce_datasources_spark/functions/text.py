@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.operators.common import bucketed_rank, local_df, t
 
-__all__ = ["tokens", "shingles", "EN_STOPWORDS", "QUERIES", "ORACLES"]
+__all__ = ["tokens", "shingles", "shingle_hashes", "EN_STOPWORDS", "QUERIES", "ORACLES"]
 
 # Small, fixed English stopword list (public knowledge); used by the
 # quality and language-ID heuristics.
@@ -71,6 +71,15 @@ def shingles(tok: Column, k: int = 3) -> Column:
         # nulls, and the padded tail is cut by the final slice
         grams = F.zip_with(grams, shifted, lambda a, b: F.concat_ws(" ", a, b))
     return F.slice(grams, 1, F.greatest(F.size(tok) - (k - 1), F.lit(0)))
+
+
+def shingle_hashes(col: str | Column) -> Column:
+    """xxhash64 of each DISTINCT 3-token shingle of ``col``: the
+    posting set of the shingle-overlap operators (decontamination,
+    duplicate spans)."""
+    return F.transform(
+        F.array_distinct(shingles(tokens(col))), lambda s: F.xxhash64(s)
+    )
 
 
 def _stopword_count(tok: Column) -> Column:

@@ -65,6 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aliyun_emapreduce_datasources_spark.dedup.pairs import materialized_pairs
 from aliyun_emapreduce_datasources_spark.dedup.simhash import simhash_candidates
 from aliyun_emapreduce_datasources_spark.multimodal.avi import decode_avi, encode_avi
 from aliyun_emapreduce_datasources_spark.multimodal.bmp import decode_bmp, encode_bmp
@@ -384,31 +385,25 @@ def neardup_pairs(
         .where(F.col("text").isNotNull())
         .select("doc_id")
     )
-    # persist the fingerprints: both sides of the block self-join read
-    # them, and without the boundary the fused synth+decode MapInPandas
-    # runs once PER SIDE; released deterministically once the (tiny)
-    # pair result is materialized
+    # the fingerprints are the shared input: both sides of the block
+    # self-join read them, and without the cache the fused
+    # synth+decode MapInPandas runs once PER SIDE
     fps = dhash_cells_fused(docs, "doc_id", codec).select(
         F.col("media_id"), dhash64(F.col("cells")).alias("simhash")
     )
-    if materialize:
-        fps = fps.persist()
-        fps.count()
-    result = (
-        simhash_candidates(fps, id_col="media_id")
-        .select(
-            F.col("doc_a").alias("media_a"),
-            F.col("doc_b").alias("media_b"),
-            "hamming",
+
+    def build(fps: DataFrame) -> DataFrame:
+        return (
+            simhash_candidates(fps, id_col="media_id")
+            .select(
+                F.col("doc_a").alias("media_a"),
+                F.col("doc_b").alias("media_b"),
+                "hamming",
+            )
+            .orderBy("media_a", "media_b")
         )
-        .orderBy("media_a", "media_b")
-    )
-    if not materialize:
-        return result
-    out = result.persist()  # r12: CacheManager-managed result
-    out.count()  # materialize now so the fingerprint cache can drop
-    fps.unpersist()
-    return out
+
+    return materialized_pairs(fps, build, fill=True, materialize=materialize)
 
 
 def _signed(u: str) -> str:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.functions.text import normalize_ws
+from aliyun_emapreduce_datasources_spark.operators.common import release_checkpoint
 
 __all__ = ["CurationIngest", "EmbeddingIngest", "NearDupIngest"]
 
@@ -185,6 +186,7 @@ class EmbeddingIngest:
             "batch_id", F.lit(batch_id)
         )
         accepted.write.mode("append").parquet(self.store)
+        release_checkpoint(batch)
         self.seen_batches.add(batch_id)
 
     def accepted(self, spark: SparkSession) -> DataFrame:
@@ -266,6 +268,7 @@ class NearDupIngest:
         )
         from aliyun_emapreduce_datasources_spark.dedup.minhash import (
             _with_signatures,
+            jaccard_verify,
             lsh_candidate_pairs,
         )
         from aliyun_emapreduce_datasources_spark.functions.inthash import h64_md5
@@ -280,16 +283,8 @@ class NearDupIngest:
             return
 
         # in-batch: the batch operator's exact rule on this batch
-        sh_only = with_sig.select("doc_id", "sh")
-        jac = F.size(F.array_intersect("a_sh", "b_sh")).cast("double") / F.size(
-            F.array_distinct(F.concat("a_sh", "b_sh"))
-        )
-        pairs = (
-            lsh_candidate_pairs(with_sig)
-            .join(sh_only.withColumnsRenamed({"doc_id": "doc_a", "sh": "a_sh"}), "doc_a")
-            .join(sh_only.withColumnsRenamed({"doc_id": "doc_b", "sh": "b_sh"}), "doc_b")
-            .where(jac >= self.tau)
-            .select("doc_a", "doc_b")
+        pairs = jaccard_verify(lsh_candidate_pairs(with_sig), with_sig, self.tau).select(
+            "doc_a", "doc_b"
         )
         keepers = (
             connected_components(with_sig.select("doc_id"), pairs)
@@ -368,6 +363,7 @@ class NearDupIngest:
             F.size("sh").alias("n_sh"),
             F.lit(batch_id).alias("batch_id"),
         ).write.mode("append").parquet(self.docs_dir)
+        release_checkpoint(accepted)
         with_sig.unpersist()
         self.seen_batches.add(batch_id)
 

@@ -75,7 +75,9 @@ def oracle():
 # stays on the workers' path; see launcher.sh), so the emrlog
 # rate-limit and restart tests, the no-Python-worker plan pin and the
 # materialize-once pin are back in the default gate (1-10 s each; gate
-# 13:21 at local[4]).
+# 13:21 at local[4]). So are the two differentials over the shared
+# postings overlap kernel (dedup/pairs.py): winnow's prefix filter vs
+# its plain join, and containment vs its Python reference (~29 s).
 
 SLOW_FILES = {
     "test_null_robustness.py",       # 141 cases, ~3-28 s each tail
@@ -101,11 +103,9 @@ SLOW_TESTS = {
     "test_bpe_train.py::test_train_loop_final_table_is_the_encoded_vocab",
     "test_bpe_train.py::test_bpe_differential_random",
     "test_lm_random.py::test_dsir_matches_python_reference",
-    "test_containment_random.py::test_containment_matches_reference_with_planted_pair",
     "test_keyness_ks_random.py::test_robust_outliers_match_reference",
     "test_keyness_ks_random.py::test_keyness_matches_reference",
     "test_keyness_ks_random.py::test_ks_matches_reference",
-    "test_dedup.py::test_winnow_prefix_filter_matches_plain_join",
     "test_chunking_random.py::test_chunk_invariants",
     "test_similarity.py::test_ann_lsh_recall_at_auto_scaled_planes",
     "test_concurrent_build.py::test_containment_check_concurrent_equals_sequential",

@@ -22,8 +22,10 @@ BUDGET = {  # entry: (build jobs, build + noop write jobs)
     "dedup_containment": (8, 9),
     "dedup_simhash": (8, 9),
     "dedup_winnow_fingerprint": (19, 20),
-    "media_image_neardup": (12, 13),
-    "media_audio_neardup": (12, 13),
+    # the media result is a checkpoint like the others' (it was a
+    # persist + count, two jobs more)
+    "media_image_neardup": (10, 11),
+    "media_audio_neardup": (10, 11),
     "dedup_minhash_clusters": (14, 20),
     "dedup_cluster_resolve": (9, 15),
 }

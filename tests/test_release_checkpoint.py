@@ -1,7 +1,7 @@
 """``release_checkpoint``: counted releases, a failure that is counted
 and logged once instead of swallowed, the release order of connected
-components' consumed edges, and the releases of the scrub fixpoint and
-BPE merge loops."""
+components' consumed edges, the releases of the scrub fixpoint and BPE
+merge loops, and the per-batch checkpoints of the ingest sinks."""
 
 from __future__ import annotations
 
@@ -127,3 +127,67 @@ def test_bpe_train_releases_every_materialized_checkpoint(spark, monkeypatch):
     assert len(made) == 4  # one per merge step, each materialized by its pair count
     assert release_counts() == {"released": len(made), "failed": 0}
     assert merges == py_bpe(word_counts, 4)
+
+
+def _ingest_two_batches(spark, monkeypatch, sink, batches, schema) -> list[dict]:
+    """Feed ``batches`` to a foreachBatch sink directly, recording the
+    release counts after each one."""
+    monkeypatch.setattr(common, "_release_counts", {"released": 0, "failed": 0})
+    counts = []
+    for batch_id, rows in enumerate(batches):
+        sink(spark.createDataFrame(rows, schema), batch_id)
+        counts.append(release_counts())
+    return counts
+
+
+def test_embedding_ingest_releases_each_batch_checkpoint(spark, monkeypatch, tmp_path):
+    import numpy as np
+
+    from aliyun_emapreduce_datasources_spark.streaming.ingest import EmbeddingIngest
+
+    rng = np.random.default_rng(7)
+    a, b, c = (rng.standard_normal(64) for _ in range(3))
+
+    def vec(v, jitter=0.0):
+        return [float(x) for x in v + jitter * rng.standard_normal(64)]
+
+    sink = EmbeddingIngest(str(tmp_path / "emb"), tau=0.95)
+    counts = _ingest_two_batches(
+        spark,
+        monkeypatch,
+        sink,
+        [[(1, vec(a)), (2, vec(a, 0.01)), (3, vec(b))], [(10, vec(a, 0.005)), (12, vec(c))]],
+        "vec_id long, embedding array<float>",
+    )
+
+    assert counts[0]["released"] >= 1 and counts[1]["released"] >= counts[0]["released"] + 1
+    assert counts[1]["failed"] == 0
+    assert sorted((r.vec_id, r.batch_id) for r in sink.accepted(spark).collect()) == [
+        (1, 0),
+        (3, 0),
+        (12, 1),
+    ]
+
+
+def test_neardup_ingest_releases_each_accepted_checkpoint(spark, monkeypatch, tmp_path):
+    from test_neardup_ingest import _A, _B, _C, _D
+
+    from aliyun_emapreduce_datasources_spark.streaming.ingest import NearDupIngest
+
+    sink = NearDupIngest(str(tmp_path / "nd"), tau=0.5)
+    # batch 0: B is an in-batch near-dup of A; batch 1: D is a near-dup
+    # of the accepted A, C is new
+    counts = _ingest_two_batches(
+        spark,
+        monkeypatch,
+        sink,
+        [[(1, _A), (2, _B)], [(10, _D), (11, _C)]],
+        "doc_id long, text string",
+    )
+
+    assert counts[0]["released"] >= 1 and counts[1]["released"] >= counts[0]["released"] + 1
+    assert counts[1]["failed"] == 0
+    assert sorted((r.doc_id, r.batch_id) for r in sink.accepted(spark).collect()) == [
+        (1, 0),
+        (11, 1),
+    ]
