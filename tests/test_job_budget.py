@@ -1,5 +1,6 @@
 """Per-entry Spark job budget for the dedup pair pipelines and their
-consumers: a new eager action (a spare count, an extra checkpoint, a
+consumers, the checkpointed convergence loops and the ANN / embedding
+entries: a new eager action (a spare count, an extra checkpoint, a
 collect) or a lost one shows up here as a diff.
 
 Each entry is built and then written to ``noop`` under a job group of
@@ -28,6 +29,17 @@ BUDGET = {  # entry: (build jobs, build + noop write jobs)
     "media_audio_neardup": (10, 11),
     "dedup_minhash_clusters": (14, 20),
     "dedup_cluster_resolve": (9, 15),
+    "dedup_scrub_fixpoint": (42, 44),
+    "bpe_train_merges": (18, 21),
+    "bpe_encode_corpus": (18, 24),
+    "ann_bruteforce_topk": (2, 4),
+    "ann_lsh_topk": (2, 6),
+    "ann_ivf_topk": (3, 6),
+    "ann_int8_topk": (2, 7),
+    "ann_pq_topk": (3, 7),
+    "dedup_bloom_decontaminate": (3, 4),
+    "dedup_semantic": (1, 5),
+    "emb_label_noise_knn": (3, 13),
 }
 
 
