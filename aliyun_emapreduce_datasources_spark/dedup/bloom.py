@@ -127,7 +127,6 @@ def bloom_decontaminate(
     the filter reports as present in the eval set. Scan-only over the
     training side. hash_name="md5" is the engine-portable variant
     (integer-exact pow2 filter sizing — see CATALOG_HASH note)."""
-    spark = train.sparkSession
     scheme = "pow2" if hash_name == "md5" else "optimal"
     eval_hashes_rows = (
         eval_df.select(
@@ -152,7 +151,6 @@ def bloom_decontaminate(
     # the md5 variant is already positive so this is the identity)
     eh = np.array([r.h for r in eval_hashes_rows], dtype=np.int64).astype(np.uint64)
     packed, m, k = build_bloom(eh, fp_rate, scheme)
-    b = spark.sparkContext.broadcast((packed, m, k))
 
     train_hashed = train.select(
         "doc_id",
@@ -163,8 +161,7 @@ def bloom_decontaminate(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        packed_b, m_b, k_b = b.value
-        bits = np.unpackbits(packed_b).astype(bool)
+        bits = np.unpackbits(packed).astype(bool)
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -176,7 +173,7 @@ def bloom_decontaminate(
                 if hs is None or len(hs) == 0:
                     continue
                 h = np.asarray(hs, dtype=np.int64).astype(np.uint64)
-                pos = _probe_positions(h, m_b, k_b)
+                pos = _probe_positions(h, m, k)
                 hit = bits[pos].all(axis=1)
                 n = int(hit.sum())
                 if n:

@@ -36,6 +36,7 @@ from aliyun_emapreduce_datasources_spark.dedup.ngram import (
     ngram_jaccard_pairs,
 )
 from aliyun_emapreduce_datasources_spark.operators.common import (
+    checkpoint_step,
     local_df,
     release_checkpoint,
     t,
@@ -162,24 +163,16 @@ def _propagate_components(
             .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.min("cluster_id").alias("neigh_min"))
         )
-        labels = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
+        labels, cur = checkpoint_step(
+            prev_labels,
+            labels.join(neigh, "doc_id", "left").select(
                 "doc_id",
                 F.least(
                     "cluster_id", F.coalesce("neigh_min", "cluster_id")
                 ).alias("cluster_id"),
-            )
-            # non-eager: materialized by the convergence agg below, so
-            # each round is ONE job (checkpoint + sum), not two
-            .localCheckpoint(eager=False)
+            ),
+            lambda df: df.agg(F.sum("cluster_id")).collect()[0][0],
         )
-        cur = labels.agg(F.sum("cluster_id")).collect()[0][0]
-        # round N's checkpoint just materialized (the agg above), so
-        # round N-1's blocks are dead — drop them now instead of
-        # leaving up to MAX_ROUNDS label tables for a driver GC
-        if prev_labels is not None:
-            release_checkpoint(prev_labels)
         prev_labels = labels
         if cur == prev_sum:
             converged = True
@@ -226,10 +219,6 @@ def dedup_cluster_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents").select("doc_id")
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    # consume_edges: the pair pipeline's eagerly checkpointed candidate
-    # table is released the moment the closure no longer reads it (r12
-    # heap-release pass — un-collected blocks inflated LATER sweep
-    # entries by holding heap until a driver GC)
     labels = connected_components(docs, pairs, consume_edges=True)
     return labels.select(
         "doc_id",
@@ -279,12 +268,7 @@ def dedup_cluster_weights(
     """
     labels = dedup_cluster_resolve(spark, sf_dir).select("doc_id", "cluster_id")
     if materialize:
-        # labels feeds the size aggregate AND the weight join-back —
-        # materialize the docs-scan ∪ propagated-labels assembly ONCE
-        # (lazy persist, filled by the final job; the propagation
-        # loop's own rounds are already checkpointed-and-released
-        # upstream). persist over localCheckpoint (r12): deterministic
-        # release via clearCache, stats kept, lineage kept.
+        # labels feeds the size aggregate AND the weight join-back
         labels = labels.persist()
     sizes = labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")

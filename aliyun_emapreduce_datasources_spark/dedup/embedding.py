@@ -352,9 +352,7 @@ def embedding_neardup_lsh_portable(
         n_planes = auto_planes(emb.count())
     if n_tables is None:
         n_tables = auto_tables(n_planes)
-    b_planes = spark.sparkContext.broadcast(
-        _int_plane_matrix(n_planes, n_tables, dim).astype(np.float64)
-    )
+    P = _int_plane_matrix(n_planes, n_tables, dim).astype(np.float64)
     weights = 1 << np.arange(n_planes, dtype=np.int64)
     sig_schema = T.StructType(
         [
@@ -371,7 +369,6 @@ def embedding_neardup_lsh_portable(
     )
 
     def signatures(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        P = b_planes.value
         for pdf in batches:
             if pdf.empty:
                 continue

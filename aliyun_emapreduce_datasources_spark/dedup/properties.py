@@ -251,8 +251,7 @@ def bpe_roundtrip_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
-        .persist()  # training's first pair-count job fills the cache;
-        # the roundtrip map pass re-reads it (clearCache-releasable)
+        .persist()  # read by training and by the roundtrip map pass
     )
     merges = [(left, right) for left, right, _ in train_merges(words, N_MERGES)]
 

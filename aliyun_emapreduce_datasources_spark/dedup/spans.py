@@ -32,10 +32,7 @@ from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.dedup.decontaminate import _O_SH
 from aliyun_emapreduce_datasources_spark.functions.text import shingle_hashes, shingles, tokens
-from aliyun_emapreduce_datasources_spark.operators.common import (
-    release_checkpoint,
-    t,
-)
+from aliyun_emapreduce_datasources_spark.operators.common import checkpoint_step, t
 
 __all__ = [
     "dup_spans",
@@ -261,10 +258,8 @@ def scrub_spans_fixpoint(
     (round-6 advisor: a silent cap exited early; round-7 advisor: a
     too-generous cap diverged from the oracle — one knob now drives
     both). Callers outside the catalog may pass a larger budget.
-    Each pass localCheckpoints so
-    the loop's lineage (and
-    the per-pass `removed` scalar read on the driver) stays bounded —
-    the same iterative-operator discipline as graph_pagerank."""
+    Each pass is a ``checkpoint_step`` whose probe is the pass's
+    `removed` scalar, so the loop's lineage stays bounded."""
     docs = (
         t(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
@@ -272,23 +267,18 @@ def scrub_spans_fixpoint(
     )
     orig = docs.select("doc_id", _true_token_count(F.col("text")).alias("n_orig"))
     cur = docs
+    out = None
     removed = 0
     for _ in range(max_iters):
-        # non-eager: the convergence aggregate below materializes the
-        # checkpoint, so each pass is ONE job instead of two (the
-        # dedup/clusters.py convention; r11 optimization round — an
-        # incremental changed-docs-only formulation was prototyped and
-        # measured SLOWER at sf0.1: per-pass state-maintenance plans
-        # cost more than the full 260k-posting repass, see
-        # OPTIMIZATION_r11.md)
-        out = scrub_pass(cur, k).localCheckpoint(eager=False)
-        removed = out.agg(F.sum("n_removed")).collect()[0][0] or 0
-        # pass N's checkpoint just materialized (the agg above) and its
-        # lineage truncated — pass N-1's corpus-sized blocks are dead;
-        # release them now instead of holding max_iters copies of the
-        # corpus until a driver GC (r12 heap-release pass)
-        if cur is not docs:
-            release_checkpoint(cur)
+        # every pass re-scrubs the whole corpus: an incremental
+        # changed-docs-only formulation was measured SLOWER at sf0.1
+        # (per-pass state-maintenance plans cost more than the full
+        # 260k-posting repass, OPTIMIZATION_r11.md)
+        out, removed = checkpoint_step(
+            out,
+            scrub_pass(cur, k),
+            lambda df: df.agg(F.sum("n_removed")).collect()[0][0] or 0,
+        )
         cur = out.select("doc_id", F.col("clean_text").alias("text"))
         if removed == 0:
             break

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.functions.text import tokens
 from aliyun_emapreduce_datasources_spark.operators.common import (
+    checkpoint_step,
     local_df,
     release_checkpoint,
     t,
@@ -125,20 +126,15 @@ def _train_loop(
     encode oracle makes the same identification). ``keep_word=True``
     carries the word string through the loop so the caller can read
     the encoded vocabulary straight off the final table."""
-    # non-eager: materialized by the pair-count job below, so each
-    # iteration is ONE job (count + checkpoint), not two — the
-    # dedup/clusters.py convergence-loop convention
     carry = [F.col("w")] if keep_word else []
-    sym = words.select(
+    nxt = words.select(
         *carry,
         F.col("cnt").cast("long").alias("cnt"),
         F.concat(F.split(F.col("w"), ""), F.array(F.lit(EOW))).alias("syms"),
-    ).localCheckpoint(eager=False)
+    )
     keep = (["w"] if keep_word else []) + ["cnt"]
 
-    merges: list[tuple[str, str, int]] = []
-    mat = None  # last checkpoint known materialized (blocks live)
-    for it in range(n_merges):
+    def top_pair(sym: DataFrame) -> list:
         pairs = sym.select(
             "cnt",
             F.explode(
@@ -149,37 +145,31 @@ def _train_loop(
                 )
             ).alias("p"),
         )
-        top = (
+        return (
             pairs.groupBy("p.l", "p.r")
             .agg(F.sum("cnt").alias("n"))
             .orderBy(F.col("n").desc(), F.col("l"), F.col("r"))
             .limit(1)
             .collect()
         )
-        # the collect materialized `sym`'s checkpoint (and truncated its
-        # lineage), so the previously live state's blocks are dead —
-        # release them now instead of holding n_merges vocabulary
-        # tables until a driver GC (r12 heap-release pass)
-        if mat is not None and mat is not sym:
-            release_checkpoint(mat)
-        mat = sym
+
+    merges: list[tuple[str, str, int]] = []
+    sym = None  # the last materialized state
+    for _ in range(n_merges):
+        sym, top = checkpoint_step(sym, nxt, top_pair)
+        nxt = sym
         if not top:
             break
         left, right, n = top[0]["l"], top[0]["r"], int(top[0]["n"])
         merges.append((left, right, n))
-        applied = sym.select(
-            *keep, _merge_expr(F.col("syms"), left, right).alias("syms")
-        )
         # the LAST merge's apply stays a lazy select over the final
         # materialized state: checkpointing it would double-store the
         # vocabulary (old blocks + new blocks) for a table read at most
         # once by the caller
-        sym = (
-            applied
-            if it == n_merges - 1
-            else applied.localCheckpoint(eager=False)
+        nxt = sym.select(
+            *keep, _merge_expr(F.col("syms"), left, right).alias("syms")
         )
-    return merges, sym
+    return merges, nxt
 
 
 def train_merges(words: DataFrame, n_merges: int = N_MERGES) -> list[tuple[str, str, int]]:
@@ -270,7 +260,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _, final_sym = _train_loop(words, N_MERGES, keep_word=True)
     # the first training state's materialization consumed `words`; its
-    # blocks have been dead since merge 1 (r12 heap-release pass)
+    # blocks have been dead since merge 1
     release_checkpoint(words)
     vocab_syms = final_sym.select(
         "w", F.size("syms").cast("long").alias("n_syms")

@@ -1100,15 +1100,11 @@ def trigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside a transform lambda (_TRIGRAMS' old shape): a captured
     # split() re-evaluates per ELEMENT in a lambda — O(tokens²) splits
     # per doc, measured 7.0 → 2.3 s at sf0.1. The postings table also
-    # feeds TWO consumers (the df count and the join-back), so it is
-    # checkpointed once instead of recomputed.
+    # feeds TWO consumers (the df count and the join-back).
     tg = docs.select(
         "doc_id",
         F.explode(F.array_distinct(shingles(tokens("text"), 3))).alias("tg"),
-    ).persist()  # lazy, CacheManager-managed: the final job fills the
-    # cache once for both consumers, and the blocks are released
-    # deterministically by catalog.clearCache() instead of waiting for
-    # a driver GC like an (eager) localCheckpoint's would (r12)
+    ).persist()
     counts = tg.groupBy("tg").agg(F.count(F.lit(1)).cast("long").alias("n_docs_with"))
     return (
         tg.join(counts, "tg")
@@ -1184,8 +1180,11 @@ def source_tv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source", F.explode(tokens("text")).alias("token"))
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .persist()  # one scan feeds totals + both join sides (lazy,
-        # CacheManager-managed — released by clearCache, not driver GC)
+        # one scan feeds totals + both join sides. An eager checkpoint,
+        # not the shared-subtree persist: isolated at sf0.1 (min-of-3,
+        # three alternating rounds) it ran 1.32-1.74 s against the
+        # persist's 1.86-2.14 s
+        .localCheckpoint()
     )
     totals = counts.groupBy("source").agg(F.sum("cnt").cast("long").alias("tt"))
     spine = (
@@ -1317,9 +1316,7 @@ def langid_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         ).alias("g"),
-    ).persist()  # one scan feeds profile training AND scoring — lazy:
-    # the profile broadcast's build fills the cache (no separate eager
-    # job), scoring reads it back, clearCache releases it (r12)
+    ).persist()  # one scan feeds profile training AND scoring
     # profiles train ONLY on labeled docs: a NULL "language" must not
     # become a classification candidate (and a NULL cand in the argmax
     # tie-break hits the engines' NULLS FIRST/LAST asymmetry — the

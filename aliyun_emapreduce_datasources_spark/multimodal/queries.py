@@ -71,9 +71,6 @@ def media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
-    # lazy persist (r12): the first leg's execution fills the cache (no
-    # separate eager job writing every blob twice), blocks are
-    # CacheManager-managed (clearCache-releasable), lineage kept
     media = attach_bmp_media(docs, "doc_id", "text").persist()
     feats = decode_features(media).select("media_id", "n_pixels")
     frames = (

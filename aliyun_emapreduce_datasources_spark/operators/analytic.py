@@ -601,11 +601,6 @@ def market_basket_lift(
     )
     if materialize:
         # baskets feeds three consumers (scalar, freq, pair expansion)
-        # — materialize the lineitem scan + orderkey collect_set ONCE
-        # (lazy persist, filled by the final job) instead of once per
-        # consumer (guide §2.4). persist over localCheckpoint (r12):
-        # deterministic release via clearCache, stats kept, lineage
-        # kept (fault-tolerant at scale).
         baskets = baskets.persist()
     scalar = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     freq = (

@@ -24,15 +24,18 @@ from __future__ import annotations
 
 import logging
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-__all__ = ["t", "m", "dsum", "davg", "o_m", "o_dsum", "o_davg", "md5_bucket", "ensure_parallelism", "local_df", "release_checkpoint", "release_counts", "revenue", "O_REVENUE", "centi_band", "o_centi_band", "bucketed_rank", "ntile_case"]
+__all__ = ["t", "m", "dsum", "davg", "o_m", "o_dsum", "o_davg", "md5_bucket", "ensure_parallelism", "local_df", "release_checkpoint", "checkpoint_step", "release_counts", "revenue", "O_REVENUE", "centi_band", "o_centi_band", "bucketed_rank", "ntile_case"]
 
 
 _log = logging.getLogger(__name__)
 _release_counts = {"released": 0, "failed": 0}
+_V = TypeVar("_V")
 
 
 def release_checkpoint(df: DataFrame) -> None:
@@ -61,6 +64,20 @@ def release_checkpoint(df: DataFrame) -> None:
     Best-effort: a failure never fails the query, but it is counted in
     ``release_counts()`` and the first one is logged, so a drifted
     py4j plan contract cannot silently turn releases off.
+
+    The materialization policy, one vehicle per purpose:
+
+    - a subtree several consumers share: a lazy ``persist()``. The
+      first consumer's job fills it (no job of its own), it keeps its
+      lineage and statistics, and ``spark.catalog.clearCache()``
+      releases it deterministically;
+    - a pair result: an eager ``localCheckpoint``
+      (``dedup/pairs.materialized_pairs``), which truncates every
+      consumer's plan;
+    - loop state: ``checkpoint_step``, one lazy checkpoint per round
+      that the round's own probe materializes.
+
+    A site that departs from this says why in a comment.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -74,6 +91,25 @@ def release_checkpoint(df: DataFrame) -> None:
         _release_counts["failed"] += 1
         if _release_counts["failed"] == 1:
             _log.warning("release_checkpoint failed; blocks are left to GC", exc_info=True)
+
+
+def checkpoint_step(
+    prev: DataFrame | None, nxt: DataFrame, probe: Callable[[DataFrame], _V]
+) -> tuple[DataFrame, _V]:
+    """One round of a checkpointed loop: ``cur`` = ``nxt`` checkpointed
+    lazily, ``value`` = ``probe(cur)``, then ``prev`` (the previous
+    round's ``cur``, or None in the first round) released.
+
+    ``probe`` must be the one driver action that materializes ``cur``
+    (the loop's convergence or election read), so a round is ONE job,
+    not a checkpoint job plus a probe job. The release comes only after
+    it: until ``cur``'s blocks exist, its plan still reads ``prev``'s,
+    and releasing them first would fail the probe."""
+    cur = nxt.localCheckpoint(eager=False)
+    value = probe(cur)
+    if prev is not None:
+        release_checkpoint(prev)
+    return cur, value
 
 
 def release_counts() -> dict[str, int]:
@@ -273,9 +309,6 @@ def bucketed_rank(
             "recomputed bucket would make the count pass and the join-back "
             "disagree — bucket by a deterministic expression"
         )
-    # lazy persist (r12, was an eager localCheckpoint): both passes
-    # read the cache, no separate materialization job, and the blocks
-    # are CacheManager-managed — released by clearCache, not driver GC
     b = df.withColumn("_rb", bucket.cast("long")).persist()
     per_b = b.groupBy(*part_cols, "_rb").agg(F.count(F.lit(1)).alias("_bc"))
     bo = F.asc("_rb") if bucket_asc else F.desc("_rb")

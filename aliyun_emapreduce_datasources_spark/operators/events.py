@@ -460,8 +460,6 @@ def events_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.to_date("ts").alias("day"), "user_id")
         .distinct()
         .persist()  # one scan+dedupe feeds spine, DAU and the fan-out
-        # (lazy, CacheManager-managed — released by clearCache, not a
-        # driver GC; no separate eager materialization job)
     )
     spine = pairs.select("day").distinct()
     wau = (
@@ -539,13 +537,9 @@ def events_interarrival_stats(
     lasts_src = evb
     if materialize:
         # with_lag feeds three consumers (in-bucket gaps, the stitch
-        # probe, and — via the same rows — the per-bucket lasts):
-        # materialize the scan + (type, bkt) sort window ONCE (lazy
-        # persist, filled by the final job) instead of once per
-        # consumer. `materialize=False` keeps the lazy plan for the
-        # plan pins (tests/test_plans.py windowspec assert). persist
-        # over localCheckpoint (r12): deterministic release via
-        # clearCache, stats kept, lineage kept.
+        # probe, and — via the same rows — the per-bucket lasts).
+        # `materialize=False` keeps the lazy plan for the plan pins
+        # (tests/test_plans.py windowspec assert).
         with_lag = with_lag.persist()
         lasts_src = with_lag
     in_gaps = with_lag.where(F.col("prev_us").isNotNull()).select(
@@ -1496,15 +1490,10 @@ def events_session_concurrency(
     if materialize:
         # the start/end union plus the two bounds consumers otherwise
         # rebuild the whole sessionize chain (events scan + user_id
-        # sort window ×2) FOUR times — materialize the session rows
-        # once (lazy persist, filled by the final job). The sessions
-        # table is |sessions| rows of four longs, far smaller than the
-        # event log it summarizes, so the cache is the cheap side of
-        # the trade at any scale (guide §2.4/§5). persist over
-        # localCheckpoint (r12): deterministic release via clearCache,
-        # and lineage is kept — an executor loss recomputes the narrow
-        # sessions partition instead of failing the job (the r11
-        # verdict's fault-tolerance concern for this table).
+        # sort window ×2) FOUR times. The sessions table is |sessions|
+        # rows of four longs, far smaller than the event log it
+        # summarizes, so the cache is the cheap side of the trade at
+        # any scale (guide §2.4/§5).
         sessions = sessions.persist()
     bounds = sessions.select(
         F.col("session_start_micro").alias("t"), F.lit(1).alias("delta")

@@ -84,12 +84,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = (
         edges.groupBy("src")
         .agg(F.collect_list("dst").alias("dsts"), F.count("*").alias("d"))
-        # lazy persist: the count() below fills the cache, so build +
-        # materialize is ONE job. persist over localCheckpoint (r12):
-        # blocks are CacheManager-managed (released deterministically
-        # by clearCache, not a driver GC) and lineage is kept — an
-        # executor loss recomputes the adjacency partition instead of
-        # failing all ITERS iterations at scale
         .persist()
     )
     n = adj.count()  # scalar: vertex cardinality (driver-safe)

@@ -615,14 +615,12 @@ def curate_v2(
     w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     deduped = gated.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
     if materialize:
-        # deduped feeds the bigram postings AND the kept-join;
-        # per feeds bstats AND the importance join — materialize each
-        # ONCE (non-eager; realized by the final job) so the corpus
-        # scan + md5 dedup window runs once, not three times
-        # (guide §2.4). A persist() form was A/B'd in r12 and was
-        # consistently ~1.3-1.7x slower isolated (columnar encode of
-        # the text-fat rows + no plan truncation for the downstream
-        # pipeline); the checkpoint stays.
+        # deduped feeds the bigram postings AND the kept-join; per
+        # feeds bstats AND the importance join. A lazy checkpoint, not
+        # the shared-subtree persist: a persist() form was A/B'd in r12
+        # and was consistently ~1.3-1.7x slower isolated (columnar
+        # encode of the text-fat rows + no plan truncation for the
+        # downstream pipeline).
         deduped = deduped.localCheckpoint(eager=False)
 
     per = (

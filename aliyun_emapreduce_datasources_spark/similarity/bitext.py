@@ -222,7 +222,6 @@ def _bitext_from_candidates(
         cands.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .persist()  # one global-topk shuffle feeds fwd, sum_x, sum_y
-        # (lazy, CacheManager-managed — clearCache-releasable, r12)
     )
     fwd = topk.where(F.col("dir") == "f").select(
         F.col("qid").alias("x"), F.col("nbr").alias("y"), "dot"

@@ -1,11 +1,11 @@
-"""Exact cosine top-k: broadcast the (small) query set against the
-(huge) corpus.
+"""Exact cosine top-k: ship the (small) query set to every partition
+of the (huge) corpus.
 
 Scale shape: the corpus side never shuffles — queries ship to every
-partition as a broadcast numpy matrix, each Arrow batch is scored with
-one BLAS matmul, and a per-batch top-k pre-reduction means only
-O(batches × queries × k) candidate rows reach the final global
-window rank. Global top-k ⊆ union of per-batch top-k, so the
+partition as a numpy matrix inside the scoring closure, each Arrow
+batch is scored with one BLAS matmul, and a per-batch top-k
+pre-reduction means only O(batches × queries × k) candidate rows
+reach the final global window rank. Global top-k ⊆ union of per-batch top-k, so the
 pre-reduction is lossless. This is the plan that scans 100 TB of
 embeddings once with constant memory per executor.
 
@@ -47,19 +47,16 @@ def topk_cosine(corpus: DataFrame, queries: DataFrame, k: int = K) -> DataFrame:
     """Exact top-k corpus neighbors per query vector (cosine).
 
     corpus: (vec_id, embedding); queries: (query_id, q_embedding) —
-    small by contract (collected once, broadcast as a matrix).
+    small by contract (collected once, shipped as a matrix).
     Deterministic tie-break on neighbor id.
     """
-    spark = corpus.sparkSession
     qrows = collect_query_batch(queries, ["query_id", "q_embedding"])
     if not qrows:
         return empty_topk(corpus.sparkSession)
     q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
     q_mat = _normalize(np.array([r.q_embedding for r in qrows], dtype=np.float64))
-    b_q = spark.sparkContext.broadcast((q_ids, q_mat))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qm = b_q.value
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -67,11 +64,11 @@ def topk_cosine(corpus: DataFrame, queries: DataFrame, k: int = K) -> DataFrame:
             c_mat = _normalize(
                 np.vstack(pdf["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
             )
-            sims = qm @ c_mat.T  # (nq, nb)
-            sims[ids[:, None] == c_ids[None, :]] = -np.inf  # mask self
+            sims = q_mat @ c_mat.T  # (nq, nb)
+            sims[q_ids[:, None] == c_ids[None, :]] = -np.inf  # mask self
             kk = min(k, sims.shape[1])
             top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            qi = np.repeat(ids, kk)
+            qi = np.repeat(q_ids, kk)
             ni = c_ids[top.ravel()]
             sv = np.take_along_axis(sims, top, axis=1).ravel()
             keep = np.isfinite(sv)

@@ -574,8 +574,7 @@ def eval_kendall_tau(
     n_rows = scored.limit(cap + 1).count()
     if n_rows > cap:
         guard.assert_probe_sized(scored, "eval_kendall_tau", cap)
-    base = scored.persist()  # one scan+score feeds both sides (lazy,
-    # CacheManager-managed — released by clearCache, not a driver GC)
+    base = scored.persist()  # one scan+score feeds both sides
     if n_blocks is None:
         n_blocks = kt_auto_blocks(n_rows)
     base = base.withColumn(

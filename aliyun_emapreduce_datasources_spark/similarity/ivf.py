@@ -138,19 +138,16 @@ def assign_clusters(
     the assignment residual 1 − cos(v, centroid) (the drift metric's
     raw material — it rides into the filed parquet so drift is a
     column-pruned aggregate later, never a re-assignment)."""
-    spark = corpus.sparkSession
-    b_c = spark.sparkContext.broadcast(centroids)
     schema = ASSIGN_RESID_SCHEMA if with_resid else ASSIGN_SCHEMA
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C = b_c.value
         for pdf in batches:
             if pdf.empty:
                 continue
             mat = _normalize(
                 np.vstack(pdf["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
             )
-            sims = mat @ C.T
+            sims = mat @ centroids.T
             cl = sims.argmax(axis=1).astype(np.int32)
             out = {
                 "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
@@ -329,7 +326,7 @@ def ivf_file_search_topk(
     """Search the MATERIALIZED inverted file: load the K centroids
     (driver-sized), compute each query's ``nprobe`` nearest clusters,
     partition-prune the file to the probed union via read_clustered,
-    and score candidates exactly like ann_ivf_topk (same broadcast
+    and score candidates exactly like ann_ivf_topk (same
     scoring kernel ⇒ identical results for the same centroids). This
     is the production read path: train/assign once (write_clustered),
     then every query batch touches nprobe/K of the bytes."""
@@ -350,9 +347,7 @@ def ivf_file_search_topk(
     joined = probed.join(F.broadcast(probe_df), "cluster").where(
         F.col("vec_id") != F.col("query_id")
     )
-    # q_mat is already normalized above — broadcast it directly
-    b_q = spark.sparkContext.broadcast((q_ids, q_mat))
-    return score_candidates(joined, b_q, k)
+    return score_candidates(joined, (q_ids, q_mat), k)
 
 
 def ann_ivf_topk(
@@ -394,9 +389,7 @@ def ann_ivf_topk(
         .where(F.col("vec_id") != F.col("query_id"))
     )
 
-    # q_mat is already normalized above — broadcast it directly
-    b_q = spark.sparkContext.broadcast((q_ids, q_mat))
-    return score_candidates(joined, b_q, k)
+    return score_candidates(joined, (q_ids, q_mat), k)
 
 
 def QUERY(spark: SparkSession, sf_dir: str) -> DataFrame:

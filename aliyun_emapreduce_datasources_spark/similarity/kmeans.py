@@ -167,9 +167,6 @@ def emb_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign+partial-sum map pass (see _assign_partials); the truncating
     ``s DIV n`` centroid division stays a Spark expression so the
     engine/oracle integer semantics cannot drift."""
-    # lazy persist: the seed collect starts filling the cache and the
-    # ITERS+1 passes reuse it (r12 — was a non-eager localCheckpoint;
-    # persist keeps lineage and is released by clearCache, not a GC)
     q = _quantized(spark, sf_dir).persist()
     seed = q.orderBy("vec_id").limit(K).collect()
     if not seed:

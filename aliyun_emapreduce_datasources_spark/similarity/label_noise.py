@@ -109,16 +109,12 @@ def exact_knn_topk(
     if shortlist != "exact":
         raise ValueError(f"exact_knn_topk: unknown shortlist mode {shortlist!r}")
 
-    # probe-size the input BEFORE checkpointing it (a mis-aimed
-    # corpus must be refused, not first materialized to local disk)
+    # probe-size the input BEFORE persisting it (a mis-aimed corpus
+    # must be refused, not first materialized)
     q = _quantized(spark, sf_dir)
     guard.assert_probe_sized(q, "exact_knn_topk", cap)
-    # ONE scan+quantize feeds both cogroup sides (lazy persist —
-    # without it each side re-reads and re-quantizes the table); the
-    # block grid is built once and broadcast to both replication joins.
-    # persist over an eager localCheckpoint (r12): no separate
-    # materialization job, and the blocks are CacheManager-managed
-    # (released deterministically by clearCache, not a driver GC)
+    # ONE scan+quantize feeds both cogroup sides; the block grid is
+    # built once and broadcast to both replication joins.
     base = (
         q.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
         .persist()
@@ -216,9 +212,10 @@ def lsh_bucket_probes(
     several consumers."""
     from aliyun_emapreduce_datasources_spark.similarity.lsh import _plane_matrix
 
-    spark = base.sparkSession
-    sc = spark.sparkContext
-    b_planes: dict = {}
+    # vector width from ONE row (bounded probe); empty corpus → empty
+    first = base.select(F.size("qe").alias("d")).limit(1).collect()
+    dim = int(first[0]["d"]) if first else 0
+    P = _plane_matrix(n_planes, n_tables, dim)
 
     def sigs_with_probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         weights = 1 << np.arange(n_planes, dtype=np.int64)
@@ -235,7 +232,6 @@ def lsh_bucket_probes(
             mat = np.vstack(
                 pdf["qe"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy()
             )
-            P = b_planes["p"].value
             bits = (mat @ P) > 0  # (n, L*B)
             sigs = (bits.reshape(len(pdf), n_tables, n_planes) * weights).sum(
                 axis=2
@@ -265,11 +261,6 @@ def lsh_bucket_probes(
                     ),
                 }
             )
-
-    # vector width from ONE row (bounded probe); empty corpus → empty
-    first = base.select(F.size("qe").alias("d")).limit(1).collect()
-    dim = int(first[0]["d"]) if first else 0
-    b_planes["p"] = sc.broadcast(_plane_matrix(n_planes, n_tables, dim))
 
     return base.select("vec_id", "qe").mapInPandas(
         sigs_with_probes, "vec_id long, tbl int, sig long, probe int"
@@ -402,10 +393,11 @@ def ivf_shortlist_knn_topk(
     fixture (coarse quantization's adversarial case — no cluster
     structure): 0.587 at soft=1 → 0.791 at the soft=2 default → 0.890
     at soft=3, vs the LSH shortlist's 0.867; pinned ≥0.7 in
-    tests/test_knn_shortlist.py. The centroid matrix is a broadcast
-    of k·dim floats — at 100 TB the inverted file is the partitioning:
-    similarity/ivf.py's write_clustered materializes the assignment
-    partitioned by cluster id and read_clustered partition-prunes a
+    tests/test_knn_shortlist.py. The centroid matrix (k·dim floats)
+    ships with the probe closure — at 100 TB the inverted file is the
+    partitioning: similarity/ivf.py's write_clustered materializes the
+    assignment partitioned by cluster id and read_clustered
+    partition-prunes a
     probe to nprobe/K of the bytes (PartitionFilters plan-asserted in
     tests/test_ivf_file.py); probe fan-out stays per-row map work."""
     from aliyun_emapreduce_datasources_spark.similarity.bruteforce import (
@@ -422,7 +414,6 @@ def ivf_shortlist_knn_topk(
             [], "vec_id long, label int, nbr long, nbr_label int, dot long, rn long"
         )
     C = train_centroids(emb, k=n_clusters)
-    b_c = spark.sparkContext.broadcast(C)
     base = _quantized(spark, sf_dir).persist()
     npb = min(max(nprobe, soft), len(C))
     soft = min(soft, npb)
@@ -436,7 +427,7 @@ def ivf_shortlist_knn_topk(
                     pdf["qe"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy()
                 )
             )
-            order = np.argsort(-(mat @ b_c.value.T), axis=1)[:, :npb]
+            order = np.argsort(-(mat @ C.T), axis=1)[:, :npb]
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             yield pd.DataFrame(
                 {

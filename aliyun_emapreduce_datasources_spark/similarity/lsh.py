@@ -144,12 +144,10 @@ def _corpus_signatures(
 ) -> DataFrame:
     """(vec_id, embedding, tbl, sig) — L rows per vector, signatures
     from one matmul per Arrow batch."""
-    spark = corpus.sparkSession
-    b_planes = spark.sparkContext.broadcast(_plane_matrix(n_planes, n_tables, dim))
+    P = _plane_matrix(n_planes, n_tables, dim)
     weights = (1 << np.arange(n_planes, dtype=np.int64))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        P = b_planes.value
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -213,8 +211,7 @@ def ann_lsh_topk(
         .dropDuplicates(["query_id", "vec_id"])
     )
 
-    b_q = spark.sparkContext.broadcast((q_ids, _normalize(q_mat)))
-    return score_candidates(joined, b_q, k)
+    return score_candidates(joined, (q_ids, _normalize(q_mat)), k)
 
 
 def QUERY(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -102,12 +102,9 @@ def train_codebooks(
 
 def encode_corpus(corpus: DataFrame, books: np.ndarray) -> DataFrame:
     """(vec_id, codes): nearest codeword per sub-space — the PQ index."""
-    spark = corpus.sparkSession
-    b_books = spark.sparkContext.broadcast(books)
+    m, _, sub = books.shape
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        B = b_books.value
-        m, _, sub = B.shape
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -117,7 +114,7 @@ def encode_corpus(corpus: DataFrame, books: np.ndarray) -> DataFrame:
             codes = np.empty((len(X), m), dtype=np.int32)
             for j in range(m):
                 Xj = X[:, j * sub : (j + 1) * sub]
-                d2 = ((Xj[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
+                d2 = ((Xj[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
                 codes[:, j] = d2.argmin(axis=1)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy(dtype=np.int64), "codes": list(codes)}
@@ -135,7 +132,6 @@ def pq_topk(
     shortlist: int = SHORTLIST,
 ) -> DataFrame:
     """Top-k per query via ADC scan over PQ codes + exact rescore."""
-    spark = corpus.sparkSession
     qrows = collect_query_batch(queries, ["query_id", "q_embedding"])
     if not qrows:
         # no queries -> no work; also skips codebook training, which
@@ -149,11 +145,9 @@ def pq_topk(
     sub = q_mat.shape[1] // m
     # ADC tables: (nq, m, ncode) — query sub-vector · every codeword
     tables = np.einsum("qjs,jcs->qjc", q_mat.reshape(len(q_mat), m, sub), books)
-    b_q = spark.sparkContext.broadcast((q_ids, tables))
+    nq = len(q_ids)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, tabs = b_q.value
-        nq = len(ids)
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -162,11 +156,11 @@ def pq_topk(
             # sims[q, b] = Σ_j tabs[q, j, C[b, j]]
             sims = np.zeros((nq, len(C)))
             for j in range(C.shape[1]):
-                sims += tabs[:, j, :][:, C[:, j]]
-            sims[ids[:, None] == c_ids[None, :]] = -np.inf
+                sims += tables[:, j, :][:, C[:, j]]
+            sims[q_ids[:, None] == c_ids[None, :]] = -np.inf
             kk = min(shortlist, sims.shape[1])
             top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            qi = np.repeat(ids, kk)
+            qi = np.repeat(q_ids, kk)
             ni = c_ids[top.ravel()]
             sv = np.take_along_axis(sims, top, axis=1).ravel()
             keep = np.isfinite(sv)
@@ -180,7 +174,7 @@ def pq_topk(
         .where(F.col("srnk") <= shortlist)
         .select("query_id", "neighbor_id")
     )
-    b_exact = spark.sparkContext.broadcast({int(r.query_id): np.asarray(r.q_embedding, dtype=np.float64) for r in qrows})
+    qmap = {int(r.query_id): np.asarray(r.q_embedding, dtype=np.float64) for r in qrows}
 
     rescored = (
         short.join(corpus.select("vec_id", "embedding"), short.neighbor_id == F.col("vec_id"))
@@ -191,7 +185,6 @@ def pq_topk(
         # vectorized: stack the batch into one matrix and do a single
         # row-wise einsum against the per-row query vectors — the
         # per-row Python loop form is interpreter-bound, not BLAS-bound
-        qmap = b_exact.value
         qids_sorted = sorted(qmap)
         qindex = {q: i for i, q in enumerate(qids_sorted)}
         qm = np.vstack([qmap[q] for q in qids_sorted])

@@ -85,17 +85,14 @@ def topk_cosine_int8(
     corpus: (vec_id, embedding) float vectors; the quantized copy is
     derived here (a real deployment reads the pre-materialized int8
     table and never scans the floats in phase 1)."""
-    spark = corpus.sparkSession
     qrows = collect_query_batch(queries, ["query_id", "q_embedding"])
     if not qrows:
         return empty_topk(corpus.sparkSession)
     q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
     q_mat = _normalize(np.array([r.q_embedding for r in qrows], dtype=np.float64))
-    b_q = spark.sparkContext.broadcast((q_ids, q_mat))
     kk_scan = k * rescore_factor
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qm = b_q.value
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -106,11 +103,11 @@ def topk_cosine_int8(
             scales = pdf["scale"].to_numpy(dtype=np.float64)
             approx = codes.astype(np.float64) * scales[:, None]  # dequantize
             approx = _normalize(approx)
-            sims = qm @ approx.T
-            sims[ids[:, None] == c_ids[None, :]] = -np.inf
+            sims = q_mat @ approx.T
+            sims[q_ids[:, None] == c_ids[None, :]] = -np.inf
             nk = min(kk_scan, sims.shape[1])
             top = np.argpartition(-sims, nk - 1, axis=1)[:, :nk]
-            qi = np.repeat(ids, nk)
+            qi = np.repeat(q_ids, nk)
             ni = c_ids[top.ravel()]
             sv = np.take_along_axis(sims, top, axis=1).ravel()
             keep = np.isfinite(sv)

@@ -2,7 +2,7 @@
 
 Every bucketed ANN variant (LSH, IVF) ends the same way: candidate
 (query_id, vec_id, embedding) rows are cosine-scored against the
-broadcast query matrix in one Arrow-batched einsum, then a per-query
+query matrix in one Arrow-batched einsum, then a per-query
 rank window keeps the top-k. One definition here keeps the five entry
 points from diverging on the qidx lookup, tie-break, or schema (a fix
 applied to one inlined copy used to need manual mirroring in the
@@ -36,14 +36,16 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-def score_candidates(joined: DataFrame, b_q, k: int) -> DataFrame:
-    """joined: (query_id, vec_id, embedding) candidate rows; b_q: a
-    broadcast of (q_ids array, L2-NORMALIZED query matrix). Returns
-    (query_id, neighbor_id, rnk) for the top-k per query, ties broken
-    by neighbor_id."""
+def score_candidates(
+    joined: DataFrame, queries: tuple[np.ndarray, np.ndarray], k: int
+) -> DataFrame:
+    """joined: (query_id, vec_id, embedding) candidate rows; queries:
+    (q_ids array, L2-NORMALIZED query matrix), shipped with the scoring
+    closure. Returns (query_id, neighbor_id, rnk) for the top-k per
+    query, ties broken by neighbor_id."""
+    ids, qm = queries
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qm = b_q.value
         index = {int(q): i for i, q in enumerate(ids)}
         for pdf in batches:
             if pdf.empty:

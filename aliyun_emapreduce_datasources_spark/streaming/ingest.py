@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,6 +35,19 @@ from aliyun_emapreduce_datasources_spark.functions.text import normalize_ws
 from aliyun_emapreduce_datasources_spark.operators.common import release_checkpoint
 
 __all__ = ["CurationIngest", "EmbeddingIngest", "NearDupIngest"]
+
+
+def _read_history(spark: SparkSession, path: str) -> DataFrame | None:
+    """The accepted store at ``path``, or None before the first batch
+    has written it. Any other read failure (a corrupt footer, a
+    permission error) raises: a batch deduplicated against no history
+    would let duplicates into the store."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 class CurationIngest:
@@ -51,12 +65,6 @@ class CurationIngest:
         self.min_tokens = min_tokens
         self.max_tokens = max_tokens
         self.seen_batches: set[int] = set()
-
-    def _existing_digests(self, spark: SparkSession) -> DataFrame | None:
-        try:
-            return spark.read.parquet(self.digest_dir)
-        except Exception:
-            return None  # first batch: no history yet
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in self.seen_batches:
@@ -85,7 +93,7 @@ class CurationIngest:
             .where(F.col("rn") == 1)
             .drop("rn")
         )
-        history = self._existing_digests(spark)
+        history = _read_history(spark, self.digest_dir)
         if history is not None:
             firsts = firsts.join(
                 history.select("digest"), "digest", "left_anti"
@@ -140,12 +148,6 @@ class EmbeddingIngest:
         self.tau = tau
         self.seen_batches: set[int] = set()
 
-    def _history(self, spark: SparkSession) -> DataFrame | None:
-        try:
-            return spark.read.parquet(self.store)
-        except Exception:
-            return None
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in self.seen_batches:
             return
@@ -159,7 +161,7 @@ class EmbeddingIngest:
             "vec_id", "embedding", hyperplane_signature("embedding").alias("sig")
         ).localCheckpoint(eager=True)  # stable ids across the two uses
 
-        history = self._history(spark)
+        history = _read_history(spark, self.store)
         near_history = None
         if history is not None:
             near_history = (
@@ -253,13 +255,6 @@ class NearDupIngest:
         self.tau = tau
         self.seen_batches: set[int] = set()
 
-    @staticmethod
-    def _read(spark: SparkSession, path: str) -> DataFrame | None:
-        try:
-            return spark.read.parquet(path)
-        except Exception:
-            return None  # first batch: no history yet
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in self.seen_batches:
             return
@@ -294,9 +289,9 @@ class NearDupIngest:
         keep_sig = with_sig.join(keepers, "doc_id")
 
         # vs history: bucket-pruned candidates, exact hash-Jaccard
-        hist_sigs = self._read(spark, self.sigs_dir)
-        hist_post = self._read(spark, self.shingles_dir)
-        hist_docs = self._read(spark, self.docs_dir)
+        hist_sigs = _read_history(spark, self.sigs_dir)
+        hist_post = _read_history(spark, self.shingles_dir)
+        hist_docs = _read_history(spark, self.docs_dir)
         if hist_sigs is not None and hist_post is not None and hist_docs is not None:
             new_bands = keep_sig.select(
                 "doc_id", F.posexplode("bands").alias("band", "bucket")

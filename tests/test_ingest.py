@@ -9,11 +9,16 @@ import json
 import os
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aliyun_emapreduce_datasources_spark.functions.text import normalize_ws
-from aliyun_emapreduce_datasources_spark.streaming.ingest import CurationIngest
+from aliyun_emapreduce_datasources_spark.streaming.ingest import (
+    CurationIngest,
+    EmbeddingIngest,
+    NearDupIngest,
+)
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -90,8 +95,6 @@ def test_embedding_ingest_rejects_near_dups_across_batches(spark, tmp_path):
     directions are accepted; replays are no-ops."""
     import numpy as np
 
-    from aliyun_emapreduce_datasources_spark.streaming.ingest import EmbeddingIngest
-
     rng = np.random.default_rng(7)
 
     def vec(seed_vec, jitter=0.0):
@@ -117,3 +120,40 @@ def test_embedding_ingest_rejects_near_dups_across_batches(spark, tmp_path):
     # replay of batch 1 is a no-op
     sink(spark.createDataFrame([(99, vec(c))], schema), 1)
     assert sorted(r.vec_id for r in sink.accepted(spark).collect()) == [1, 3, 12]
+
+
+def _files(root: str) -> list[str]:
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
+
+
+def test_unreadable_history_raises_instead_of_deduping_against_nothing(spark, tmp_path):
+    """A history store that exists but cannot be read (here a corrupt
+    footer) fails the batch: treating it as "no history yet" would
+    accept the batch's duplicates of everything already stored."""
+    cases = [
+        (CurationIngest, ["digests"], [(1, "alpha beta gamma delta epsilon")], DOCS_SCHEMA),
+        (
+            EmbeddingIngest,
+            ["accepted"],
+            [(1, [float(i % 7) - 3.0 for i in range(64)])],
+            "vec_id long, embedding array<float>",
+        ),
+        (
+            NearDupIngest,
+            ["sigs", "shingles", "docs"],
+            [(1, "the quick brown fox jumps over the lazy dog")],
+            "doc_id long, text string",
+        ),
+    ]
+    for cls, stores, rows, schema in cases:
+        root = str(tmp_path / cls.__name__)
+        sink = cls(root)
+        for store in stores:
+            os.makedirs(os.path.join(root, store))
+            with open(os.path.join(root, store, "part-0.parquet"), "wb") as fh:
+                fh.write(b"not a parquet file")
+        before = _files(root)
+        with pytest.raises(Exception, match="not a Parquet file"):
+            sink(spark.createDataFrame(rows, schema), 0)
+        assert _files(root) == before, cls.__name__
+    spark.catalog.clearCache()

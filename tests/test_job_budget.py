@@ -1,7 +1,7 @@
 """Per-entry Spark job budget for the dedup pair pipelines and their
-consumers, the checkpointed convergence loops and the ANN / embedding
-entries: a new eager action (a spare count, an extra checkpoint, a
-collect) or a lost one shows up here as a diff.
+consumers, the checkpointed convergence loops, the ANN and embedding
+entries and the source TV matrix: a new eager action (a spare count,
+an extra checkpoint, a collect) or a lost one shows up here as a diff.
 
 Each entry is built and then written to ``noop`` under a job group of
 its own; the pin is (jobs run while building, jobs run in total). The
@@ -40,6 +40,8 @@ BUDGET = {  # entry: (build jobs, build + noop write jobs)
     "dedup_bloom_decontaminate": (3, 4),
     "dedup_semantic": (1, 5),
     "emb_label_noise_knn": (3, 13),
+    # counts is an eager checkpoint (a lazy persist ran (1, 22))
+    "text_source_tv_matrix": (3, 13),
 }
 
 

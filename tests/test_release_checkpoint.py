@@ -62,7 +62,10 @@ def test_consumed_edges_released_once_after_propagation(spark, monkeypatch):
         release_checkpoint(df)
         calls.append((df is source, release_counts()["released"] - before))
 
+    # the source is released by clusters, each round's labels by
+    # common.checkpoint_step
     monkeypatch.setattr(clusters, "release_checkpoint", recording_release)
+    monkeypatch.setattr(common, "release_checkpoint", recording_release)
     got = connected_components(nodes, source, small_graph_edges=0, consume_edges=True)
     assert {r["doc_id"]: r["cluster_id"] for r in got.collect()} == want
 
