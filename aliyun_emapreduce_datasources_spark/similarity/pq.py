@@ -153,7 +153,7 @@ def pq_topk(
                 continue
             c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             C = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)  # (nb, m)
-            # sims[q, b] = Σ_j tabs[q, j, C[b, j]]
+            # sims[q, b] = Σ_j tables[q, j, C[b, j]]
             sims = np.zeros((nq, len(C)))
             for j in range(C.shape[1]):
                 sims += tables[:, j, :][:, C[:, j]]
