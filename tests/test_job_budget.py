@@ -1,6 +1,6 @@
 """Per-entry Spark job budget for the dedup pair pipelines and their
 consumers, the checkpointed convergence loops, the ANN and embedding
-entries and the source TV matrix: a new eager action (a spare count,
+entries, the source TV matrix and the media entries: a new eager action (a spare count,
 an extra checkpoint, a collect) or a lost one shows up here as a diff.
 
 Each entry is built and then written to ``noop`` under a job group of
@@ -27,6 +27,13 @@ BUDGET = {  # entry: (build jobs, build + noop write jobs)
     # persist + count, two jobs more)
     "media_image_neardup": (10, 11),
     "media_audio_neardup": (10, 11),
+    "media_mixed_neardup": (10, 11),
+    "media_video_neardup": (10, 11),
+    "media_pipeline": (1, 7),
+    "media_audio_features": (1, 3),
+    "media_video_frames": (1, 3),
+    "media_png_features": (1, 3),
+    "media_jpeg_features": (1, 3),
     "dedup_minhash_clusters": (14, 20),
     "dedup_cluster_resolve": (9, 15),
     "dedup_scrub_fixpoint": (42, 44),
