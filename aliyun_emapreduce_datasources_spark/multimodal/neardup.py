@@ -60,7 +60,6 @@ from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,9 +68,14 @@ from aliyun_emapreduce_datasources_spark.dedup.pairs import materialized_pairs
 from aliyun_emapreduce_datasources_spark.dedup.simhash import simhash_candidates
 from aliyun_emapreduce_datasources_spark.multimodal.avi import decode_avi, encode_avi
 from aliyun_emapreduce_datasources_spark.multimodal.bmp import decode_bmp, encode_bmp
-from aliyun_emapreduce_datasources_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
-from aliyun_emapreduce_datasources_spark.multimodal.media import MEDIA_SCHEMA
-from aliyun_emapreduce_datasources_spark.multimodal.png import decode_png, encode_png
+from aliyun_emapreduce_datasources_spark.multimodal.jpeg import encode_jpeg
+from aliyun_emapreduce_datasources_spark.multimodal.media import (
+    MEDIA_SCHEMA,
+    _decode_any,
+    _map_rows,
+    _media_row,
+)
+from aliyun_emapreduce_datasources_spark.multimodal.png import encode_png
 from aliyun_emapreduce_datasources_spark.multimodal.wav import decode_wav, encode_wav
 from aliyun_emapreduce_datasources_spark.operators.common import ensure_parallelism, t
 
@@ -116,7 +120,7 @@ class Codec:
     scale: int
     synth: Callable[[np.ndarray, int], bytes]  # (law cells, id) -> container
     pool: Callable[[bytes], np.ndarray]  # container -> cells[72], or refuse
-    meta: Callable[[int, bytes], dict]  # (id, container) -> meta fields
+    meta: Callable[[int, bytes], tuple]  # (id, container) -> _media_row meta fields
 
 
 def _u64(s: str) -> int:
@@ -179,16 +183,6 @@ def _pool_windows(x: np.ndarray, name: str, unit: str) -> np.ndarray:
     return (per_win.sum(axis=1) // per_win.shape[1]).astype(np.int32)
 
 
-def _meta(modality: str, fmt: str, w: int, h: int, duration_ms: int) -> dict:
-    return {
-        "modality": modality,
-        "format": fmt,
-        "width": w,
-        "height": h,
-        "duration_ms": duration_ms,
-    }
-
-
 # image: BMP, the grid scaled by (sx, sy) = (id%3+1, id%2+1)
 def _image_synth(cells: np.ndarray, mid: int) -> bytes:
     return encode_bmp(_rgb(_boxes(cells, mid % 2 + 1, mid % 3 + 1)).astype(np.uint8))
@@ -198,8 +192,8 @@ def _image_pool(payload: bytes) -> np.ndarray:
     return _pool_grid(decode_bmp(bytes(payload))[:, :, 0].astype(np.int64), "image")
 
 
-def _image_meta_row(mid: int, blob: bytes) -> dict:
-    return _meta("image", "bmp", CW * (mid % 3 + 1), CH * (mid % 2 + 1), 0)
+def _image_meta_row(mid: int, blob: bytes) -> tuple:
+    return "image", "bmp", CW * (mid % 3 + 1), CH * (mid % 2 + 1), 0
 
 
 # mixed: BMP / PNG / JPEG by id % 3; JPEG is grayscale (a color JPEG
@@ -215,18 +209,6 @@ def _mixed_synth(cells: np.ndarray, mid: int) -> bytes:
     return encode_png(px, [y % 5 for y in range(px.shape[0])])
 
 
-def _decode_any(blob: bytes) -> np.ndarray:
-    """MAGIC-BYTE dispatch: the payload says what it is, metadata is
-    not trusted, unknown magics are refused with the prefix named."""
-    if blob[:2] == b"BM":
-        return decode_bmp(blob)
-    if blob[:8] == b"\x89PNG\r\n\x1a\n":
-        return decode_png(blob)
-    if blob[:2] == b"\xff\xd8":
-        return decode_jpeg(blob)
-    raise ValueError(f"mixed decode: unknown container magic {blob[:8]!r}")
-
-
 def _mixed_pool(payload: bytes) -> np.ndarray:
     # first channel: R for the RGB legs, the gray plane for JPEG
     img = _decode_any(bytes(payload))
@@ -234,11 +216,11 @@ def _mixed_pool(payload: bytes) -> np.ndarray:
     return _pool_grid(plane.astype(np.int64), "mixed")
 
 
-def _mixed_meta_row(mid: int, blob: bytes) -> dict:
+def _mixed_meta_row(mid: int, blob: bytes) -> tuple:
     fmt = _FORMATS[mid % 3]
     if fmt == "jpeg":
-        return _meta("image", fmt, CW * _JPEG_SCALE, CH * _JPEG_SCALE, 0)
-    return _meta("image", fmt, CW * (mid % 3 + 1), CH * (mid % 2 + 1), 0)
+        return "image", fmt, CW * _JPEG_SCALE, CH * _JPEG_SCALE, 0
+    return "image", fmt, CW * (mid % 3 + 1), CH * (mid % 2 + 1), 0
 
 
 # audio: mono PCM16 WAV, each window held for _WIN_CHOICES[id % 3] samples
@@ -255,9 +237,9 @@ def _audio_pool(payload: bytes) -> np.ndarray:
     return _pool_windows(pcm[:, 0].astype(np.int64), "audio", "samples")
 
 
-def _audio_meta_row(mid: int, blob: bytes) -> dict:
+def _audio_meta_row(mid: int, blob: bytes) -> tuple:
     n_pcm = len(blob[44:]) // 2  # PCM16 samples after the canonical header
-    return _meta("audio", "wav", 0, 0, n_pcm * 1000 // SR)
+    return "audio", "wav", 0, 0, n_pcm * 1000 // SR
 
 
 # video: uncompressed AVI, each window held for id%2+1 constant frames
@@ -274,8 +256,8 @@ def _video_pool(payload: bytes) -> np.ndarray:
     return _pool_windows(frames[:, :, :, 0].astype(np.int64), "video", "frames")
 
 
-def _video_meta_row(mid: int, blob: bytes) -> dict:
-    return _meta("video", "avi", FRAME_W, FRAME_H, N_CELLS * (mid % 2 + 1) * 1000 // FPS)
+def _video_meta_row(mid: int, blob: bytes) -> tuple:
+    return "video", "avi", FRAME_W, FRAME_H, N_CELLS * (mid % 2 + 1) * 1000 // FPS
 
 
 # keyed by the catalog entry's media_<key>_neardup
@@ -294,19 +276,6 @@ CELLS_SCHEMA = T.StructType(
 )
 
 
-def _map_rows(src: DataFrame, row: Callable, schema: T.StructType) -> DataFrame:
-    """One narrow mapInPandas pass applying ``row`` to each input row;
-    ``row`` returns the output row as a tuple in ``schema`` order."""
-    cols_in, cols_out = src.columns, schema.fieldNames()
-
-    def run(batches):
-        for pdf in batches:
-            out = list(zip(*(row(*r) for r in zip(*(pdf[c] for c in cols_in)))))
-            yield pd.DataFrame(dict(zip(cols_out, out or [[]] * len(cols_out))))
-
-    return src.mapInPandas(run, schema)
-
-
 def _ids(df: DataFrame, id_col: str) -> DataFrame:
     return df.select(F.col(id_col).cast("long").alias("media_id"))
 
@@ -315,17 +284,12 @@ def attach(df: DataFrame, id_col: str, codec: Codec) -> DataFrame:
     """(media_id, payload, meta): genuine containers under the codec's
     law. Executor-side synthesis, each row independent."""
 
-    def row(mid):
+    def rows(mid):
         mid = int(mid)
         blob = _synth_row(codec, mid)
-        meta = {
-            **codec.meta(mid, blob),
-            "n_bytes": len(blob),
-            "digest": hashlib.sha256(blob).hexdigest(),
-        }
-        return mid, blob, meta
+        return [_media_row(mid, blob, *codec.meta(mid, blob))]
 
-    return _map_rows(_ids(df, id_col), row, MEDIA_SCHEMA)
+    return _map_rows(_ids(df, id_col), ("media_id",), rows, MEDIA_SCHEMA)
 
 
 def dhash_cells(media: DataFrame, codec: Codec) -> DataFrame:
@@ -333,7 +297,8 @@ def dhash_cells(media: DataFrame, codec: Codec) -> DataFrame:
     row-major; the hash itself stays JVM-side (dhash64)."""
     return _map_rows(
         media.select("media_id", "payload"),
-        lambda mid, payload: (int(mid), codec.pool(payload)),
+        ("media_id", "payload"),
+        lambda mid, payload: [(int(mid), codec.pool(payload))],
         CELLS_SCHEMA,
     )
 
@@ -346,7 +311,8 @@ def dhash_cells_fused(df: DataFrame, id_col: str, codec: Codec) -> DataFrame:
     media.wav_audio_features_fused)."""
     return _map_rows(
         _ids(df, id_col),
-        lambda mid: (int(mid), codec.pool(_synth_row(codec, int(mid)))),
+        ("media_id",),
+        lambda mid: [(int(mid), codec.pool(_synth_row(codec, int(mid))))],
         CELLS_SCHEMA,
     )
 

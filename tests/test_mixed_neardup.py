@@ -25,7 +25,7 @@ import pytest
 from neardup_helpers import assert_banded_plan, banded_pairs, sample_fps
 from pyspark.sql import functions as F
 
-from aliyun_emapreduce_datasources_spark.multimodal import neardup
+from aliyun_emapreduce_datasources_spark.multimodal import media, neardup
 from aliyun_emapreduce_datasources_spark.multimodal.jpeg import decode_jpeg
 
 MIXED = neardup.CODECS["mixed"]
@@ -88,9 +88,9 @@ def test_jpeg_leg_is_real_huffman_machinery():
 
 def test_dispatch_refuses_unknown_magic():
     with pytest.raises(ValueError, match="unknown container magic"):
-        neardup._decode_any(b"GIF89a" + b"\x00" * 64)
+        media._decode_any(b"GIF89a" + b"\x00" * 64)
     with pytest.raises(ValueError, match="unknown container magic"):
-        neardup._decode_any(b"\x00")
+        media._decode_any(b"\x00")
 
 
 def test_neardup_pairs_cross_the_container_boundary(spark, sf_dir):

@@ -4,15 +4,21 @@ real even while the codec is stubbed."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from aliyun_emapreduce_datasources_spark.multimodal.bmp import luma
+from aliyun_emapreduce_datasources_spark.multimodal.jpeg import decode_jpeg
 from aliyun_emapreduce_datasources_spark.multimodal.media import (
     FEATURES_SCHEMA,
     MEDIA_SCHEMA,
     attach_fake_media,
+    attach_jpeg_block_images,
+    attach_png_gradient_images,
     decode_features,
     frame_sample,
 )
+from aliyun_emapreduce_datasources_spark.multimodal.png import decode_png
 from aliyun_emapreduce_datasources_spark.operators.common import t
 
 
@@ -45,11 +51,25 @@ def test_decode_features_deterministic_and_complete(spark, sf_dir):
         assert n_pixels == w * h
 
 
-def test_decode_features_small_byte_budget_rechunks(spark, sf_dir):
-    media = _media(spark, sf_dir)
-    # force one-row decode chunks; output must be identical
-    small = {r.media_id for r in decode_features(media, batch_bytes=1).collect()}
-    assert len(small) == media.count()
+@pytest.mark.parametrize(
+    "attach, decode",
+    [(attach_png_gradient_images, decode_png), (attach_jpeg_block_images, decode_jpeg)],
+)
+def test_decode_features_decodes_png_and_jpeg(spark, sf_dir, attach, decode):
+    """PNG and JPEG payloads go through their real codec, not the digest
+    stub: the features equal the luma of a direct decode."""
+    media = attach(t(spark, sf_dir, "documents").limit(20), "doc_id")
+    want = {}
+    for r in media.collect():
+        img = luma(decode(bytes(r.payload)))
+        want[r.media_id] = (float(img.mean()), float(img.std()), img.size)
+    got = {
+        r.media_id: (r.mean_luma, r.std_luma, r.n_pixels)
+        for r in decode_features(media).collect()
+    }
+    assert want and got.keys() == want.keys()
+    for mid, (mean, std, n_pixels) in want.items():
+        assert got[mid] == (pytest.approx(mean), pytest.approx(std), n_pixels)
 
 
 def test_frame_sample_explodes(spark, sf_dir):
