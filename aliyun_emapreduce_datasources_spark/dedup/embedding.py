@@ -1,10 +1,18 @@
 """Embedding-cosine near-duplicate detection.
 
-Cataloged variant ``embedding_neardup_lsh`` (rows-only + recall-tested,
+Cataloged law ``embedding_neardup_lsh_portable`` (oracle-checked,
 sub-quadratic): multi-table random-hyperplane LSH blocking with exact
 cosine verification of the bucket-local candidates — the only shape
 that survives 100 TB, where exact all-pairs is O(n²) compute no matter
-how well it distributes. See its docstring for the recall arithmetic.
+how well it distributes. Every step is integer-exact, so DuckDB
+reproduces the pair set (``ORACLE_PORTABLE``).
+
+Recall < 1 by construction: a pair at cosine s collides per table
+with prob p = (1 − arccos(s)/π)^planes and across tables
+1 − (1−p)^tables (3 planes × 16 tables: ≈ 0.94 at s = 0.4, > 0.99 at
+s ≥ 0.5). ``auto_planes`` grows planes with corpus size to hold bucket
+occupancy near TARGET_BUCKET, and ``auto_tables`` grows tables to hold
+the per-pair guarantee at s = 0.5; total verify work is ~n^1.585.
 
 Exact reference ``embedding_neardup_blocked`` (oracle cross-checked in
 tests, kept OUT of the catalog): distributed block-matrix all-pairs.
@@ -32,10 +40,6 @@ Output is (vec_a, vec_b) integer pairs above the threshold; the
 similarity value itself is deliberately not exposed (BLAS vs
 sequential-fold accumulation differ in the last ulp — pair membership
 is stable, float bytes are not).
-
-True approximate scale path at 10⁹⁺ vectors (sub-quadratic, recall<1):
-block with the random-hyperplane signatures from similarity/lsh.py
-(``embedding_neardup_lsh``), then run the same matmul per bucket.
 """
 
 from __future__ import annotations
@@ -50,11 +54,9 @@ from pyspark.sql import types as T
 
 from aliyun_emapreduce_datasources_spark.operators.common import local_df, t
 from aliyun_emapreduce_datasources_spark.similarity.score import _normalize
-from aliyun_emapreduce_datasources_spark.similarity.lsh import _corpus_signatures
 
 __all__ = [
     "embedding_neardup_blocked",
-    "embedding_neardup_lsh",
     "embedding_neardup_lsh_portable",
     "auto_planes",
     "auto_tables",
@@ -183,7 +185,7 @@ def auto_tables(
     returns LSH_TABLES exactly, so all pinned small-corpus recall
     numbers are untouched; the auto-scaled regime (planes ≥ 5) is
     pinned empirically by
-    tests/test_dedup.py::test_embedding_lsh_recall_at_auto_scaled_planes
+    tests/test_embedding_portable.py::test_portable_recall_at_auto_scaled_planes
     on a 8192-vector clustered corpus."""
     import math
 
@@ -195,92 +197,9 @@ def auto_tables(
     return max(LSH_TABLES, math.ceil(math.log(miss) / math.log1p(-p)))
 
 
-def embedding_neardup_lsh(
-    spark: SparkSession,
-    sf_dir: str,
-    n_planes: int | None = None,
-    n_tables: int | None = None,
-) -> DataFrame:
-    """THE CATALOGED 100-TB PATH: multi-table random-hyperplane LSH
-    blocking; exact cosine verification runs as ONE BLAS matmul per
-    bucket (applyInPandas over (table, signature) groups), then the
-    per-table pair sets union through a distinct.
-
-    Compute is bounded by bucket occupancy — Σ_buckets |bucket|²/2 per
-    table — never global all-pairs. ``n_planes`` is the scale knob,
-    and by default it turns ITSELF: ``auto_planes`` sets
-    planes = log₂(n / TARGET_BUCKET) (floored at LSH_PLANES, so every
-    on-disk test SF keeps the recall-tuned small-corpus blocking),
-    which is what makes the candidate volume sub-quadratic at 10⁹
-    vectors — measured, not asserted: tools/scaling_curve.py records
-    5.6× verify-work growth under this prescription vs the exact
-    twin's 16.0× quadratic curve. A bucket must fit one executor task
-    (B·dim·8 bytes + B² scores) — the same contract as
-    similarity/lsh.py's ANN probe.
-
-    Recall < 1 by construction: a pair at cosine s collides per table
-    with prob (1 − arccos(s)/π)^planes and across tables
-    1 − (1−p)^tables (3 planes × 16 tables: ≈ 0.94 at s = 0.4, > 0.99
-    at s ≥ 0.5). Growing planes alone would erode this, so the table
-    count ALSO turns itself: ``auto_tables`` sizes tables to hold the
-    per-pair guarantee at s = 0.5 as planes scale (∝ (n/B)^0.585;
-    total verify work n^1.585, still far under n²). tests/test_dedup.py
-    pins both contracts on real data at the plane floor — every
-    comfortably-above-threshold pair (s ≥ 0.5) recovered, ≥ 85 %
-    overall recall against the exact blocked twin
-    ``embedding_neardup_blocked`` (the oracle-checked exact reference,
-    deliberately out of the catalog) — and re-pins BOTH at the
-    auto-scaled regime (planes = 5, auto_tables = 66) on a synthetic
-    8192-vector clustered corpus
-    (test_embedding_lsh_recall_at_auto_scaled_planes)."""
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # signatures via one numpy matmul per Arrow batch (the ANN path's
-    # _corpus_signatures) — same hyperplanes as the expression-form
-    # signature_tables (sign flips only possible on exact-zero dots,
-    # and blocking needs only internal consistency) but ~10x cheaper
-    # than 48 per-row F.aggregate folds at 3 planes x 16 tables
-    first = emb.select(F.size("embedding")).limit(1).collect()
-    if not first:  # empty corpus: no pairs, keep the output schema
-        return spark.createDataFrame([], PAIRS_SCHEMA)
-    if n_planes is None:
-        # the scale knob turns ITSELF: one count decides the plane
-        # budget (deterministic in n, so the same corpus always blocks
-        # identically; every on-disk SF resolves to LSH_PLANES, keeping
-        # all pinned recall numbers intact)
-        n_planes = auto_planes(emb.count())
-    if n_tables is None:
-        # and tables compensate planes (auto_tables) so the recall
-        # contract survives the plane growth — at the LSH_PLANES floor
-        # this is LSH_TABLES exactly
-        n_tables = auto_tables(n_planes)
-    sig = _corpus_signatures(emb, n_planes, n_tables, int(first[0][0]))
-
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": []}).astype("int64")
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        m = np.vstack(
-            pdf["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy()
-        )
-        m = _normalize(m)
-        sims = m @ m.T
-        i, j = np.nonzero(np.triu(sims >= COS_THRESHOLD, k=1))
-        a, b = ids[i], ids[j]
-        return pd.DataFrame(
-            {"vec_a": np.minimum(a, b), "vec_b": np.maximum(a, b)}
-        )
-
-    return (
-        sig.groupBy("tbl", "sig")
-        .applyInPandas(bucket_pairs, PAIRS_SCHEMA)
-        # a pair verified in several tables must surface once
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-
-
 # ---------------------------------------------------------------------------
-# Portable variant — the CATALOGED, fully hash-checked law (round-9
-# verdict ask #2, the minhash/simhash md5-promotion pattern).
+# The CATALOGED, fully hash-checked law (round-9 verdict ask #2, the
+# minhash/simhash md5-promotion pattern).
 # ---------------------------------------------------------------------------
 
 QUANT_SCALE = 1_000_000  # floor(x·1e6): the centroid/kmeans/label_noise law
@@ -314,11 +233,11 @@ def embedding_neardup_lsh_portable(
     n_planes: int | None = None,
     n_tables: int | None = None,
 ) -> DataFrame:
-    """``dedup_embedding_cosine``'s cataloged law since round 10 — the
-    same multi-table LSH-block + bucket-verify shape as
-    ``embedding_neardup_lsh``, re-expressed so EVERY arithmetic step
-    is integer-exact and engine-portable, making the whole pipeline a
-    full DuckDB value-hash oracle (round-9 verdict ask #2; the
+    """``dedup_embedding_cosine``'s cataloged law since round 10 —
+    multi-table LSH blocking with one BLAS matmul per bucket (module
+    docstring), expressed so EVERY arithmetic step is integer-exact
+    and engine-portable, making the whole pipeline a full DuckDB
+    value-hash oracle (round-9 verdict ask #2; the
     round-9 minhash/simhash promotions are the pattern):
 
     - vectors micro-quantized q_d = floor(x_d·1e6) (the established
@@ -359,9 +278,9 @@ def embedding_neardup_lsh_portable(
             T.StructField("vec_id", T.LongType()),
             # int32 lanes: |q| < 2^20 (|x| < ~8 at scale 1e6), so the
             # replicated-by-tables signature shuffle carries the same
-            # bytes per vector as the float32 embedding column the
-            # non-portable variant ships — int64 doubled it and showed
-            # up directly in the sf1 wall (NOTES_r10.md)
+            # bytes per vector as the float32 embedding column — int64
+            # doubled it and showed up directly in the sf1 wall
+            # (NOTES_r10.md)
             T.StructField("qv", T.ArrayType(T.IntegerType())),
             T.StructField("tbl", T.IntegerType()),
             T.StructField("sig", T.LongType()),

@@ -210,8 +210,7 @@ def embedding_lsh_recall_violations(spark: SparkSession, sf_dir: str) -> DataFra
     SCOPE (round-6 clarification): this is an EMPIRICAL PIN of the
     shipped deterministic corpora, not a mathematical invariant. The
     hyperplanes are fixed (since round 10: 16-bit signed slices of
-    the portable md5-64 of 't,p,d' — the quantized-law promotion; the
-    splitmix64 planes remain on the non-cataloged float variant) and
+    the portable md5-64 of 't,p,d' — the quantized-law promotion) and
     the testdata is fixed, so the outcome carries no run-to-run
     chance — emptiness, once observed, is reproducible. For an ARBITRARY corpus
     the guarantee is probabilistic: per-pair collision ≥ 1 − 1e-4 at

@@ -11,7 +11,7 @@ Every verb maps rows through one executor-side pass, ``_map_rows``
 Real decode, with the package's own pure-numpy codecs (no library):
 
 - IMAGE: BMP (multimodal/bmp.py), PNG (png.py) and JPEG (jpeg.py),
-  chosen by magic bytes (``_image_decoder``), never by metadata;
+  chosen by magic bytes (``_image_codec``), never by metadata;
   ``_decode_any`` refuses an unknown magic;
 - AUDIO: RIFF/WAVE PCM16 (wav.py);
 - VIDEO: uncompressed RIFF/AVI (avi.py).
@@ -21,8 +21,8 @@ verbs fall back to deterministic statistics derived from the bytes,
 so tests stay reproducible —
 
 - decode_features: image magic not BMP/PNG/JPEG (``_decode_image_stub``);
-- resize_media: payload not BMP (the stub pair; its real leg
-  re-encodes BMP);
+- resize_media: image magic not BMP/PNG/JPEG (the stub pair; its
+  real leg re-encodes in the payload's own container);
 - audio_features: payload not RIFF (``_decode_audio_stub``);
 - video_frame_sample: payload not RIFF/AVI (frames digested from the
   metadata digest).
@@ -174,26 +174,28 @@ def attach_bmp_media(df: DataFrame, id_col: str, seed_col: str) -> DataFrame:
     return _map_rows(src, src.columns, rows, MEDIA_SCHEMA)
 
 
-_IMAGE_CODECS = (
-    (b"BM", decode_bmp),
-    (b"\x89PNG\r\n\x1a\n", decode_png),
-    (b"\xff\xd8", decode_jpeg),
+_ImageCodec = tuple[Callable[[bytes], np.ndarray], Callable[[np.ndarray], bytes]]
+
+_IMAGE_CODECS: tuple[tuple[bytes, _ImageCodec], ...] = (
+    (b"BM", (decode_bmp, encode_bmp)),
+    (b"\x89PNG\r\n\x1a\n", (decode_png, encode_png)),
+    (b"\xff\xd8", (decode_jpeg, encode_jpeg)),
 )
 
 
-def _image_decoder(blob: bytes) -> Callable[[bytes], np.ndarray] | None:
+def _image_codec(blob: bytes) -> _ImageCodec | None:
     """MAGIC-BYTE dispatch: the payload says what it is, metadata is
-    not trusted. The BMP, PNG or JPEG decoder, or None."""
-    return next((dec for magic, dec in _IMAGE_CODECS if blob.startswith(magic)), None)
+    not trusted. The BMP, PNG or JPEG (decoder, encoder), or None."""
+    return next((c for magic, c in _IMAGE_CODECS if blob.startswith(magic)), None)
 
 
 def _decode_any(blob: bytes) -> np.ndarray:
     """Decode a BMP, PNG or JPEG payload; unknown magics are refused
     with the prefix named."""
-    decode = _image_decoder(blob)
-    if decode is None:
+    codec = _image_codec(blob)
+    if codec is None:
         raise ValueError(f"image decode: unknown container magic {blob[:8]!r}")
-    return decode(blob)
+    return codec[0](blob)
 
 
 def _decode_image(payload, width: int, height: int) -> np.ndarray:
@@ -201,10 +203,10 @@ def _decode_image(payload, width: int, height: int) -> np.ndarray:
     its real codec and the exact-integer luma; anything else falls
     back to the stub so attach_fake_media fixtures keep working."""
     blob = bytes(payload or b"")
-    decode = _image_decoder(blob)
-    if decode is None:
+    codec = _image_codec(blob)
+    if codec is None:
         return _decode_image_stub(payload, width, height)
-    return luma(decode(blob))
+    return luma(codec[0](blob))
 
 
 def _decode_image_stub(payload: bytes, width: int, height: int) -> np.ndarray:
@@ -246,25 +248,27 @@ def resize_media(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
     re-encode), preserving the binary-plus-metadata contract so the
     output is itself a media table the other verbs accept.
 
-    BMP payloads decode AND re-encode through the real codec
-    (multimodal/bmp.py) — at FULL COLOR: the resize samples the
-    decoded (h, w, 3) planes directly, so a genuine color BMP comes
-    back as a resized color BMP (the luma projection is only for the
-    feature path; round-8 review finding). Non-BMP fixture payloads
-    keep the legacy stub pair. The nearest-neighbor index sampling is
+    BMP, PNG and JPEG payloads decode AND re-encode through their own
+    container's codec (``_IMAGE_CODECS``) — at FULL COLOR: the resize
+    samples the decoded planes directly, so a genuine color image
+    comes back as a resized color image in the same format (the luma
+    projection is only for the feature path; round-8 review finding).
+    Payloads of any other magic (the attach_fake_media fixtures) keep
+    the legacy stub pair. The nearest-neighbor index sampling is
     shared by both legs. Blob bytes stay executor-side end to end.
     """
 
     def rows(mid, payload, meta):
-        is_bmp = payload is not None and bytes(payload[:2]) == b"BM"
-        if is_bmp:
-            img = decode_bmp(bytes(payload))  # (h, w, 3)
-        else:
+        blob = bytes(payload or b"")
+        codec = _image_codec(blob)
+        if codec is None:
             img = _decode_image_stub(payload, meta["width"], meta["height"])
+        else:
+            img = codec[0](blob)
         yi = np.linspace(0, img.shape[0] - 1, target_h).round().astype(int)
         xi = np.linspace(0, img.shape[1] - 1, target_w).round().astype(int)
         resized = img[np.ix_(yi, xi)]
-        out = encode_bmp(resized) if is_bmp else resized.tobytes()
+        out = resized.tobytes() if codec is None else codec[1](resized)
         return [
             _media_row(
                 mid, out, meta["modality"], meta["format"],

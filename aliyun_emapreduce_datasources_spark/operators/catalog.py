@@ -20,94 +20,14 @@ ORACLES: dict[str, str] = {}
 # CORRECTNESS_r*.json and fronts the oracle-backed entries no round
 # has officially checked yet, so the window sweeps a fresh slice each
 # round with no manual edits; once everything has a green row, the
-# remainder of the window re-confirms earlier families in merge order
-# (tpch first). Keep the number of never-checked oracle-backed entries
-# at most 50 before a round ends — new entries self-front.
-#
-# The static list below is the FALLBACK ONLY (fresh clone with no
-# CORRECTNESS files): round 2's hand-rotation, kept for reproducibility.
-_FRONT_OF_WINDOW: tuple[str, ...] = (
-    # never driver-checked in round 1 (46)
-    "events_funnel",
-    "events_error_anomaly",
-    "events_rfm",
-    "events_top_paths",
-    "events_transitions",
-    "events_retention",
-    "skew_salted_agg",
-    "skew_salted_join",
-    "mix_sample_weighted",
-    "split_train_eval",
-    "curate_end_to_end",
-    "stable_global_ids",
-    "per_source_cap",
-    "asof_join_events",
-    "doc_length_quantiles",
-    "range_join_binned",
-    "pack_sequences",
-    "dedup_exact",
-    "dedup_decontaminate",
-    "dedup_source_overlap",
-    "dedup_cluster_resolve",
-    "dedup_ngram_jaccard",
-    "dedup_dup_spans",
-    "dedup_embedding_cosine",
-    "ann_bruteforce_topk",
-    "emb_label_centroid",
-    "emb_assign_prototype",
-    "text_token_stats",
-    "text_rare_bigram_ratio",
-    "text_repetition_filter",
-    "text_quality_score",
-    "text_lang_id",
-    "text_fingerprint",
-    "text_bpe_stats",
-    "text_pii_redact",
-    "text_vocab_topk",
-    "text_tfidf_topk",
-    "kv_filter_pushdown",
-    "pyds_kv_scan",
-    "cdc_merge_apply",
-    "cdc_scd2_history",
-    "ots_col_parser",
-    "dts_decode",
-    "loghub_roundtrip",
-    "lr_scoring",
-    "media_pipeline",
-    # never-driver-checked round-2 additions (2) + representative
-    # round-1-green entries (2) → 50 total
-    "dedup_semantic",
-    "dsir_importance",
-    "q1_pricing_summary",
-    "q3_star_revenue",
-    # positions 51+: the remaining round-2 additions — checked first
-    # if the driver's window is wider than 50, rotated to the front in
-    # round 3 otherwise (see ROUND 3 ROTATION NOTE above)
-    "lm_bigram_surprise",
-    "chunk_documents",
-    "mix_epoch_plan",
-    "sketch_cms_topk",
-    "bm25_topk",
-    "curate_v2",
-    "dedup_bloom_decontaminate",
-    "dedup_minhash_clusters",
-    "ann_pq_topk",
-    "doc_length_quantiles_approx",
-    "hybrid_search_rrf",
-    "dedup_incremental",
-    "text_stratified_filter",
-    "audit_snapshot_diff",
-    "market_basket_lift",
-    "events_attribution",
-    "events_resample_hourly",
-    "rollup_grouping",
-    "tumbling_window",
-)
+# remainder of the window re-confirms earlier families stalest round
+# first. Keep the number of never-checked oracle-backed entries at
+# most 50 before a round ends — new entries self-front.
 
 
-def _last_checked_rounds() -> dict[str, int] | None:
+def _last_checked_rounds() -> dict[str, int]:
     """entry → highest round number whose CORRECTNESS_rNN.json records
-    it, or None when no driver files are readable (fresh clone)."""
+    it; empty when no driver files are readable."""
     import glob
     import json
     import os
@@ -116,11 +36,8 @@ def _last_checked_rounds() -> dict[str, int] | None:
     repo = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
-    paths = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
-    if not paths:
-        return None
     last: dict[str, int] = {}
-    for path in paths:
+    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         rnd = int(m.group(1)) if m else 0
         try:
@@ -131,78 +48,25 @@ def _last_checked_rounds() -> dict[str, int] | None:
         if isinstance(data, dict):
             for k in data:
                 last[k] = max(last.get(k, 0), rnd)
-    return last or None
-
-
-# Judge-requested re-checks (r08 verdict ask #7): entries whose family
-# deserves a fresher hash-checked row than stale-first rotation alone
-# would schedule this round. They front immediately after the
-# never-checked entries, ahead of the stale-first remainder, so the
-# bounded window is guaranteed to include them. Self-cleaning: once an
-# entry's latest CORRECTNESS row is from round _PIN_UNTIL_ROUND or
-# later, the pin is a no-op and it rotates normally.
-_PINNED_RECHECKS: tuple[str, ...] = (
-    # r09 verdict ask #1: spans.py's FIXPOINT_ORACLE_PASSES moved 8→12
-    # in round 9 (engine + oracle in lockstep, commit 1344b3b) AFTER
-    # the scrub family's latest driver rows (r07/r06) — the same
-    # freshness rule that repinned media_video_frames and the eval
-    # probes in round 9 applies: each needs a green row from the
-    # post-change plan.
-    "dedup_scrub_fixpoint",
-    "dedup_scrub_fixpoint_check",
-    "dedup_scrub_spans",
-    "dedup_scrub_intra",
-    # round 10 (r09 ask #2): dedup_embedding_cosine promoted to the
-    # portable quantized-integer law with a full DuckDB oracle — the
-    # entry and both its property companions (whose slack absorbed
-    # the quantization shift) changed engine+oracle in lockstep and
-    # need green rows from the new plan.
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh_precision_check",
-    "dedup_embedding_lsh_recall_check",
-    # round 10 (r09 ask #6): the IVF file check now exercises a
-    # build+append index (append_clustered) — new plan, needs a green
-    # row from it.
-    "ann_ivf_file_consistency_check",
-    # round 10: dedup_minhash_clusters promoted to a full oracle (md5
-    # pairs + recursive min-label CTE); its containment companion's
-    # engine changed with it — both need green rows from the new plan.
-    "dedup_minhash_clusters",
-    "dedup_minhash_cluster_containment_check",
-)
-_PIN_UNTIL_ROUND = 10
+    return last
 
 
 def _auto_front() -> list[str]:
     """Front-of-window names, auto-rotated. Order (round-3 verdict
     asks #6/#7): (1) oracle-backed entries no prior round's
     CORRECTNESS_r*.json records — new rows get their official hash
-    check first; (2) _PINNED_RECHECKS whose latest row predates
-    _PIN_UNTIL_ROUND (r08 ask #7); (3) already-green oracle-backed
-    entries, STALEST round first, so residual window slots re-confirm
-    the oldest rows instead of whichever family merges first.
-    Rows-only entries never front — the driver's bounded window spends
-    every slot on hash-checked rows. Falls back to the hand-rotated
-    static list when no driver files are readable (fresh clone, first
-    round)."""
+    check first; (2) already-green oracle-backed entries, STALEST
+    round first, so residual window slots re-confirm the oldest rows
+    instead of whichever family merges first. Rows-only entries never
+    front — the driver's bounded window spends every slot on
+    hash-checked rows. With no driver files every oracle-backed entry
+    is fresh, so the front is the oracle-backed entries in merge
+    order."""
     last = _last_checked_rounds()
-    if last is None:
-        return [k for k in _FRONT_OF_WINDOW if k in QUERIES]
     oracled = [k for k in QUERIES if k in ORACLES]
     fresh = [k for k in oracled if k not in last]
-    pinned = [
-        k
-        for k in _PINNED_RECHECKS
-        # k in QUERIES like the fresh/stale branches: a pinned name
-        # that drops out of the catalog while its oracle or old
-        # CORRECTNESS rows persist must not KeyError the module import
-        if k in QUERIES and k in ORACLES and k in last and last[k] < _PIN_UNTIL_ROUND
-    ]
-    stale_first = sorted(
-        (k for k in oracled if k in last and k not in pinned),
-        key=lambda k: last[k],
-    )
-    return fresh + pinned + stale_first
+    stale_first = sorted((k for k in oracled if k in last), key=lambda k: last[k])
+    return fresh + stale_first
 
 
 def _merge(mod) -> None:

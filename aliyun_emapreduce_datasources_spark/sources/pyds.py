@@ -138,7 +138,7 @@ def compile_filters(
 class _RowGroupSplit(InputPartition):
     path: str
     row_groups: list[int]
-    filter_json: str  # re-compiled executor-side (expressions don't pickle)
+    expr: pc.Expression | None  # the pushed filters, compiled
 
 
 class KVStoreReader(DataSourceReader):
@@ -146,15 +146,14 @@ class KVStoreReader(DataSourceReader):
         self.path = options["path"]
         self.max_splits = int(options.get("max.split.count", 32))
         self.schema = schema
-        self.pushed: list[Filter] = []
+        self.expr = None
 
     def pushFilters(self, filters: list[Filter]):  # noqa: N802 — API name
         # return (not yield) the residual: a generator would defer the
-        # self.pushed assignment past the planner's iteration
-        _, accepted, residual = compile_filters(
+        # self.expr assignment past the planner's iteration
+        self.expr, _, residual = compile_filters(
             filters, {f.name for f in self.schema.fields}
         )
-        self.pushed = accepted
         return residual
 
     def partitions(self) -> list[InputPartition]:
@@ -162,60 +161,20 @@ class KVStoreReader(DataSourceReader):
         # (TableStoreRelation max.split.count / split.size.mbs analog)
         n_rg = pq.ParquetFile(self.path).metadata.num_row_groups
         per = max(1, -(-n_rg // self.max_splits))
-        fjson = json.dumps([_filter_to_json(f) for f in self.pushed])
         return [
-            _RowGroupSplit(self.path, list(range(i, min(i + per, n_rg))), fjson)
+            _RowGroupSplit(self.path, list(range(i, min(i + per, n_rg))), self.expr)
             for i in range(0, n_rg, per)
-        ] or [_RowGroupSplit(self.path, [], fjson)]
+        ] or [_RowGroupSplit(self.path, [], self.expr)]
 
     def read(self, split: _RowGroupSplit) -> Iterator[pa.RecordBatch]:
         if not split.row_groups:
             return
-        expr = _filter_from_json(split.filter_json)
         cols = [f.name for f in self.schema.fields]
         frags = pq.ParquetFile(split.path)
         table = frags.read_row_groups(split.row_groups, columns=cols)
-        if expr is not None:
-            table = table.filter(expr)
+        if split.expr is not None:
+            table = table.filter(split.expr)
         yield from table.to_batches()
-
-
-def _filter_to_json(f: Filter) -> dict:
-    kind = type(f).__name__
-    if kind == "Not":
-        return {"kind": "Not", "child": _filter_to_json(f.child)}
-    d = {"kind": kind, "col": f.attribute[0]}
-    if kind == "In":
-        d["value"] = list(f.value)
-    elif kind not in ("IsNull", "IsNotNull"):
-        d["value"] = f.value
-    return d
-
-
-def _filter_from_json(payload: str):
-    def build(d: dict):
-        k, c = d["kind"], d.get("col")
-        if k == "Not":
-            return ~build(d["child"])
-        fld = pc.field(c)
-        return {
-            "EqualTo": lambda: fld == d["value"],
-            "GreaterThan": lambda: fld > d["value"],
-            "GreaterThanOrEqual": lambda: fld >= d["value"],
-            "LessThan": lambda: fld < d["value"],
-            "LessThanOrEqual": lambda: fld <= d["value"],
-            "In": lambda: fld.isin(d["value"]),
-            "IsNull": lambda: fld.is_null(),
-            "IsNotNull": lambda: ~fld.is_null(),
-            "StringStartsWith": lambda: pc.starts_with(fld, d["value"]),
-        }[k]()
-
-    items = json.loads(payload)
-    expr = None
-    for d in items:
-        e = build(d)
-        expr = e if expr is None else (expr & e)
-    return expr
 
 
 class KVStoreDataSource(DataSource):

@@ -4,12 +4,15 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
 
     {"metric": "catalog_total", "value": N, "unit": "sec",
-     "queries": {<slowest 10 only>}, "n_queries": 104, "sf": 0.1}
+     "queries": {<slowest 10 only>}, "n_queries": 221, "sf": 0.1}
 
 The stdout line is kept well under 2 KB (the driver captures only a
 short stdout tail — round 1 lost its official number to truncation);
 the full per-query timing map is written to BENCH_DETAIL.json next to
-this file for round-over-round diffing.
+this file for round-over-round diffing, with each entry's layer split
+under ``layers``: build_s, exec_s, jobs_build, jobs, task_s, gc_s,
+shuffle_write_bytes and spill_bytes, read from Spark's status store by
+perfbench's tracer.
 
 Each query is executed to completion with a noop sink (full plan runs,
 nothing is collected to the driver — the 100 TB-honest measurement).
@@ -21,89 +24,118 @@ import json
 import os
 import re
 import sys
-import time
+import uuid
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from aliyun_emapreduce_datasources_spark.operators.catalog import QUERIES
 from aliyun_emapreduce_datasources_spark.session import get_session
+from perfbench.harness import STAGE_COUNTERS, Tracer, plan_seconds
+
+# a JVM GC every GC_EVERY entries: unreferenced localCheckpoint blocks
+# are only enqueued for ContextCleaner on a JVM GC; without one the
+# sweep measures earlier entries' heap debt (observed as a 2-4x
+# inflation of late-alphabet entries)
+GC_EVERY = 20
+
+
+def noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM, parquet footers and the Python/Arrow worker pool
+    once, so per-query numbers measure execution, not first-touch
+    JIT/metadata or pyspark-worker fork costs."""
+    noop(QUERIES["q6_forecast_revenue"](spark, sf_dir))
+    noop(QUERIES["lr_scoring"](spark, sf_dir))
+    # JSON codec codegen (to_json/from_json JIT) — one tiny row
+    noop(spark.sql("SELECT from_json(to_json(named_struct('a', 1)), 'a int')"))
+    # Python DataSource planning/read workers (emrkv scan path)
+    noop(QUERIES["pyds_kv_scan"](spark, sf_dir))
+
+
+def run_entry(tracer: Tracer, name: str, sf_dir: str, plan: bool = False):
+    """Build entry ``name`` and write it to noop, each inside a span of
+    the enabled ``tracer``. Returns the layer record (the two spans'
+    seconds, the build's and the total job count, the summed stage
+    counters) and the query's ``explain("formatted")`` or None. With
+    ``plan``, the query is planned once more between the spans, which
+    is part of neither: the record gets ``plan_s`` and the plan text is
+    taken before the write runs."""
+    with tracer.span(f"{name}:build") as build:
+        df = QUERIES[name](tracer.spark, sf_dir)
+    rec, text = {}, None
+    if plan:
+        rec["plan_s"] = plan_seconds(df)
+        text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    with tracer.span(f"{name}:exec") as run:
+        noop(df)
+    rec.update(build_s=build.seconds, exec_s=run.seconds, jobs_build=build.counters["jobs"])
+    for k in STAGE_COUNTERS:
+        rec[k] = build.counters[k] + run.counters[k]
+    return {
+        k: int(v) if k.startswith("jobs") or k.endswith("bytes") else round(v, 4)
+        for k, v in rec.items()
+    }, text
+
+
+def detail(timings: dict[str, float], layers: dict[str, dict], sf: float | None) -> dict:
+    """The BENCH_DETAIL.json record (tools/bench_diff.py and
+    tools/sf1_exponents.py read ``queries``)."""
+    return {
+        "metric": "catalog_total",
+        "value": round(sum(timings.values()), 4),
+        "unit": "sec",
+        "queries": timings,
+        "layers": layers,
+        "n_queries": len(timings),
+        "sf": sf,
+    }
+
+
+def sf_of(sf_dir: str) -> float | None:
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    return float(m.group(1)) if m else None
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
     spark = get_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    warm_up(spark, sf_dir)
 
-    # warm the JVM + parquet footers + Python/Arrow worker pool once so
-    # per-query numbers measure execution, not first-touch JIT/metadata
-    # or pyspark-worker fork costs
-    QUERIES["q6_forecast_revenue"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    QUERIES["lr_scoring"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # JSON codec codegen (to_json/from_json JIT) — one tiny row
-    spark.sql(
-        "SELECT from_json(to_json(named_struct('a', 1)), 'a int')"
-    ).write.format("noop").mode("overwrite").save()
-    # Python DataSource planning/read workers (emrkv scan path)
-    QUERIES["pyds_kv_scan"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # GC cadence between entries. The default (every 20) was tuned at
-    # sf0.1; at the sf1 fixture each entry's heap debt is ~10x larger
-    # and un-GC'd localCheckpoint/broadcast blocks from one entry
-    # measurably inflate the NEXT entries (r09: the embedding-LSH
-    # family read 19-20 s mid-sweep vs 11-13 s with per-entry GC —
-    # same code, same data). Exponent-record sweeps therefore run with
-    # SPARK_GRAFT_BENCH_GC_EVERY=1 so each entry measures its own
-    # plan; the official sf0.1 sweep keeps the cheap default.
-    # 0 reads as "never GC" and a silent max(1,...) clamp would give
-    # the OPPOSITE (per-entry GC, the most aggressive cadence — r09
-    # ADVICE); honor 0 as disable, reject negatives loudly
-    gc_every = int(os.environ.get("SPARK_GRAFT_BENCH_GC_EVERY", "20"))
-    if gc_every < 0:
-        raise SystemExit(
-            f"SPARK_GRAFT_BENCH_GC_EVERY={gc_every}: must be >= 0 "
-            "(0 disables inter-entry GC, N>=1 collects every N entries)"
-        )
+    tracer = Tracer(spark, True, f"bench-{uuid.uuid4().hex[:8]}")
     timings: dict[str, float] = {}
-    for i, (name, fn) in enumerate(sorted(QUERIES.items())):
-        start = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - start, 4)
+    layers: dict[str, dict] = {}
+    for i, name in enumerate(sorted(QUERIES)):
+        rec, _ = run_entry(tracer, name, sf_dir)
+        timings[name] = round(rec["build_s"] + rec["exec_s"], 4)
+        layers[name] = rec
         # entries that persist() intermediates (signature tables, pair
         # lists) would otherwise accumulate in the executor heap across
         # the sweep — later entries then measure the earlier entries'
         # GC pressure, not their own plan (r01->r02 diffs showed ±4s
         # noise on untouched queries from exactly this)
         spark.catalog.clearCache()
-        if gc_every and i % gc_every == gc_every - 1:
-            # unreferenced localCheckpoint/broadcast blocks are only
-            # enqueued for ContextCleaner on a JVM GC; without one the
-            # sweep measures earlier entries' heap debt (observed as a
-            # 2-4x inflation of late-alphabet entries)
+        if i % GC_EVERY == GC_EVERY - 1:
             spark.sparkContext._jvm.System.gc()
 
-    detail = {
-        "metric": "catalog_total",
-        "value": round(sum(timings.values()), 4),
-        "unit": "sec",
-        "queries": timings,
-        "n_queries": len(timings),
-        "sf": sf,
-    }
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"), "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
+    out = detail(timings, layers, sf_of(sf_dir))
+    with open(os.path.join(REPO, "BENCH_DETAIL.json"), "w") as f:
+        json.dump(out, f, indent=1, sort_keys=True)
 
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
     print(
         json.dumps(
             {
                 "metric": "catalog_total",
-                "value": detail["value"],
+                "value": out["value"],
                 "unit": "sec",
                 "queries": slowest,
                 "n_queries": len(timings),
-                "sf": sf,
+                "sf": out["sf"],
             }
         )
     )

@@ -96,7 +96,6 @@ SLOW_FILES = {
 
 SLOW_TESTS = {
     # measured >=5 s in the r12 full-suite durations record
-    "test_dedup.py::test_embedding_lsh_recall_at_auto_scaled_planes",
     "test_bucketed_rank_random.py::test_bucketed_rank_matches_raw_window",
     "test_pipeline.py::test_connected_components_random_differential",
     "test_label_noise_random.py::test_label_noise_matches_reference",

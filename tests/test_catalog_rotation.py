@@ -18,7 +18,6 @@ def test_live_catalog_window_is_all_oracled():
 
 
 def test_auto_front_orders_fresh_then_stalest(monkeypatch):
-    monkeypatch.setattr(catalog, "_PINNED_RECHECKS", ())
     order = list(catalog.QUERIES)
     oracled = [n for n in order if n in catalog.ORACLES]
     assert len(oracled) >= 4
@@ -40,36 +39,11 @@ def test_auto_front_orders_fresh_then_stalest(monkeypatch):
     assert rest == [n for n in oracled if n not in (fresh, stale_old, stale_new)]
 
 
-def test_auto_front_fallback_without_driver_files(monkeypatch):
-    monkeypatch.setattr(catalog, "_last_checked_rounds", lambda: None)
+def test_auto_front_without_driver_files_is_merge_order(monkeypatch):
+    """No CORRECTNESS file: every oracle-backed entry is fresh, so the
+    front is the oracle-backed entries in merge order."""
+    merged = list(reversed(catalog.QUERIES))  # any merge order
+    monkeypatch.setattr(catalog, "QUERIES", dict.fromkeys(merged))
+    monkeypatch.setattr(catalog, "_last_checked_rounds", dict)
     front = catalog._auto_front()
-    assert front == [n for n in catalog._FRONT_OF_WINDOW if n in catalog.QUERIES]
-
-
-def test_pinned_rechecks_front_until_target_round(monkeypatch):
-    """r08 verdict ask #7: pinned re-checks jump the stale-first queue
-    while their latest row predates _PIN_UNTIL_ROUND, then the pin
-    self-cleans (no-op once a row at/after the target round exists)."""
-    order = list(catalog.QUERIES)
-    oracled = [n for n in order if n in catalog.ORACLES]
-    pin_a, pin_b = oracled[5], oracled[6]
-    monkeypatch.setattr(catalog, "_PINNED_RECHECKS", (pin_a, pin_b))
-    monkeypatch.setattr(catalog, "_PIN_UNTIL_ROUND", 9)
-    fresh = oracled[0]
-    fake_last = {n: 8 for n in oracled if n != fresh}
-    fake_last[pin_a] = 7
-    fake_last[pin_b] = 5
-    monkeypatch.setattr(catalog, "_last_checked_rounds", lambda: fake_last)
-    front = catalog._auto_front()
-    # never-checked first, then the pins in declaration order, then
-    # the stale-first remainder (which must not repeat the pins)
-    assert front[:3] == [fresh, pin_a, pin_b]
-    assert front.count(pin_a) == 1 and front.count(pin_b) == 1
-    # self-clean: a row at the target round drops the pin back into
-    # normal stale-first rotation
-    fake_last[pin_a] = 9
-    fake_last[pin_b] = 9
-    front2 = catalog._auto_front()
-    assert front2[0] == fresh
-    assert set(front2[1:3]) != {pin_a, pin_b}
-    assert front2.count(pin_a) == 1 and front2.count(pin_b) == 1
+    assert front == [n for n in merged if n in catalog.ORACLES]

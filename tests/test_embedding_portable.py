@@ -120,11 +120,12 @@ def test_portable_oracle_parity_sf0001(spark):
 
 
 def test_portable_recall_at_auto_scaled_planes(spark, tmp_path):
-    """The portable twin of test_dedup.py::
-    test_embedding_lsh_recall_at_auto_scaled_planes — same 8192-vector
-    clustered corpus, same contracts, against the QUANTIZED exact
-    ground truth the portable law defines (plus the float s ≥ 0.5
-    recall floor, which quantization cannot erode at 0.1 of margin)."""
+    """The recall contracts at the AUTO-SCALED knob settings, not just
+    the 3-plane floor: a synthetic 8192-vector clustered corpus makes
+    auto_planes return 5 (and auto_tables 66), checked against the
+    QUANTIZED exact ground truth the portable law defines (plus the
+    float s ≥ 0.5 recall floor, which quantization cannot erode at 0.1
+    of margin)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -11,6 +11,8 @@ cold and a warm pass on the same session.
 
 from __future__ import annotations
 
+import importlib.util
+import os
 import uuid
 
 import pytest
@@ -72,3 +74,22 @@ def test_entry_job_budget(spark, sf_dir, name):
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.catalog.clearCache()
     assert (built, total) == BUDGET[name]
+
+
+def _profile_tool():
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "profile_entries", os.path.join(repo, "tools", "profile_entries.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize("name", ["dedup_simhash", "text_source_tv_matrix", "ann_pq_topk"])
+def test_profile_tool_counts_the_budget(spark, sf_dir, name):
+    """tools/profile_entries.py's per-entry record (perfbench's tracer spans
+    around build and noop write) counts the jobs pinned above."""
+    rec, jobs, _ = _profile_tool().profile_entry(spark, name, sf_dir, reps=1)
+    assert (rec["jobs_build"], rec["jobs"]) == BUDGET[name]
+    assert len(jobs) == rec["jobs"]

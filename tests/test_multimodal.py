@@ -17,6 +17,7 @@ from aliyun_emapreduce_datasources_spark.multimodal.media import (
     attach_png_gradient_images,
     decode_features,
     frame_sample,
+    resize_media,
 )
 from aliyun_emapreduce_datasources_spark.multimodal.png import decode_png
 from aliyun_emapreduce_datasources_spark.operators.common import t
@@ -103,6 +104,26 @@ def test_resize_media_round_trips_contract(spark, sf_dir):
     d1 = {r.media_id: r.meta.digest for r in rows}
     d2 = {r.media_id: r.meta.digest for r in resize_media(media, 8, 6).collect()}
     assert d1 == d2
+
+
+@pytest.mark.parametrize(
+    "attach, decode, fmt",
+    [
+        (attach_png_gradient_images, decode_png, "png"),
+        (attach_jpeg_block_images, decode_jpeg, "jpeg"),
+    ],
+)
+def test_resize_media_reencodes_png_and_jpeg(spark, sf_dir, attach, decode, fmt):
+    """A PNG or JPEG payload is resized through its real codec and
+    comes back in its own container at the target shape, not as
+    headerless stub pixels."""
+    docs = t(spark, sf_dir, "documents").limit(3)
+    rows = resize_media(attach(docs, "doc_id"), 4, 3).collect()
+    assert rows
+    for r in rows:
+        assert decode(bytes(r.payload)).shape[:2] == (3, 4)
+        assert r.meta.format == fmt
+        assert (r.meta.width, r.meta.height) == (4, 3)
 
 
 def test_audio_features_deterministic_and_framed(spark, sf_dir):
