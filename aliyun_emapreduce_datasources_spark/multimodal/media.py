@@ -21,8 +21,10 @@ verbs fall back to deterministic statistics derived from the bytes,
 so tests stay reproducible —
 
 - decode_features: image magic not BMP/PNG/JPEG (``_decode_image_stub``);
-- resize_media: image magic not BMP/PNG/JPEG (the stub pair; its
-  real leg re-encodes in the payload's own container);
+- resize_media: image magic not BMP/PNG/JPEG (the stub decoder; the
+  resized stub pixels leave as a BMP, so no later verb dispatches on
+  raw pixel bytes; the real leg re-encodes in the payload's own
+  container);
 - audio_features: payload not RIFF (``_decode_audio_stub``);
 - video_frame_sample: payload not RIFF/AVI (frames digested from the
   metadata digest).
@@ -176,8 +178,9 @@ def attach_bmp_media(df: DataFrame, id_col: str, seed_col: str) -> DataFrame:
 
 _ImageCodec = tuple[Callable[[bytes], np.ndarray], Callable[[np.ndarray], bytes]]
 
+_BMP: _ImageCodec = (decode_bmp, encode_bmp)
 _IMAGE_CODECS: tuple[tuple[bytes, _ImageCodec], ...] = (
-    (b"BM", (decode_bmp, encode_bmp)),
+    (b"BM", _BMP),
     (b"\x89PNG\r\n\x1a\n", (decode_png, encode_png)),
     (b"\xff\xd8", (decode_jpeg, encode_jpeg)),
 )
@@ -253,25 +256,28 @@ def resize_media(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
     samples the decoded planes directly, so a genuine color image
     comes back as a resized color image in the same format (the luma
     projection is only for the feature path; round-8 review finding).
-    Payloads of any other magic (the attach_fake_media fixtures) keep
-    the legacy stub pair. The nearest-neighbor index sampling is
+    Payloads of any other magic (the attach_fake_media fixtures) go
+    through the stub decoder and leave as a BMP of the resized stub
+    pixels: headerless pixels would be dispatched by their first bytes,
+    and a plane that starts with a BMP, JPEG or PNG magic would go to
+    a real codec and raise. The nearest-neighbor index sampling is
     shared by both legs. Blob bytes stay executor-side end to end.
     """
 
     def rows(mid, payload, meta):
         blob = bytes(payload or b"")
-        codec = _image_codec(blob)
+        codec, fmt = _image_codec(blob), meta["format"]
         if codec is None:
             img = _decode_image_stub(payload, meta["width"], meta["height"])
+            codec, fmt = _BMP, "bmp"
         else:
             img = codec[0](blob)
         yi = np.linspace(0, img.shape[0] - 1, target_h).round().astype(int)
         xi = np.linspace(0, img.shape[1] - 1, target_w).round().astype(int)
-        resized = img[np.ix_(yi, xi)]
-        out = resized.tobytes() if codec is None else codec[1](resized)
+        out = codec[1](img[np.ix_(yi, xi)])
         return [
             _media_row(
-                mid, out, meta["modality"], meta["format"],
+                mid, out, meta["modality"], fmt,
                 target_w, target_h, meta["duration_ms"],
             )
         ]

@@ -12,7 +12,8 @@ the full per-query timing map is written to BENCH_DETAIL.json next to
 this file for round-over-round diffing, with each entry's layer split
 under ``layers``: build_s, exec_s, jobs_build, jobs, task_s, gc_s,
 shuffle_write_bytes and spill_bytes, read from Spark's status store by
-perfbench's tracer.
+perfbench's tracer, and compiles, the Janino compilations the entry
+paid (a generated-class cache miss each).
 
 Each query is executed to completion with a noop sink (full plan runs,
 nothing is collected to the driver — the 100 TB-honest measurement).
@@ -47,44 +48,70 @@ def noop(df) -> None:
 def warm_up(spark, sf_dir: str) -> None:
     """Warm the JVM, parquet footers and the Python/Arrow worker pool
     once, so per-query numbers measure execution, not first-touch
-    JIT/metadata or pyspark-worker fork costs."""
-    noop(QUERIES["q6_forecast_revenue"](spark, sf_dir))
-    noop(QUERIES["lr_scoring"](spark, sf_dir))
+    JIT/metadata or pyspark-worker fork costs. An entry whose table
+    ``sf_dir`` lacks is left out (tools/gen_scaled_fixture.py writes
+    only documents, embeddings and events)."""
+
+    def warm(name: str, table: str) -> None:
+        if os.path.exists(os.path.join(sf_dir, f"{table}.parquet")):
+            noop(QUERIES[name](spark, sf_dir))
+
+    warm("q6_forecast_revenue", "lineitem")
+    warm("lr_scoring", "embeddings")
     # JSON codec codegen (to_json/from_json JIT) — one tiny row
     noop(spark.sql("SELECT from_json(to_json(named_struct('a', 1)), 'a int')"))
     # Python DataSource planning/read workers (emrkv scan path)
-    noop(QUERIES["pyds_kv_scan"](spark, sf_dir))
+    warm("pyds_kv_scan", "documents")
+
+
+def compile_count(spark) -> int:
+    """Janino compilations so far in this JVM: the count of Spark's
+    ``CodegenMetrics.METRIC_COMPILATION_TIME`` histogram. A class
+    served from the generated-class cache is not counted."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def run_entry(tracer: Tracer, name: str, sf_dir: str, plan: bool = False):
     """Build entry ``name`` and write it to noop, each inside a span of
     the enabled ``tracer``. Returns the layer record (the two spans'
     seconds, the build's and the total job count, the summed stage
-    counters) and the query's ``explain("formatted")`` or None. With
-    ``plan``, the query is planned once more between the spans, which
-    is part of neither: the record gets ``plan_s`` and the plan text is
-    taken before the write runs."""
+    counters, the Janino compilations inside the two spans) and the
+    query's ``explain("formatted")`` or None. With ``plan``, the query
+    is planned once more between the spans, which is part of neither:
+    the record gets ``plan_s`` and the plan text is taken before the
+    write runs."""
+    spark = tracer.spark
+    c0 = compile_count(spark)
     with tracer.span(f"{name}:build") as build:
-        df = QUERIES[name](tracer.spark, sf_dir)
+        df = QUERIES[name](spark, sf_dir)
+    compiles = compile_count(spark) - c0
     rec, text = {}, None
     if plan:
         rec["plan_s"] = plan_seconds(df)
         text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    c0 = compile_count(spark)
     with tracer.span(f"{name}:exec") as run:
         noop(df)
+    compiles += compile_count(spark) - c0
     rec.update(build_s=build.seconds, exec_s=run.seconds, jobs_build=build.counters["jobs"])
     for k in STAGE_COUNTERS:
         rec[k] = build.counters[k] + run.counters[k]
+    rec["compiles"] = compiles
     return {
         k: int(v) if k.startswith("jobs") or k.endswith("bytes") else round(v, 4)
         for k, v in rec.items()
     }, text
 
 
-def detail(timings: dict[str, float], layers: dict[str, dict], sf: float | None) -> dict:
+def detail(
+    timings: dict[str, float], layers: dict[str, dict], sf: float | None, reps: int = 1
+) -> dict:
     """The BENCH_DETAIL.json record (tools/bench_diff.py and
-    tools/sf1_exponents.py read ``queries``)."""
+    tools/sf1_exponents.py read ``queries``); ``reps`` is how many runs
+    each time is the minimum of (a bench.py sweep runs each entry once)."""
     return {
+        "reps": reps,
         "metric": "catalog_total",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from aliyun_emapreduce_datasources_spark.multimodal.bmp import luma
+from aliyun_emapreduce_datasources_spark.multimodal.bmp import decode_bmp, luma
 from aliyun_emapreduce_datasources_spark.multimodal.jpeg import decode_jpeg
 from aliyun_emapreduce_datasources_spark.multimodal.media import (
     FEATURES_SCHEMA,
@@ -88,15 +88,16 @@ def test_frame_sample_explodes(spark, sf_dir):
 
 def test_resize_media_round_trips_contract(spark, sf_dir):
     """resize output must be a valid media table: target dims in meta,
-    payload = w*h stub pixels, digest consistent, and decodable again
-    by the downstream verbs (chained decode_features)."""
+    payload = a BMP of the w*h stub pixels, digest consistent, and
+    decodable again by the downstream verbs (chained decode_features)."""
     from aliyun_emapreduce_datasources_spark.multimodal.media import resize_media
 
     media = _media(spark, sf_dir)
     small = resize_media(media, target_w=8, target_h=6)
     rows = small.collect()
     assert rows and all(r.meta.width == 8 and r.meta.height == 6 for r in rows)
-    assert all(len(r.payload) == 8 * 6 == r.meta.n_bytes for r in rows)
+    assert all(r.meta.format == "bmp" and len(r.payload) == r.meta.n_bytes for r in rows)
+    assert all(decode_bmp(bytes(r.payload)).shape == (6, 8, 3) for r in rows)
     # chained: the resized table feeds decode_features unchanged
     feats = {r.media_id: r.n_pixels for r in decode_features(small).collect()}
     assert set(feats.values()) == {48}
@@ -124,6 +125,23 @@ def test_resize_media_reencodes_png_and_jpeg(spark, sf_dir, attach, decode, fmt)
         assert decode(bytes(r.payload)).shape[:2] == (3, 4)
         assert r.meta.format == fmt
         assert (r.meta.width, r.meta.height) == (4, 3)
+
+
+def test_resize_media_stub_output_is_not_dispatched_on_pixel_bytes(spark):
+    """A stub-resized plane whose first bytes are the JPEG magic (the
+    payload ``p29852`` at 16x16 resized to 8x6) decodes downstream as
+    the BMP it is, not as a JPEG: as headerless pixels it made
+    decode_features raise ``decode_jpeg: expected marker at byte 2``."""
+    media = spark.createDataFrame(
+        [(1, bytearray(b"p29852"), ("image", "fake", 16, 16, 0, 6, "d"))],
+        MEDIA_SCHEMA,
+    )
+    small = resize_media(media, 8, 6)
+    feats = decode_features(small).head()
+    plane = luma(decode_bmp(bytes(small.head().payload)))
+    assert plane.tobytes()[:2] == b"\xff\xd8"
+    assert feats.n_pixels == 48
+    assert feats.mean_luma == pytest.approx(float(plane.mean()))
 
 
 def test_audio_features_deterministic_and_framed(spark, sf_dir):

@@ -9,8 +9,10 @@ warm-up, with no names every entry. Each rep builds the entry and
 writes it to noop inside perfbench tracer spans (bench.run_entry),
 then clears the cache and runs a JVM GC. For the fastest rep it prints
 the wall time (build + exec) and its split: build_s, plan_s, exec_s,
-jobs (build, total), task_s, gc_s, shuffle_write_bytes, spill_bytes,
-and the rep's jobs with their call sites and durations.
+jobs (build, total), compiles (Janino compilations), task_s, gc_s,
+shuffle_write_bytes, spill_bytes, and the rep's jobs with their call
+sites and durations. Only the warm-up entries whose tables the fixture
+holds run, so a tools/gen_scaled_fixture.py fixture works too.
 
 ``--out`` writes the min-of-N times and splits in the BENCH_DETAIL.json
 shape (tools/bench_diff.py and tools/sf1_exponents.py read it);
@@ -92,7 +94,8 @@ def main() -> None:
         print(
             f"{name}  wall {min(walls):.3f} s (reps {'/'.join(f'{w:.2f}' for w in walls)})"
             f"  build {rec['build_s']:.3f}  plan {rec['plan_s']:.3f}  exec {rec['exec_s']:.3f}"
-            f"  jobs {rec['jobs_build']}/{rec['jobs']}  task {rec['task_s']:.2f} s"
+            f"  jobs {rec['jobs_build']}/{rec['jobs']}  compiles {rec['compiles']}"
+            f"  task {rec['task_s']:.2f} s"
             f"  gc {rec['gc_s']:.2f} s  shuffle_write {rec['shuffle_write_bytes']} B"
             f"  spill {rec['spill_bytes']} B",
             flush=True,
@@ -101,7 +104,7 @@ def main() -> None:
             print(f"    job {jid:5d} {secs:7.3f} s  {site}", flush=True)
 
     if args.out:
-        out = bench.detail(timings, layers, bench.sf_of(sf_dir))
+        out = bench.detail(timings, layers, bench.sf_of(sf_dir), args.n)
         with open(args.out, "w") as f:
             json.dump(out, f, indent=1, sort_keys=True)
 
