@@ -25,9 +25,10 @@ Design notes (100 TB target, tested on local[32]):
   A bench.py sweep (221 entries at sf0.1, same host) needs 2,758
   distinct classes. With 2,000 it compiled 2,774 (4,125 with the
   default) and ended at 210 MB of metaspace against 194 MB, about
-  8 KB per class kept; JVM GC time was 9.2 s against 7.7 s and
-  in-task GC 4.5 s against 5.6 s, one 357 s sweep each. 2,000 holds
-  ten times a catalog_mix pass for about 16 MB.
+  8 KB per class kept. JVM GC time over two sweeps each was 9.2 and
+  11.1 s against 7.7 and 10.6 s, less than either side's own
+  sweep-to-sweep spread. 2,000 holds ten times a catalog_mix pass for
+  about 16 MB.
 - No Python call-site capture per Column operator
   (``spark.python.sql.dataFrameDebugging.enabled=false``). pyspark 4
   records the Python call site of every Column operator and sends it
