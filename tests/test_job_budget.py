@@ -46,6 +46,11 @@ BUDGET = {  # entry: (build jobs, build + noop write jobs)
     "ann_ivf_topk": (3, 6),
     "ann_int8_topk": (2, 7),
     "ann_pq_topk": (3, 7),
+    # the companions' variant builds run on pool threads outside the
+    # job group, so only their own jobs count
+    "ann_rank_consistency_check": (1, 17),
+    "ann_ivf_file_consistency_check": (21, 30),
+    "ann_ivf_drift_check": (16, 24),
     "dedup_bloom_decontaminate": (3, 4),
     "dedup_semantic": (1, 5),
     "emb_label_noise_knn": (3, 13),
