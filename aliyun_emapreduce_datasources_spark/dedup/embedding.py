@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aliyun_emapreduce_datasources_spark.operators.common import local_df, t
-from aliyun_emapreduce_datasources_spark.similarity.score import _normalize
+from aliyun_emapreduce_datasources_spark.similarity.score import _matrix, _normalize
 
 __all__ = [
     "embedding_neardup_blocked",
@@ -106,10 +106,8 @@ def embedding_neardup_blocked(
             return pd.DataFrame({"vec_a": [], "vec_b": []}).astype("int64")
         ids_a = pa["vec_id"].to_numpy(dtype=np.int64)
         ids_b = pb["vec_id"].to_numpy(dtype=np.int64)
-        ma = np.vstack(pa["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
-        mb = np.vstack(pb["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
-        ma = _normalize(ma)
-        mb = _normalize(mb)
+        ma = _normalize(_matrix(pa["embedding"]))
+        mb = _normalize(_matrix(pb["embedding"]))
         sims = ma @ mb.T
         i, j = np.nonzero(sims >= COS_THRESHOLD)
         a, b = ids_a[i], ids_b[j]
@@ -291,11 +289,7 @@ def embedding_neardup_lsh_portable(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.vstack(
-                pdf["embedding"]
-                .map(lambda a: np.asarray(a, dtype=np.float64))
-                .to_numpy()
-            )
+            mat = _matrix(pdf["embedding"])
             q = np.floor(mat * QUANT_SCALE)  # exact ints in float64
             # Exactness envelope guard (r10 advice): the portable law
             # is engine==oracle only while every downstream product
@@ -337,9 +331,7 @@ def embedding_neardup_lsh_portable(
         if len(pdf) < 2:
             return pd.DataFrame({"vec_a": [], "vec_b": []}).astype("int64")
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        q = np.vstack(
-            pdf["qv"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy()
-        )
+        q = _matrix(pdf["qv"])
         dots = q @ q.T  # < 2^45: exact integers in float64
         n2 = np.einsum("ij,ij->i", q, q)  # < 2^45: exact
         i, j = np.nonzero(np.triu(dots > 0, k=1))

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from aliyun_emapreduce_datasources_spark.operators.common import t
-from aliyun_emapreduce_datasources_spark.similarity.score import _normalize
+from aliyun_emapreduce_datasources_spark.similarity.score import _matrix, _normalize
 from aliyun_emapreduce_datasources_spark.similarity.ivf import (
     assign_clusters,
     train_centroids,
@@ -67,10 +67,7 @@ def semantic_prune(clustered: DataFrame, cluster_col: str, tau: float = TAU) -> 
             return pd.DataFrame({"vec_id": [], "cluster_size": []}).astype("int64")
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        mat = np.vstack(
-            pdf["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy()
-        )
-        mat = _normalize(mat)
+        mat = _normalize(_matrix(pdf["embedding"]))
         sims = mat @ mat.T
         # pruned[j] iff any i<j with sims[i,j] >= tau — vectorized
         # strict-upper-triangle test, no Python loop over pairs

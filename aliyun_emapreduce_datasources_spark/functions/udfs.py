@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from aliyun_emapreduce_datasources_spark.similarity.score import _matrix
 from aliyun_emapreduce_datasources_spark.sources.cdc import ots_col_parser  # noqa: F401
 
 __all__ = ["ots_col_parser", "DTS_RECORD_SCHEMA", "from_dts_record", "make_lr_scorer", "load_lr_model"]
@@ -82,9 +83,7 @@ def make_lr_scorer(coefficients: list[float], intercept: float):
         mask = features.notna()
         out = np.full(len(features), np.nan)
         if mask.any():
-            mat = np.vstack(
-                features[mask].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy()
-            )
+            mat = _matrix(features[mask])
             z = mat @ coef + intercept
             out[mask.to_numpy()] = 1.0 / (1.0 + np.exp(-z))
         return pd.Series(out)

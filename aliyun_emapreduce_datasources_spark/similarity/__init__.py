@@ -1,7 +1,12 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
-- ``bruteforce`` — exact cosine top-k via broadcast cross join +
-  window rank; the baseline and the small-query-set workhorse.
-- ``lsh``        — random-hyperplane LSH bucketing; candidates only
-  join within a bucket (multi-probe via bit flips), the 100 TB path.
+- ``score``      — the one ANN search core: query read, batch top-k
+  scan, exact rescore and rank, shared by every top-k path below.
+- ``bruteforce`` — exact cosine top-k; the baseline and the
+  small-query-set workhorse.
+- ``quantize`` / ``pq`` — int8 and product-quantized scans with an
+  exact rescore of their shortlist.
+- ``lsh`` / ``ivf`` — random-hyperplane buckets and k-means cluster
+  probes; candidates only join within a bucket or probed cluster, the
+  100 TB paths (``ivf`` also files the index partitioned by cluster).
 """

@@ -3,11 +3,11 @@ of the (huge) corpus.
 
 Scale shape: the corpus side never shuffles — queries ship to every
 partition as a numpy matrix inside the scoring closure, each Arrow
-batch is scored with one BLAS matmul, and a per-batch top-k
-pre-reduction means only O(batches × queries × k) candidate rows
-reach the final global window rank. Global top-k ⊆ union of per-batch top-k, so the
-pre-reduction is lossless. This is the plan that scans 100 TB of
-embeddings once with constant memory per executor.
+batch is scored with one BLAS matmul and pre-reduced to its per-query
+top-k (similarity/score.py's ``scan_topk``), so only
+O(batches × queries × k) candidate rows reach the final global window
+rank. This is the plan that scans 100 TB of embeddings once with
+constant memory per executor.
 
 The exact per-pair expression form lives in functions/vector.cosine
 for SQL composability; this module is the vectorized execution path
@@ -16,31 +16,21 @@ for SQL composability; this module is the vectorized execution path
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from pyspark.sql import DataFrame
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from aliyun_emapreduce_datasources_spark.operators.common import t
-from aliyun_emapreduce_datasources_spark.similarity.score import _normalize
-from aliyun_emapreduce_datasources_spark.similarity.guard import collect_query_batch, empty_topk
-
-__all__ = ["topk_cosine", "QUERY", "ORACLE"]
-
-N_QUERIES = 8
-K = 5
-
-CAND_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("sim", T.DoubleType()),
-    ]
+from aliyun_emapreduce_datasources_spark.similarity.guard import empty_topk
+from aliyun_emapreduce_datasources_spark.similarity.score import (
+    K,
+    N_QUERIES,
+    _matrix,
+    _normalize,
+    catalog_query,
+    query_batch,
+    rank,
+    scan_topk,
 )
 
+__all__ = ["topk_cosine", "QUERY", "ORACLE"]
 
 
 def topk_cosine(corpus: DataFrame, queries: DataFrame, k: int = K) -> DataFrame:
@@ -50,45 +40,18 @@ def topk_cosine(corpus: DataFrame, queries: DataFrame, k: int = K) -> DataFrame:
     small by contract (collected once, shipped as a matrix).
     Deterministic tie-break on neighbor id.
     """
-    qrows = collect_query_batch(queries, ["query_id", "q_embedding"])
-    if not qrows:
+    q = query_batch(queries)
+    if q is None:
         return empty_topk(corpus.sparkSession)
-    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    q_mat = _normalize(np.array([r.q_embedding for r in qrows], dtype=np.float64))
+    q_ids, q_mat, _ = q
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = _normalize(
-                np.vstack(pdf["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
-            )
-            sims = q_mat @ c_mat.T  # (nq, nb)
-            sims[q_ids[:, None] == c_ids[None, :]] = -np.inf  # mask self
-            kk = min(k, sims.shape[1])
-            top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            qi = np.repeat(q_ids, kk)
-            ni = c_ids[top.ravel()]
-            sv = np.take_along_axis(sims, top, axis=1).ravel()
-            keep = np.isfinite(sv)
-            yield pd.DataFrame({"query_id": qi[keep], "neighbor_id": ni[keep], "sim": sv[keep]})
+    def sims(pdf):
+        return q_mat @ _normalize(_matrix(pdf["embedding"])).T
 
-    cands = corpus.select("vec_id", "embedding").mapInPandas(run, CAND_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.col("rnk").cast("long").alias("rnk"))
-    )
+    return rank(scan_topk(corpus.select("vec_id", "embedding"), q_ids, k, sims), k)
 
 
-def QUERY(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    return topk_cosine(emb.select("vec_id", "embedding"), queries)
+QUERY = catalog_query(topk_cosine)
 
 
 # DuckDB oracle: cosine in DOUBLE. BLAS vs fold accumulation can differ

@@ -14,8 +14,8 @@ Pipeline (FAISS IVF-Flat shape, public knowledge):
    reads only nprobe/K of the data (partition pruning does the work).
 3. **Search**: each query probes its ``nprobe`` nearest clusters;
    candidates = corpus rows in those clusters (cluster-id equi-join,
-   no O(n²) pairs); exact cosine + per-batch top-k pre-reduction, then
-   global window rank.
+   no O(n²) pairs), scored and ranked by the shared exact-cosine core
+   (similarity/score.py).
 
 Recall grows with nprobe/K; tests/test_similarity.py bounds recall@5
 against brute force on the testdata.
@@ -23,18 +23,24 @@ against brute force on the testdata.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aliyun_emapreduce_datasources_spark.operators.common import local_df, t
-from aliyun_emapreduce_datasources_spark.similarity.bruteforce import _normalize
-from aliyun_emapreduce_datasources_spark.similarity.guard import collect_query_batch, empty_topk
-from aliyun_emapreduce_datasources_spark.similarity.score import score_candidates
+from aliyun_emapreduce_datasources_spark.operators.common import local_df
+from aliyun_emapreduce_datasources_spark.similarity.guard import empty_topk
+from aliyun_emapreduce_datasources_spark.similarity.score import (
+    K,
+    _matrix,
+    _normalize,
+    catalog_query,
+    query_batch,
+    score_candidates,
+)
 
 __all__ = [
     "train_centroids",
@@ -51,8 +57,6 @@ __all__ = [
 
 N_CLUSTERS = 16
 N_PROBE = 4
-K = 5
-N_QUERIES = 8
 TRAIN_CAP = 2048
 KMEANS_ITERS = 10
 
@@ -90,16 +94,9 @@ ASSIGN_SCHEMA = T.StructType(
     ]
 )
 
+
 ASSIGN_RESID_SCHEMA = T.StructType(
     ASSIGN_SCHEMA.fields + [T.StructField("resid", T.DoubleType())]
-)
-
-CAND_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("sim", T.DoubleType()),
-    ]
 )
 
 
@@ -144,9 +141,7 @@ def assign_clusters(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = _normalize(
-                np.vstack(pdf["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
-            )
+            mat = _normalize(_matrix(pdf["embedding"]))
             sims = mat @ centroids.T
             cl = sims.argmax(axis=1).astype(np.int32)
             out = {
@@ -330,24 +325,13 @@ def ivf_file_search_topk(
     scoring kernel ⇒ identical results for the same centroids). This
     is the production read path: train/assign once (write_clustered),
     then every query batch touches nprobe/K of the bytes."""
-    qrows = collect_query_batch(queries, ["query_id", "q_embedding"])
-    if not qrows:
+    q = query_batch(queries)
+    if q is None:
         return empty_topk(spark)
     C = load_centroids(spark, index_dir)
-    npb = min(nprobe, len(C))
-    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    q_mat = _normalize(np.array([r.q_embedding for r in qrows], dtype=np.float64))
-    probes = np.argsort(-(q_mat @ C.T), axis=1)[:, :npb]
-    probe_df = local_df(
-        spark,
-        [(int(q), int(c)) for qi, q in enumerate(q_ids) for c in probes[qi]],
-        "query_id long, cluster int",
+    return _probe_search(
+        spark, lambda clusters: read_clustered(spark, index_dir, clusters), q, C, nprobe, k
     )
-    probed = read_clustered(spark, index_dir, sorted({int(c) for row in probes for c in row}))
-    joined = probed.join(F.broadcast(probe_df), "cluster").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    return score_candidates(joined, (q_ids, q_mat), k)
 
 
 def ann_ivf_topk(
@@ -366,35 +350,40 @@ def ann_ivf_topk(
     (e.g. to write the inverted file) reuse it instead of paying the
     deterministic-but-identical training twice.
     """
-    spark = corpus.sparkSession
-    qrows = collect_query_batch(queries, ["query_id", "q_embedding"])
-    if not qrows:
+    q = query_batch(queries)
+    if q is None:
         # no queries -> no work; also skips quantizer training, which
         # cannot run on an empty corpus
         return empty_topk(corpus.sparkSession)
     C = centroids if centroids is not None else train_centroids(corpus, k=n_clusters)
     assigned = assign_clusters(corpus, C)
+    return _probe_search(corpus.sparkSession, lambda _: assigned, q, C, nprobe, k)
 
-    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    q_mat = _normalize(np.array([r.q_embedding for r in qrows], dtype=np.float64))
+
+def _probe_search(
+    spark: SparkSession,
+    read: Callable[[list[int]], DataFrame],
+    q: tuple[np.ndarray, np.ndarray, np.ndarray],
+    C: np.ndarray,
+    nprobe: int,
+    k: int,
+) -> DataFrame:
+    """Top-k of each query over the (vec_id, embedding, cluster) rows of
+    its ``nprobe`` nearest clusters; ``read(clusters)`` returns rows
+    covering the probed clusters (sorted ids)."""
+    q_ids, q_mat, _ = q
     probes = np.argsort(-(q_mat @ C.T), axis=1)[:, :nprobe]
     probe_df = local_df(
         spark,
-        [(int(q), int(c)) for qi, q in enumerate(q_ids) for c in probes[qi]],
+        [(int(qid), int(c)) for qid, row in zip(q_ids, probes) for c in row],
         "query_id long, cluster int",
     )
-
     joined = (
-        assigned.join(F.broadcast(probe_df), "cluster")
+        read(sorted({int(c) for row in probes for c in row}))
+        .join(F.broadcast(probe_df), "cluster")
         .where(F.col("vec_id") != F.col("query_id"))
     )
-
     return score_candidates(joined, (q_ids, q_mat), k)
 
 
-def QUERY(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    return ann_ivf_topk(emb.select("vec_id", "embedding"), queries)
+QUERY = catalog_query(ann_ivf_topk)

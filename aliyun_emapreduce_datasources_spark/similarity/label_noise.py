@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.operators.common import local_df, t
 from aliyun_emapreduce_datasources_spark.similarity import guard
+from aliyun_emapreduce_datasources_spark.similarity.score import _matrix, _normalize
 
 __all__ = [
     "emb_label_noise_knn",
@@ -229,9 +230,7 @@ def lsh_bucket_probes(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.vstack(
-                pdf["qe"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy()
-            )
+            mat = _matrix(pdf["qe"])
             bits = (mat @ P) > 0  # (n, L*B)
             sigs = (bits.reshape(len(pdf), n_tables, n_planes) * weights).sum(
                 axis=2
@@ -400,9 +399,6 @@ def ivf_shortlist_knn_topk(
     partition-prunes a
     probe to nprobe/K of the bytes (PartitionFilters plan-asserted in
     tests/test_ivf_file.py); probe fan-out stays per-row map work."""
-    from aliyun_emapreduce_datasources_spark.similarity.bruteforce import (
-        _normalize,
-    )
     from aliyun_emapreduce_datasources_spark.similarity.ivf import (
         train_centroids,
     )
@@ -422,11 +418,7 @@ def ivf_shortlist_knn_topk(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = _normalize(
-                np.vstack(
-                    pdf["qe"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy()
-                )
-            )
+            mat = _normalize(_matrix(pdf["qe"]))
             order = np.argsort(-(mat @ C.T), axis=1)[:, :npb]
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             yield pd.DataFrame(

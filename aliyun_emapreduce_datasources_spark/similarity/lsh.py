@@ -32,22 +32,25 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aliyun_emapreduce_datasources_spark.operators.common import local_df, t
-from aliyun_emapreduce_datasources_spark.similarity.bruteforce import _normalize
-from aliyun_emapreduce_datasources_spark.similarity.guard import collect_query_batch, empty_topk
-from aliyun_emapreduce_datasources_spark.similarity.score import score_candidates
+from aliyun_emapreduce_datasources_spark.operators.common import local_df
+from aliyun_emapreduce_datasources_spark.similarity.guard import empty_topk
+from aliyun_emapreduce_datasources_spark.similarity.score import (
+    K,
+    _matrix,
+    catalog_query,
+    query_batch,
+    score_candidates,
+)
 
 __all__ = ["hyperplane_signature", "signature_tables", "ann_lsh_topk", "QUERY"]
 
 N_PLANES = 6
 N_TABLES = 4
 DIM = 64
-K = 5
-N_QUERIES = 8
 
 SIG_SCHEMA = T.StructType(
     [
@@ -57,15 +60,6 @@ SIG_SCHEMA = T.StructType(
         T.StructField("sig", T.LongType()),
     ]
 )
-
-CAND_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("sim", T.DoubleType()),
-    ]
-)
-
 
 _M64 = (1 << 64) - 1
 
@@ -151,7 +145,7 @@ def _corpus_signatures(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.vstack(pdf["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
+            mat = _matrix(pdf["embedding"])
             bits = (mat @ P) > 0  # (n, L*B)
             sigs = (bits.reshape(len(pdf), n_tables, n_planes) * weights).sum(axis=2)  # (n, L)
             yield pd.DataFrame(
@@ -184,16 +178,15 @@ def ann_lsh_topk(
     would crash any non-64-dim corpus at the matmul).
     """
     spark = corpus.sparkSession
-    qrows = collect_query_batch(queries, ["query_id", "q_embedding"])
-    if not qrows:
-        return empty_topk(corpus.sparkSession)
-    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    q_mat = np.array([r.q_embedding for r in qrows], dtype=np.float64)
+    q = query_batch(queries)
+    if q is None:
+        return empty_topk(spark)
+    q_ids, q_mat, q_raw = q
     if dim is None:
-        dim = q_mat.shape[1]
+        dim = q_raw.shape[1]
     P = _plane_matrix(n_planes, n_tables, dim)
     weights = (1 << np.arange(n_planes, dtype=np.int64))
-    bits = (q_mat @ P) > 0
+    bits = (q_raw @ P) > 0
     sigs = (bits.reshape(len(q_ids), n_tables, n_planes) * weights).sum(axis=2)
 
     probe_rows = []
@@ -211,12 +204,7 @@ def ann_lsh_topk(
         .dropDuplicates(["query_id", "vec_id"])
     )
 
-    return score_candidates(joined, (q_ids, _normalize(q_mat)), k)
+    return score_candidates(joined, (q_ids, q_mat), k)
 
 
-def QUERY(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    return ann_lsh_topk(emb.select("vec_id", "embedding"), queries)
+QUERY = catalog_query(ann_lsh_topk)

@@ -14,11 +14,12 @@ Pipeline:
 3. Score: per query, an ADC table T[m][c] = <q_m, codebook[m][c]> is
    built once (M·NCODE dots); each corpus code scores as
    Σ_m T[m][code_m] — pure numpy fancy-indexing over Arrow batches,
-   no BLAS on full vectors. Per-partition shortlist pre-reduction
-   keeps the shuffle at O(queries · shortlist), like quantize.py.
-4. Rescore: shortlist joins back to raw embeddings for exact cosine,
-   final top-k by exact sim (ADC error never surfaces in results,
-   only in recall).
+   no BLAS on full vectors. The shared batch scan
+   (similarity/score.py) pre-reduces per batch, keeping the shuffle at
+   O(queries · shortlist).
+4. Rescore: shortlist joins back to raw embeddings for exact cosine
+   (score.py's ``rescore``), final top-k by exact sim (ADC error never
+   surfaces in results, only in recall).
 
 Scale shape (100 TB): the expensive scan runs over codes, not
 vectors; at 10⁹ vectors × 768 dims the PQ index is ~8 GB vs 3 TB raw.
@@ -32,21 +33,24 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
-from aliyun_emapreduce_datasources_spark.operators.common import t
-from aliyun_emapreduce_datasources_spark.similarity.bruteforce import _normalize
-from aliyun_emapreduce_datasources_spark.similarity.guard import collect_query_batch, empty_topk
+from aliyun_emapreduce_datasources_spark.similarity.guard import empty_topk
+from aliyun_emapreduce_datasources_spark.similarity.score import (
+    K,
+    _matrix,
+    _normalize,
+    catalog_query,
+    query_batch,
+    rescore,
+    scan_topk,
+)
 
 __all__ = ["train_codebooks", "encode_corpus", "pq_topk", "QUERY"]
 
 M_SUBSPACES = 4
 N_CODES = 32
-K = 5
-N_QUERIES = 8
 TRAIN_CAP = 2048
 KMEANS_ITERS = 10
 SHORTLIST = 40  # per-query candidates kept for exact rescore
@@ -55,14 +59,6 @@ CODE_SCHEMA = T.StructType(
     [
         T.StructField("vec_id", T.LongType()),
         T.StructField("codes", T.ArrayType(T.IntegerType())),
-    ]
-)
-
-CAND_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("adc", T.DoubleType()),
     ]
 )
 
@@ -108,9 +104,7 @@ def encode_corpus(corpus: DataFrame, books: np.ndarray) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            X = _normalize(
-                np.vstack(pdf["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
-            )
+            X = _normalize(_matrix(pdf["embedding"]))
             codes = np.empty((len(X), m), dtype=np.int32)
             for j in range(m):
                 Xj = X[:, j * sub : (j + 1) * sub]
@@ -132,88 +126,29 @@ def pq_topk(
     shortlist: int = SHORTLIST,
 ) -> DataFrame:
     """Top-k per query via ADC scan over PQ codes + exact rescore."""
-    qrows = collect_query_batch(queries, ["query_id", "q_embedding"])
-    if not qrows:
+    q = query_batch(queries)
+    if q is None:
         # no queries -> no work; also skips codebook training, which
         # cannot run on an empty corpus
         return empty_topk(corpus.sparkSession)
     books = train_codebooks(corpus, m=m, ncode=ncode)
     codes = encode_corpus(corpus, books)
 
-    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    q_mat = _normalize(np.array([r.q_embedding for r in qrows], dtype=np.float64))
+    q_ids, q_mat, _ = q
     sub = q_mat.shape[1] // m
     # ADC tables: (nq, m, ncode) — query sub-vector · every codeword
     tables = np.einsum("qjs,jcs->qjc", q_mat.reshape(len(q_mat), m, sub), books)
-    nq = len(q_ids)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            C = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)  # (nb, m)
-            # sims[q, b] = Σ_j tables[q, j, C[b, j]]
-            sims = np.zeros((nq, len(C)))
-            for j in range(C.shape[1]):
-                sims += tables[:, j, :][:, C[:, j]]
-            sims[q_ids[:, None] == c_ids[None, :]] = -np.inf
-            kk = min(shortlist, sims.shape[1])
-            top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            qi = np.repeat(q_ids, kk)
-            ni = c_ids[top.ravel()]
-            sv = np.take_along_axis(sims, top, axis=1).ravel()
-            keep = np.isfinite(sv)
-            yield pd.DataFrame({"query_id": qi[keep], "neighbor_id": ni[keep], "adc": sv[keep]})
+    def adc(pdf):
+        C = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)  # (nb, m)
+        # sims[q, b] = Σ_j tables[q, j, C[b, j]]
+        sims = np.zeros((len(q_ids), len(C)))
+        for j in range(C.shape[1]):
+            sims += tables[:, j, :][:, C[:, j]]
+        return sims
 
-    cands = codes.mapInPandas(scan, CAND_SCHEMA)
-    # global per-query shortlist, then exact rescore on raw vectors
-    w_short = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id"))
-    short = (
-        cands.withColumn("srnk", F.row_number().over(w_short))
-        .where(F.col("srnk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    qmap = {int(r.query_id): np.asarray(r.q_embedding, dtype=np.float64) for r in qrows}
-
-    rescored = (
-        short.join(corpus.select("vec_id", "embedding"), short.neighbor_id == F.col("vec_id"))
-        .select("query_id", "neighbor_id", "embedding")
-    )
-
-    def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # vectorized: stack the batch into one matrix and do a single
-        # row-wise einsum against the per-row query vectors — the
-        # per-row Python loop form is interpreter-bound, not BLAS-bound
-        qids_sorted = sorted(qmap)
-        qindex = {q: i for i, q in enumerate(qids_sorted)}
-        qm = np.vstack([qmap[q] for q in qids_sorted])
-        qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emb = np.vstack(
-                pdf["embedding"].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy()
-            )
-            emb = emb / np.linalg.norm(emb, axis=1, keepdims=True)
-            qidx = pdf["query_id"].map(qindex).to_numpy(dtype=np.int64)
-            sims = np.einsum("ij,ij->i", emb, qm[qidx])
-            out = pdf[["query_id", "neighbor_id"]].copy()
-            out["adc"] = sims
-            yield out
-
-    exact_scored = rescored.mapInPandas(exact, CAND_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id"))
-    return (
-        exact_scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.col("rnk").cast("long").alias("rnk"))
-    )
+    cands = scan_topk(codes, q_ids, shortlist, adc)
+    return rescore(cands, corpus, (q_ids, q_mat), k, shortlist)
 
 
-def QUERY(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    return pq_topk(emb.select("vec_id", "embedding"), queries)
+QUERY = catalog_query(pq_topk)

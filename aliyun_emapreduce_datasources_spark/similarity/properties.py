@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.functions.vector import cosine
 from aliyun_emapreduce_datasources_spark.operators.common import t
+from aliyun_emapreduce_datasources_spark.similarity.score import query_frame
 
 __all__ = [
     "ann_rank_consistency_violations",
@@ -190,10 +191,7 @@ def ann_ivf_file_consistency_violations(
     from aliyun_emapreduce_datasources_spark.similarity import ivf
 
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = emb.where(F.col("vec_id") < ivf.N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_embedding"),
-    )
+    queries = query_frame(emb)
     base = emb.where(F.pmod(F.col("vec_id"), F.lit(2)) == 0)
     increment = emb.where(F.pmod(F.col("vec_id"), F.lit(2)) == 1)
     C = ivf.train_centroids(base)

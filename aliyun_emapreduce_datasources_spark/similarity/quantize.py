@@ -16,16 +16,16 @@ and searches in two phases:
    constant-memory shape as the brute-force scan.
 2. **Exact rescore**: the surviving candidate ids (queries × k ×
    factor rows — thousands, not billions) join back to the float
-   corpus; exact cosine (functions/vector.cosine, codegen) re-ranks
+   corpus; exact cosine (similarity/score.py's ``rescore``) re-ranks
    and the final window keeps top-k. Quantization error can only
    cost recall if a true neighbor falls out of the oversampled
    candidate set — with 4× oversampling on int8 error (~1e-2) that
    is vanishingly rare (recall floor asserted in
    tests/test_similarity.py).
 
-Both the quantization pass and the rescore join are pure built-in
-expressions; only the batch scoring runs in Arrow-batched Python,
-identical in shape to similarity/bruteforce.py.
+The quantization pass is pure built-in expressions; the scan and the
+rescore are the shared ANN core (similarity/score.py), the scan
+differing from brute force only in its dequantizing score function.
 
 Approximate by construction (quantized first phase) → rows-only
 driver check; quality is gated by the recall test instead.
@@ -33,23 +33,20 @@ driver check; quality is gated by the recall test instead.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from aliyun_emapreduce_datasources_spark.functions.vector import cosine
-from aliyun_emapreduce_datasources_spark.operators.common import t
-from aliyun_emapreduce_datasources_spark.similarity.bruteforce import (
-    CAND_SCHEMA,
+from aliyun_emapreduce_datasources_spark.similarity.guard import empty_topk
+from aliyun_emapreduce_datasources_spark.similarity.score import (
     K,
-    N_QUERIES,
+    _matrix,
     _normalize,
+    catalog_query,
+    query_batch,
+    rescore,
+    scan_topk,
 )
-from aliyun_emapreduce_datasources_spark.similarity.guard import collect_query_batch, empty_topk
 
 __all__ = ["quantize_corpus", "topk_cosine_int8", "QUERY"]
 
@@ -85,74 +82,19 @@ def topk_cosine_int8(
     corpus: (vec_id, embedding) float vectors; the quantized copy is
     derived here (a real deployment reads the pre-materialized int8
     table and never scans the floats in phase 1)."""
-    qrows = collect_query_batch(queries, ["query_id", "q_embedding"])
-    if not qrows:
+    q = query_batch(queries)
+    if q is None:
         return empty_topk(corpus.sparkSession)
-    q_ids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    q_mat = _normalize(np.array([r.q_embedding for r in qrows], dtype=np.float64))
+    q_ids, q_mat, _ = q
     kk_scan = k * rescore_factor
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            codes = np.vstack(
-                pdf["qvec"].map(lambda a: np.asarray(a, dtype=np.int8)).to_numpy()
-            )
-            scales = pdf["scale"].to_numpy(dtype=np.float64)
-            approx = codes.astype(np.float64) * scales[:, None]  # dequantize
-            approx = _normalize(approx)
-            sims = q_mat @ approx.T
-            sims[q_ids[:, None] == c_ids[None, :]] = -np.inf
-            nk = min(kk_scan, sims.shape[1])
-            top = np.argpartition(-sims, nk - 1, axis=1)[:, :nk]
-            qi = np.repeat(q_ids, nk)
-            ni = c_ids[top.ravel()]
-            sv = np.take_along_axis(sims, top, axis=1).ravel()
-            keep = np.isfinite(sv)
-            yield pd.DataFrame(
-                {"query_id": qi[keep], "neighbor_id": ni[keep], "sim": sv[keep]}
-            )
+    def sims(pdf):
+        scales = pdf["scale"].to_numpy(dtype=np.float64)
+        return q_mat @ _normalize(_matrix(pdf["qvec"]) * scales[:, None]).T  # dequantize
 
     qcorpus = quantize_corpus(corpus).select("vec_id", "scale", "qvec")
-    cands = qcorpus.mapInPandas(scan, CAND_SCHEMA)
-    # global candidate cut: top k×factor per query on the quantized score
-    w_scan = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        cands.withColumn("r", F.row_number().over(w_scan))
-        .where(F.col("r") <= kk_scan)
-        .select("query_id", "neighbor_id")
-    )
-    # exact rescore: tiny shortlist joins the float corpus + queries
-    qdf = queries.select(
-        F.col("query_id").alias("q_id"), F.col("q_embedding")
-    )
-    exact = (
-        shortlist.join(
-            corpus.select(F.col("vec_id"), F.col("embedding")),
-            shortlist.neighbor_id == F.col("vec_id"),
-        )
-        .join(F.broadcast(qdf), shortlist.query_id == F.col("q_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine("embedding", "q_embedding").alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.col("rnk").cast("long").alias("rnk"))
-    )
+    cands = scan_topk(qcorpus, q_ids, kk_scan, sims)
+    return rescore(cands, corpus, (q_ids, q_mat), k, kk_scan)
 
 
-def QUERY(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    return topk_cosine_int8(emb.select("vec_id", "embedding"), queries)
+QUERY = catalog_query(topk_cosine_int8)
