@@ -57,6 +57,10 @@ BUDGET = {  # entry: (build jobs, build + noop write jobs)
     "dedup_bloom_decontaminate": (3, 4),
     "dedup_semantic": (1, 5),
     "emb_label_noise_knn": (3, 13),
+    "emb_bitext_mine": (3, 21),
+    "emb_hard_negatives": (3, 13),
+    "eval_mrr_at_k": (4, 17),
+    "eval_kendall_tau": (3, 11),
     # counts is an eager checkpoint (a lazy persist ran (1, 22))
     "text_source_tv_matrix": (3, 13),
 }
