@@ -18,8 +18,9 @@ Exact reference ``embedding_neardup_blocked`` (oracle cross-checked in
 tests, kept OUT of the catalog): distributed block-matrix all-pairs.
 Vectors are assigned to
 NB hash blocks; each of the NB·(NB+1)/2 unordered block pairs becomes
-one cogroup-key, and a cogrouped ``applyInPandas`` task scores block A
-against block B with a single BLAS matmul. Exact same pair set as the
+one cogroup-key (``similarity/intdot.block_cogroup``), and a cogrouped
+``applyInPandas`` task scores block A against block B with a single
+BLAS matmul. Exact same pair set as the
 naive O(n²) SQL join, but:
 
 - no driver-side collect, no full-table broadcast — each task holds
@@ -52,7 +53,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aliyun_emapreduce_datasources_spark.operators.common import local_df, t
+from aliyun_emapreduce_datasources_spark.operators.common import t
+from aliyun_emapreduce_datasources_spark.similarity.intdot import (
+    QSCALE,
+    block_cogroup,
+    micro_np,
+)
 from aliyun_emapreduce_datasources_spark.similarity.score import _matrix, _normalize
 
 __all__ = [
@@ -78,28 +84,18 @@ N_BLOCKS = 8
 def embedding_neardup_blocked(
     spark: SparkSession, sf_dir: str, n_blocks: int = N_BLOCKS
 ) -> DataFrame:
-    """Exact all-pairs via distributed block-matrix cogroup (see
-    module docstring). Matches the O(n²) SQL oracle bit-for-bit on
-    pair membership with no driver-side data movement."""
-    def replicated(side: str) -> DataFrame:
-        # fresh scan per side: cogroup of two branches of one self-join
-        # lineage trips the ambiguous-attribute check; two scans carry
-        # identical pushed-down plans with distinct attribute ids
-        emb = (
+    """Exact all-pairs via ``similarity/intdot.block_cogroup`` over the
+    upper triangle of the block grid (see module docstring). Matches
+    the O(n²) SQL oracle bit-for-bit on pair membership with no
+    driver-side data movement."""
+    def side() -> DataFrame:
+        # fresh scan per side: two scans carry identical pushed-down
+        # plans with distinct attribute ids
+        return (
             t(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
             .withColumn("blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
         )
-        block_pairs = local_df(
-            spark,
-            [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-            "blk_a int, blk_b int",
-        )
-        return emb.join(F.broadcast(block_pairs), emb.blk == block_pairs[side]).select(
-            "blk_a", "blk_b", "vec_id", "embedding"
-        )
-
-    left, right = replicated("blk_a"), replicated("blk_b")
 
     def score(key, pa: pd.DataFrame, pb: pd.DataFrame) -> pd.DataFrame:
         if pa.empty or pb.empty:
@@ -120,11 +116,8 @@ def embedding_neardup_blocked(
         lo, hi = np.minimum(a, b)[keep], np.maximum(a, b)[keep]
         return pd.DataFrame({"vec_a": lo, "vec_b": hi})
 
-    return (
-        left.groupBy("blk_a", "blk_b")
-        .cogroup(right.groupBy("blk_a", "blk_b"))
-        .applyInPandas(score, PAIRS_SCHEMA)
-    )
+    grid = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
+    return block_cogroup(side(), side(), grid, score, PAIRS_SCHEMA, ("blk_a", "blk_b"))
 
 
 LSH_PLANES = 3  # minimum; auto_planes raises it with corpus size
@@ -200,7 +193,6 @@ def auto_tables(
 # minhash/simhash md5-promotion pattern).
 # ---------------------------------------------------------------------------
 
-QUANT_SCALE = 1_000_000  # floor(x·1e6): the centroid/kmeans/label_noise law
 PLANE_BITS = 16  # plane component = 16-bit signed slice of the md5 hash
 
 
@@ -238,9 +230,9 @@ def embedding_neardup_lsh_portable(
     value-hash oracle (round-9 verdict ask #2; the
     round-9 minhash/simhash promotions are the pattern):
 
-    - vectors micro-quantized q_d = floor(x_d·1e6) (the established
-      label_noise/centroid/kmeans portable law; float32→float64 cast
-      and the 1e6 multiply are the same IEEE ops in both engines),
+    - vectors micro-quantized q_d = floor(x_d·1e6) (the portable law
+      of similarity/intdot.py; float32→float64 cast and the 1e6
+      multiply are the same IEEE ops in both engines),
     - hyperplane components are 16-bit signed slices of the portable
       md5-64 of 't,p,d' — no RNG, no libm,
     - signature bit = (Σ q_d·h_d > 0): |q| < 2^20, |h| < 2^15, so the
@@ -289,8 +281,7 @@ def embedding_neardup_lsh_portable(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = _matrix(pdf["embedding"])
-            q = np.floor(mat * QUANT_SCALE)  # exact ints in float64
+            q = micro_np(_matrix(pdf["embedding"]))
             # Exactness envelope guard (r10 advice): the portable law
             # is engine==oracle only while every downstream product
             # stays float64-exact — |q| < 2^25 keeps bucket dots under
@@ -302,9 +293,9 @@ def embedding_neardup_lsh_portable(
             if qmax >= float(1 << 25):
                 raise ValueError(
                     "embedding component out of the portable-law "
-                    f"float64-exactness envelope: max |floor(x*{QUANT_SCALE:g})| "
+                    f"float64-exactness envelope: max |floor(x*{QSCALE:g})| "
                     f"= {qmax:.0f} >= 2^25; rescale the embeddings or "
-                    "lower QUANT_SCALE"
+                    "lower QSCALE"
                 )
             bits = (q @ P) > 0  # every dot < 2^41: exact
             sigs = (bits.reshape(len(pdf), n_tables, n_planes) * weights).sum(
@@ -384,7 +375,7 @@ def _oracle_portable() -> str:
 WITH q AS MATERIALIZED (
   SELECT vec_id,
          list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT)) AS qv
+                        x -> CAST(floor(CAST(x AS DOUBLE) * {QSCALE}) AS BIGINT)) AS qv
   FROM embeddings
 ), nrow AS (
   SELECT COUNT(*) AS n, MAX(len(qv)) AS dim FROM q

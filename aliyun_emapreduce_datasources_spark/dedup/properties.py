@@ -365,7 +365,8 @@ def minhash_cluster_containment_violations(
     back-fill the other's straggler tails (guide §2.6, the
     ann_rank_consistency_check pattern); each thread only BUILDS its
     side's DataFrame, so the assembled plan and the result are
-    identical."""
+    identical. Both builds are ``inheritable_thread_target``s, so their
+    eager jobs stay in the caller's job group."""
     from aliyun_emapreduce_datasources_spark.dedup import clusters, ngram
 
     def build_exact() -> DataFrame:
@@ -383,9 +384,11 @@ def minhash_cluster_containment_violations(
     if concurrent:
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_exact = pool.submit(build_exact)
-            f_assign = pool.submit(build_assign)
+            f_exact = pool.submit(inheritable_thread_target(spark)(build_exact))
+            f_assign = pool.submit(inheritable_thread_target(spark)(build_assign))
             exact_pairs, assign = f_exact.result(), f_assign.result()
     else:
         exact_pairs, assign = build_exact(), build_assign()

@@ -30,8 +30,6 @@ similarity/assign.py prototypes).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -40,6 +38,7 @@ from aliyun_emapreduce_datasources_spark.functions.bm25 import (
     bm25_scores,
 )
 from aliyun_emapreduce_datasources_spark.operators.common import t
+from aliyun_emapreduce_datasources_spark.similarity.intdot import int_dot, micro, micro_np
 
 __all__ = ["hybrid_search_rrf", "QUERIES", "ORACLES"]
 
@@ -57,22 +56,14 @@ def _quantized_dots(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrow = emb.where(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()
     if qrow is None:
         raise ValueError(f"query vector id {QUERY_VEC_ID} not found")
-    qvec = [int(math.floor(float(v) * SCALE)) for v in qrow[0]]
-    qlit = F.array(*[F.lit(v).cast("long") for v in qvec])
-    qe = F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * F.lit(float(SCALE)))
-    )
+    qlit = F.array(*[F.lit(int(v)).cast("long") for v in micro_np(qrow[0])])
     return (
         emb.where(F.col("vec_id") != QUERY_VEC_ID)
-        .select(F.col("vec_id").alias("doc_id"), qe.alias("qe"))
         .select(
-            "doc_id",
-            F.aggregate(
-                F.zip_with("qe", qlit, lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("dot"),
+            F.col("vec_id").alias("doc_id"),
+            F.transform("embedding", micro).alias("qe"),
         )
+        .select("doc_id", int_dot("qe", qlit).alias("dot"))
     )
 
 

@@ -9,4 +9,7 @@
 - ``lsh`` / ``ivf`` — random-hyperplane buckets and k-means cluster
   probes; candidates only join within a bucket or probed cluster, the
   100 TB paths (``ivf`` also files the index partitioned by cluster).
+- ``intdot`` — the integer-exact core of the embedding operators whose
+  oracle is byte-exact: one micro-quantization law, one block grid for
+  exact pair work, one guarded int64 top-k.
 """

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.operators.common import ensure_parallelism, t
 from aliyun_emapreduce_datasources_spark.similarity.centroid import label_centroids
+from aliyun_emapreduce_datasources_spark.similarity.intdot import micro, micro_np
 
 __all__ = ["assign_to_prototype", "nearest_prototype", "QUERY", "ORACLE"]
 
@@ -80,7 +81,7 @@ def nearest_prototype(emb: DataFrame, labels: list, cent_mat: np.ndarray) -> Dat
             out_label = np.full(len(pdf), lab_arr[0], dtype=np.int64)
             out_dist = np.full(len(pdf), np.nan)
             if good_rows:
-                Q = np.floor(np.vstack(good_rows) * 1e6).astype(np.int64)
+                Q = micro_np(np.vstack(good_rows)).astype(np.int64)
                 with np.errstate(over="ignore"):
                     # exact int64: d_kj = Σ (q_j − c_k)²
                     d = np.empty((len(Q), len(C)), dtype=np.int64)
@@ -111,7 +112,7 @@ def nearest_prototype(emb: DataFrame, labels: list, cent_mat: np.ndarray) -> Dat
 def assign_to_prototype(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = (
         label_centroids(spark, sf_dir)
-        .withColumn("qc", F.floor(F.col("centroid") * F.lit(1000000.0)))
+        .withColumn("qc", micro(F.col("centroid")))
         .groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("dim", "qc"))).alias("qs"))
         .select("label", F.col("qs.qc").alias("qcent"))

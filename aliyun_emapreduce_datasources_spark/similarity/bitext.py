@@ -19,8 +19,7 @@ embeddings table is a single collection; the parity split stands in
 for the two-language split and keeps the operator fully oracled).
 
 Determinism / oracle parity: similarity is the exact int64 INNER
-PRODUCT of micro-quantized vectors (``floor(double(x)·1e6)`` — the
-same portable quantization as centroid.py / label_noise.py), so top-K
+PRODUCT of micro-quantized vectors (similarity/intdot.py), so top-K
 membership is engine-exact; the margin is a single IEEE division of
 two exact int64s (``2·K·dot / (sumNN_x + sumNN_y)``) and therefore
 bit-identical in Spark and DuckDB, making margin-rank ties impossible
@@ -30,14 +29,15 @@ negative) yields NULL and the candidate is dropped, mirroring the
 ANSI-division guard used across the engine.
 
 Scale shape: exact cross-collection kNN is O(|A|·|B|) compute — the
-point is to distribute it without materializing |A|·|B| rows. The
-same block-matrix cogroup as label_noise.py: each side replicated
-B_BLOCKS times, one numpy int64 matmul per block pair, but each block
-pair emits only its per-row AND per-column partial top-K, so the
+point is to distribute it without materializing |A|·|B| rows:
+``intdot.block_cogroup`` over all B² block pairs, one guarded numpy
+int64 matmul per block pair, and each block pair emits only its
+per-row AND per-column partial top-K (``intdot.topk_rows`` on the dot
+matrix and on its transpose), so the
 shuffle into the two global top-K windows carries (|A|+|B|)·B·K rows,
 never |A|·|B|. The NN sums, margin join, and the two argmax windows
 are all key-partitioned single shuffles. At 100 TB the shortlist step
-swaps for the IVF/LSH probe (similarity/ivf.py, lsh.py) exactly as the
+swaps for the LSH probe (``lsh_shortlist_bitext_mine``) exactly as the
 ANN entries do, with this exact variant as the recall reference.
 """
 
@@ -48,10 +48,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from aliyun_emapreduce_datasources_spark.similarity import guard, label_noise
-from aliyun_emapreduce_datasources_spark.operators.common import local_df
+from aliyun_emapreduce_datasources_spark.similarity import guard, intdot, label_noise
+from aliyun_emapreduce_datasources_spark.similarity.score import _matrix
 
-__all__ = ["emb_bitext_mine", "QUERIES", "ORACLES"]
+__all__ = ["emb_bitext_mine", "lsh_shortlist_bitext_mine", "QUERIES", "ORACLES"]
 
 K_MINE = 4
 N_BLOCKS = 8
@@ -65,35 +65,16 @@ def emb_bitext_mine(
     k: int = K_MINE,
     n_blocks: int = N_BLOCKS,
     cap: int = guard.MAX_EVAL_ROWS,
-    shortlist: str = "exact",
 ) -> DataFrame:
     """(src_id, dst_id, dot, margin): ratio-margin-mined pairs from the
     even-id collection into the odd-id collection — forward-best margin
     per source, margin > 1.0, then max-margin dedup on the target.
 
-    CONTRACT (exact mode): probe-sized inputs only — exact
-    cross-collection kNN is O(|A|·|B|) pair work, so inputs above
-    ``cap`` rows are refused (guard.assert_probe_sized).
-
-    ``shortlist="lsh"`` is the corpus-scale swap (round-7 verdict ask
-    #3; SCALING.md bitext bullet: *at 100 TB the block matmul swaps
-    for the IVF/LSH shortlist*): candidates come from the shared
-    hyperplane bucket table (label_noise.lsh_bucket_probes) with
-    probes of each parity joined against corpus entries of the other,
-    every surfaced pair exactly rescored JVM-side; the margin
-    denominators sum the APPROXIMATE top-k (missed candidates shrink
-    a denominator, which can only raise that vector's margins —
-    mined-pair overlap vs the exact variant is pinned in
-    tests/test_bitext_shortlist.py). No probe cap in this mode —
-    bucketed candidate generation is the point."""
-    if shortlist == "lsh":
-        return _bitext_from_candidates(
-            spark, _lsh_cross_parity_pairs(spark, sf_dir), k
-        )
-    if shortlist != "exact":
-        raise ValueError(f"emb_bitext_mine: unknown shortlist mode {shortlist!r}")
-
-    q = label_noise._quantized(spark, sf_dir)
+    CONTRACT: probe-sized inputs only — exact cross-collection kNN is
+    O(|A|·|B|) pair work, so inputs above ``cap`` rows are refused
+    (guard.assert_probe_sized). ``lsh_shortlist_bitext_mine`` is the
+    corpus-scale swap."""
+    q = intdot.quantized(spark, sf_dir)
     # probe-size BEFORE the checkpoint materializes anything
     guard.assert_probe_sized(q, "emb_bitext_mine", cap)
     # one scan+quantize feeds both cogroup sides; ``vec_id DIV 2``
@@ -107,75 +88,51 @@ def emb_bitext_mine(
         .withColumn("side", F.pmod("vec_id", F.lit(2)).cast("int"))
         .persist()
     )
-    grid = local_df(
-        spark,
-        [(i, j) for i in range(n_blocks) for j in range(n_blocks)],
-        "blk_a int, blk_b int",
-    )
 
-    def replicated(side_parity: int, blk_col: str) -> DataFrame:
-        tag = "a" if side_parity == 0 else "b"
-        b = base.where(F.col("side") == side_parity).alias(f"b{tag}")
-        g = grid.alias(f"g{tag}")
-        return b.join(
-            F.broadcast(g), F.col(f"b{tag}.blk") == F.col(f"g{tag}.{blk_col}")
-        ).select(
-            F.col(f"g{tag}.blk_a").alias("blk_a"),
-            F.col(f"g{tag}.blk_b").alias("blk_b"),
-            F.col(f"b{tag}.vec_id").alias("vec_id"),
-            F.col(f"b{tag}.qe").alias("qe"),
-        )
-
-    side_a, side_b = replicated(0, "blk_a"), replicated(1, "blk_b")
+    def side(parity: int) -> DataFrame:
+        return base.where(F.col("side") == parity).select("vec_id", "qe", "blk")
 
     def partial_topk(key, pa: pd.DataFrame, pb: pd.DataFrame) -> pd.DataFrame:
-        cols = ("dir", "qid", "nbr", "dot")
         if pa.empty or pb.empty:
-            return pd.DataFrame({c: [] for c in cols})
+            return pd.DataFrame({c: [] for c in ("dir", "qid", "nbr", "dot")})
         ids_a = pa["vec_id"].to_numpy(dtype=np.int64)
         ids_b = pb["vec_id"].to_numpy(dtype=np.int64)
-        ma = np.vstack(pa["qe"].map(lambda v: np.asarray(v, dtype=np.int64)).to_numpy())
-        mb = np.vstack(pb["qe"].map(lambda v: np.asarray(v, dtype=np.int64)).to_numpy())
-        # same silent-int64-wrap guard as label_noise.partial_topk
-        worst = ma.shape[1] * int(np.abs(ma).max(initial=0)) * int(
-            np.abs(mb).max(initial=0)
+        dots = intdot.int_matmul(
+            _matrix(pa["qe"], np.int64), _matrix(pb["qe"], np.int64)
         )
-        if worst >= 2**62:
-            raise OverflowError(
-                "bitext: quantized dot product may exceed int64 "
-                f"(worst-case |dot|={worst}); reduce quantization scale"
-            )
-        dots = ma @ mb.T  # exact int64, |A_blk| x |B_blk|
-        out = {c: [] for c in cols}
+        # the parities are disjoint, so topk_rows' self mask never fires
+        fi, fj = intdot.topk_rows(dots, ids_a, ids_b, k)
+        bi, bj = intdot.topk_rows(dots.T, ids_b, ids_a, k)
+        return pd.DataFrame(
+            {
+                "dir": ["f"] * len(fi) + ["b"] * len(bi),
+                "qid": np.concatenate([ids_a[fi], ids_b[bi]]),
+                "nbr": np.concatenate([ids_b[fj], ids_a[bj]]),
+                "dot": np.concatenate([dots[fi, fj], dots[bj, bi]]),
+            }
+        )
 
-        def emit(direction, q_ids, n_ids, mat):
-            kk = min(k, mat.shape[1])
-            for i in range(mat.shape[0]):
-                row = mat[i]
-                order = np.lexsort((n_ids, -row))[:kk]
-                out["dir"].extend([direction] * kk)
-                out["qid"].extend([int(q_ids[i])] * kk)
-                out["nbr"].extend(n_ids[order].tolist())
-                out["dot"].extend(row[order].tolist())
-
-        emit("f", ids_a, ids_b, dots)
-        emit("b", ids_b, ids_a, dots.T)
-        return pd.DataFrame(out)
-
-    cands = (
-        side_a.groupBy("blk_a", "blk_b")
-        .cogroup(side_b.groupBy("blk_a", "blk_b"))
-        .applyInPandas(partial_topk, _CAND_SCHEMA)
+    grid = [(i, j) for i in range(n_blocks) for j in range(n_blocks)]
+    cands = intdot.block_cogroup(
+        side(0), side(1), grid, partial_topk, _CAND_SCHEMA, ("blk_a", "blk_b")
     )
-    return _bitext_from_candidates(spark, cands, k)
+    return _bitext_from_candidates(cands, k)
 
 
-def _lsh_cross_parity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(dir, qid, nbr, dot) candidates via hyperplane buckets: probes
-    of each parity against corpus entries of the other, exact int64
-    rescore in the JVM expression tree (same wrap-is-an-error ANSI
-    contract as lsh_shortlist_knn_topk)."""
-    base = label_noise._quantized(spark, sf_dir).persist()
+def lsh_shortlist_bitext_mine(
+    spark: SparkSession, sf_dir: str, k: int = K_MINE
+) -> DataFrame:
+    """emb_bitext_mine over LSH candidates — the corpus-scale swap
+    (SCALING.md bitext bullet: *at 100 TB the block matmul swaps for
+    the IVF/LSH shortlist*). Candidates come from the shared hyperplane
+    bucket table (label_noise.lsh_bucket_probes) with probes of each
+    parity joined against corpus entries of the other, every surfaced
+    pair exactly rescored JVM-side; the margin denominators sum the
+    APPROXIMATE top-k (missed candidates shrink a denominator, which
+    can only raise that vector's margins — mined-pair overlap vs the
+    exact variant is pinned in tests/test_bitext_shortlist.py). No
+    probe cap — bucketed candidate generation is the point."""
+    base = intdot.quantized(spark, sf_dir).persist()
     tagged = label_noise.lsh_bucket_probes(base).withColumn(
         "par", F.pmod("vec_id", F.lit(2)).cast("int")
     )
@@ -195,24 +152,11 @@ def _lsh_cross_parity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fwd = pairs_into(1).withColumn("dir", F.lit("f"))  # even → odd
     bwd = pairs_into(0).withColumn("dir", F.lit("b"))  # odd → even
-    cand = fwd.unionByName(bwd)
-    lq = base.select(F.col("vec_id").alias("qid"), F.col("qe").alias("q_qe"))
-    rq = base.select(F.col("vec_id").alias("nbr"), F.col("qe").alias("c_qe"))
-    return (
-        cand.join(lq, "qid")
-        .join(rq, "nbr")
-        .select(
-            "dir",
-            "qid",
-            "nbr",
-            label_noise.exact_int_dot("q_qe", "c_qe").alias("dot"),
-        )
-    )
+    cands = intdot.rescore_dots(base, fwd.unionByName(bwd), c="nbr")
+    return _bitext_from_candidates(cands.select("dir", "qid", "nbr", "dot"), k)
 
 
-def _bitext_from_candidates(
-    spark: SparkSession, cands: DataFrame, k: int
-) -> DataFrame:
+def _bitext_from_candidates(cands: DataFrame, k: int) -> DataFrame:
     """Margin mining over a (dir, qid, nbr, dot) candidate table — the
     shared tail of the exact block-cogroup path and the LSH shortlist
     path: global per-(dir, qid) top-k, NN-sum denominators, ratio

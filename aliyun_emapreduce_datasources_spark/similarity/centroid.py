@@ -29,13 +29,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.operators.common import t
+from aliyun_emapreduce_datasources_spark.similarity.intdot import micro
 
 __all__ = ["label_centroids", "QUERY", "ORACLE"]
 
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
-    q = F.floor(F.col("e").cast("double") * F.lit(1000000.0))
+    q = micro(F.col("e"))
     return (
         emb.select(
             F.col("label").cast("long").alias("label"),

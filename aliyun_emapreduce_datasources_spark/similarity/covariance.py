@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.operators.common import ensure_parallelism, t
+from aliyun_emapreduce_datasources_spark.similarity.intdot import QSCALE, micro, micro_np
 
 __all__ = [
     "embedding_covariance",
@@ -57,8 +58,6 @@ __all__ = [
     "QUERIES",
     "ORACLES",
 ]
-
-QSCALE = 1_000_000
 
 _GRAM_SCHEMA = (
     "dim_a long, dim_b long, n long, s_a long, s_b long, s_ab long"
@@ -101,7 +100,7 @@ def _gram_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "the exact micro-int quantization is only "
                         "defined for finite values"
                     )
-                Q = np.floor(X * float(QSCALE)).astype(np.int64)
+                Q = micro_np(X).astype(np.int64)
                 with np.errstate(over="ignore"):
                     G = Q.T @ Q  # int64, JVM-long wraparound semantics
                     col = Q.sum(axis=0, dtype=np.int64)
@@ -129,10 +128,7 @@ def _gram_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
-    qarr = F.transform(
-        "embedding",
-        lambda e: F.floor(e.cast("double") * F.lit(float(QSCALE))).cast("long"),
-    )
+    qarr = F.transform("embedding", micro)
     return (
         emb.select(qarr.alias("q"))
         .select(F.posexplode("q").alias("dim_a", "qa"), "q")

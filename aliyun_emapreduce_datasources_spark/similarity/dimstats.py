@@ -34,13 +34,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.operators.common import t
+from aliyun_emapreduce_datasources_spark.similarity.intdot import micro
 
 __all__ = ["embedding_dim_profile", "QUERY", "ORACLE"]
 
 
 def embedding_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
-    q = F.floor(F.col("e").cast("double") * F.lit(1000000.0)).cast("long")
+    q = micro(F.col("e"))
     agg = (
         emb.select(F.posexplode("embedding").alias("dim", "e"))
         .select(F.col("dim").cast("long").alias("dim"), q.alias("q"))
@@ -107,10 +108,7 @@ def emb_norm_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     handful of buckets; everything integer, no division at all.
     """
     emb = t(spark, sf_dir, "embeddings")
-    q = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("long"),
-    )
+    q = F.transform("embedding", micro)
     norm2 = F.aggregate(
         q, F.lit(0).cast("long"), lambda acc, v: acc + v * v
     )

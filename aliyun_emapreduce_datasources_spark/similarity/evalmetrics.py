@@ -6,9 +6,9 @@ bit-exact against the DuckDB oracle.
 
 Why a "model" with no model: the scorer is a fixed deterministic
 linear probe (integer coefficients derived from a hash mix, applied to
-the micro-quantized embedding — the centroid.py/kmeans.py portable
-quantization). The *metric arithmetic* is the operator under test;
-the probe just has to be reproducible in both engines, exactly, which
+the micro-quantized embedding of similarity/intdot.py). The *metric
+arithmetic* is the operator under test; the probe just has to be
+reproducible in both engines, exactly, which
 integer dots guarantee (|q| ≤ ~5·10⁵, |coef| ≤ 3, dim 64 ⇒
 |score| ≤ ~1.1·10⁸ ≪ 2⁵³ — exact in int64 AND in double, so DuckDB's
 list_inner_product agrees byte-for-byte).
@@ -27,9 +27,9 @@ Scale shapes:
 - PRF / top-k accuracy: embeddings × 10 classes via a broadcast
   cross join (no shuffle of the big side), argmax by per-vector
   window — partitioned by vec_id, so it scales out.
-- MRR@k: reuses the SAME exact-kNN block-cogroup kernel as the
-  label-noise audit (label_noise.exact_knn_topk) — one implementation,
-  several consumers; shuffle carries n·B·k candidate rows, never n².
+- MRR@k: the label-noise audit's exact kNN (label_noise.exact_knn_topk,
+  an ``intdot.block_cogroup`` over all B² block pairs); the shuffle
+  carries n·B·k candidate rows, never n².
 """
 
 from __future__ import annotations
@@ -39,10 +39,8 @@ from pyspark.sql import functions as F
 
 from aliyun_emapreduce_datasources_spark.operators.common import local_df
 from aliyun_emapreduce_datasources_spark.similarity import guard
-from aliyun_emapreduce_datasources_spark.similarity.label_noise import (
-    _quantized,
-    exact_knn_topk,
-)
+from aliyun_emapreduce_datasources_spark.similarity.intdot import block_cogroup, quantized
+from aliyun_emapreduce_datasources_spark.similarity.label_noise import exact_knn_topk
 
 __all__ = [
     "eval_auc_binary",
@@ -125,7 +123,7 @@ def eval_auc_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum_nn = bucket offset + in-bucket prefix, identical term by term
     to the global walk — no task ever sorts more than one bucket of
     the per-score table."""
-    scored = _quantized(spark, sf_dir).select(
+    scored = quantized(spark, sf_dir).select(
         _dot(F.col("qe"), _coef_binary()).alias("s"),
         F.when(F.col("label") >= 5, F.lit(1)).otherwise(F.lit(0)).alias("y"),
     )
@@ -211,7 +209,7 @@ def _class_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(c, _coef_class(c)) for c in range(N_CLASSES)],
         "cls int, coef array<long>",
     )
-    scored = _quantized(spark, sf_dir).crossJoin(F.broadcast(classes)).select(
+    scored = quantized(spark, sf_dir).crossJoin(F.broadcast(classes)).select(
         "vec_id",
         "label",
         "cls",
@@ -418,7 +416,7 @@ def eval_mrr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_label_rr = hits.groupBy("label").agg(
         F.sum("rr").cast("long").alias("sum_rr_x2520")
     )
-    totals = _quantized(spark, sf_dir).groupBy("label").agg(
+    totals = quantized(spark, sf_dir).groupBy("label").agg(
         F.count(F.lit(1)).cast("long").alias("n_queries")
     )
     return (
@@ -530,10 +528,10 @@ def eval_kendall_tau(
     one sqrt of an exactly-representable integer product (< 2⁵³) and
     one division — IEEE-identical in both engines.
 
-    Scale shape: O(n²) pair work by definition, distributed the same
-    way as the exact-kNN kernel: a B×B block grid (upper triangle)
-    where each cogroup task counts its block pair in one vectorized
-    numpy pass and emits FIVE scalars — the shuffle carries n·B rows
+    Scale shape: O(n²) pair work by definition, distributed by
+    ``intdot.block_cogroup`` over the upper triangle of a B×B block
+    grid, where each cogroup task counts its block pair in one
+    vectorized numpy pass and emits FIVE scalars — the shuffle carries n·B rows
     in and B² 5-int rows out, never n² pairs. The sign matrices are
     int8, so a task's memory is block_size² bytes. B AUTO-SCALES with
     the corpus (kt_auto_blocks: B = ceil(n/512), one count() of the
@@ -554,7 +552,7 @@ def eval_kendall_tau(
     the estimator path exists exactly so that m can bring any corpus
     under it. Bounded-deviation vs the exact statistic is pinned in
     tests/test_eval_guard.py."""
-    scored = _quantized(spark, sf_dir).select(
+    scored = quantized(spark, sf_dir).select(
         "vec_id",
         _dot(F.col("qe"), _coef_binary()).alias("sa"),
         _dot(F.col("qe"), _coef_class(1)).alias("sb"),
@@ -580,24 +578,6 @@ def eval_kendall_tau(
     base = base.withColumn(
         "blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int")
     )
-    grid = local_df(
-        spark,
-        [(i, j) for i in range(n_blocks) for j in range(n_blocks) if i <= j],
-        "blk_l int, blk_r int",
-    )
-
-    def replicated(side: str) -> DataFrame:
-        tag = "l" if side == "blk_l" else "r"
-        b, g = base.alias(f"kb{tag}"), grid.alias(f"kg{tag}")
-        return b.join(
-            F.broadcast(g), F.col(f"kb{tag}.blk") == F.col(f"kg{tag}.{side}")
-        ).select(
-            F.col(f"kg{tag}.blk_l").alias("blk_l"),
-            F.col(f"kg{tag}.blk_r").alias("blk_r"),
-            F.col(f"kb{tag}.vec_id").alias("vec_id"),
-            F.col(f"kb{tag}.sa").alias("sa"),
-            F.col(f"kb{tag}.sb").alias("sb"),
-        )
 
     import numpy as np
     import pandas as pd
@@ -631,11 +611,9 @@ def eval_kendall_tau(
             }
         )
 
-    partials = (
-        replicated("blk_l")
-        .groupBy("blk_l", "blk_r")
-        .cogroup(replicated("blk_r").groupBy("blk_l", "blk_r"))
-        .applyInPandas(partial_counts, "c long, d long, ta long, tb long, tab long")
+    grid = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
+    partials = block_cogroup(
+        base, base, grid, partial_counts, "c long, d long, ta long, tb long, tab long"
     )
     agg = partials.agg(
         F.sum("c").cast("long").alias("concordant"),
@@ -738,7 +716,7 @@ def eval_score_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitions the join and the per-score window — one exchange of
     the scored rows total.
     """
-    scored = _quantized(spark, sf_dir).select(
+    scored = quantized(spark, sf_dir).select(
         "vec_id",
         _dot(F.col("qe"), _coef_binary()).alias("s"),
         F.when(F.col("label") >= 5, F.lit(1)).otherwise(F.lit(0)).alias("y"),

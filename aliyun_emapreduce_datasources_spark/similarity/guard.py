@@ -43,9 +43,10 @@ def collect_query_batch(queries: DataFrame, columns: list[str], cap: int = MAX_Q
     return rows
 
 
-# The exact-kNN eval kernels (label_noise.exact_knn_topk and its
-# consumers eval_mrr_at_k / emb_hard_negatives / the label-noise
-# audit, eval_kendall_tau, emb_bitext_mine) are O(n²/B) TOTAL work by
+# The exact pairwise eval kernels on intdot.block_cogroup
+# (label_noise.exact_knn_topk and its consumers eval_mrr_at_k /
+# emb_hard_negatives / the label-noise audit, eval_kendall_tau,
+# emb_bitext_mine) are O(n²/B) TOTAL work by
 # definition — auto-blocking bounds the per-task size but nothing
 # bounds the pair total. Their contract is PROBE-SIZED eval sets
 # (the ANN operators are the corpus-scale path; the exact kernels are

@@ -17,8 +17,8 @@ Each iteration is the classic two-job Spark shape:
   materialized, lineage truncated) and feeds the next iteration.
 
 Determinism: embeddings quantize to integer micro-units
-(floor(x * 1e6)); squared L2, sums, and truncating division are all
-exact int64 in both engines, and ties (distance, then cluster id)
+(similarity/intdot.py); squared L2, sums, and truncating division are
+all exact int64 in both engines, and ties (distance, then cluster id)
 break identically — so the ENTIRE 4-iteration run is byte-exact and
 the DuckDB oracle is the same loop UNROLLED into CTEs (assignment
 join on dim, update group-by), like the unrolled PageRank oracle in
@@ -40,21 +40,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aliyun_emapreduce_datasources_spark.operators.common import t
+from aliyun_emapreduce_datasources_spark.similarity.intdot import QSCALE, quantized
 
 __all__ = ["QUERIES", "ORACLES", "emb_kmeans_train"]
 
 K = 8
 ITERS = 4
-QSCALE = 1_000_000.0
-
-
-def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: F.floor(x.cast("double") * F.lit(QSCALE)).cast("long")).alias("q"),
-    )
 
 
 def _assign_partials(q: DataFrame, labels: list, C: np.ndarray, final: bool) -> DataFrame:
@@ -167,7 +158,7 @@ def emb_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign+partial-sum map pass (see _assign_partials); the truncating
     ``s DIV n`` centroid division stays a Spark expression so the
     engine/oracle integer semantics cannot drift."""
-    q = _quantized(spark, sf_dir).persist()
+    q = quantized(spark, sf_dir).select("vec_id", F.col("qe").alias("q")).persist()
     seed = q.orderBy("vec_id").limit(K).collect()
     if not seed:
         return spark.createDataFrame([], "cluster long, n_points long, inertia long")
@@ -199,7 +190,7 @@ def _oracle() -> str:
 WITH emb_exp AS (
   SELECT vec_id,
          CAST(i - 1 AS BIGINT) AS dim,
-         CAST(FLOOR(CAST(e AS DOUBLE) * {int(QSCALE)}.0) AS BIGINT) AS qe
+         CAST(FLOOR(CAST(e AS DOUBLE) * {QSCALE}.0) AS BIGINT) AS qe
   FROM (
     SELECT vec_id, unnest(embedding) AS e, generate_subscripts(embedding, 1) AS i
     FROM embeddings

@@ -8,24 +8,23 @@ similarity, majority vote of neighbor labels, ``is_noisy`` when the
 own label is in the strict minority (2·n_same < K).
 
 Determinism / oracle parity: similarity is the INNER PRODUCT of
-integer micro-quantized vectors (``floor(double(x)·1e6)`` — the
-centroid.py/kmeans.py portable quantization). Dots are exact int64
-(|q| ≤ ~5·10⁵, dim 64 ⇒ |dot| ≲ 2·10¹³ ≪ 2⁵³; a runtime guard in
-``partial_topk`` raises ``OverflowError`` before any matmul whose
-worst-case ``dim·max|ql|·max|qr|`` could wrap int64), so
-Spark's numpy int64 matmul and DuckDB's list_inner_product agree
-byte-for-byte and top-K membership cannot flip on a last-ulp tie the
-way float cosine can; remaining ties break on neighbor id.
+integer micro-quantized vectors (similarity/intdot.py: ``floor(
+double(x)·1e6)``). Dots are exact int64 (|q| ≤ ~5·10⁵, dim 64 ⇒
+|dot| ≲ 2·10¹³ ≪ 2⁵³; ``intdot.int_matmul`` raises ``OverflowError``
+before any matmul whose worst case could wrap int64), so Spark's
+numpy int64 matmul and DuckDB's list_inner_product agree byte-for-byte
+and top-K membership cannot flip on a last-ulp tie the way float
+cosine can; remaining ties break on neighbor id.
 
 Scale shape: exact kNN is O(n²) compute by definition — the point is
-to DISTRIBUTE it without materializing n² rows: the same block-matrix
-cogroup as dedup/embedding.py neardup_blocked (each side replicated
-B times, numpy matmul per block pair), but each block pair emits only
-its per-query partial top-K, so the shuffle into the global top-K
-window carries n·B·K rows, never n². At 100 TB the shortlist step
-swaps for the IVF/LSH probe (similarity/ivf.py, lsh.py) with this
-exact variant as the recall reference — the same split the ANN
-entries already make.
+to DISTRIBUTE it without materializing n² rows: ``intdot.block_cogroup``
+over all B² block pairs (each side replicated B times, one numpy
+matmul per block pair), and each block pair emits only its per-query
+partial top-K, so the shuffle into the global top-K window carries
+n·B·K rows, never n². At 100 TB the shortlist step swaps for the
+IVF/LSH probe (``lsh_shortlist_knn_topk``, ``ivf_shortlist_knn_topk``)
+with this exact variant as the recall reference — the same split the
+ANN entries already make.
 
 Testdata note: the driver's synthetic labels are geometry-free
 (top-5 neighbor label agreement ≈ 10% ≈ chance at 10 labels, measured
@@ -37,15 +36,15 @@ randomized differential pin exactly.
 
 from __future__ import annotations
 
-from collections.abc import Iterator  # noqa: F401  (doc parity with siblings)
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from aliyun_emapreduce_datasources_spark.operators.common import local_df, t
-from aliyun_emapreduce_datasources_spark.similarity import guard
+from aliyun_emapreduce_datasources_spark.operators.common import t
+from aliyun_emapreduce_datasources_spark.similarity import guard, intdot
 from aliyun_emapreduce_datasources_spark.similarity.score import _matrix, _normalize
 
 __all__ = [
@@ -64,85 +63,36 @@ N_BLOCKS = 8
 _CAND_SCHEMA = "vec_id long, label int, nbr long, nbr_label int, dot long"
 
 
-def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    q = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("long"),
-    )
-    return emb.select(
-        "vec_id", F.col("label").cast("int").alias("label"), q.alias("qe")
-    )
-
-
 def exact_knn_topk(
     spark: SparkSession,
     sf_dir: str,
     k: int = K_NN,
     n_blocks: int = N_BLOCKS,
     cap: int = guard.MAX_EVAL_ROWS,
-    shortlist: str = "exact",
 ) -> DataFrame:
     """(vec_id, label, nbr, nbr_label, dot, rn): exact top-`k`
     integer-dot neighbors per vector with their 1-based rank
     (dot desc, nbr asc tie-break, self excluded). Shared kernel for
     the label-noise audit and the retrieval-eval metrics
-    (similarity/evalmetrics.py) — one block-cogroup implementation,
-    several consumers.
+    (similarity/evalmetrics.py).
 
     CONTRACT: probe-sized inputs only — total work is O(n²/B) pairs
     by definition, so the kernel refuses inputs above ``cap`` rows
     (guard.assert_probe_sized; raise ``cap=`` to opt into a larger
     pair budget deliberately). Corpus-scale neighbor search is the
-    ANN operators' job; this kernel is their exact reference.
-
-    ``shortlist="lsh"`` is that corpus-scale swap IN CODE (round-7
-    verdict ask #3, SCALING.md "kNN label-noise audit" / "MRR@k"):
-    candidates come from multi-table hyperplane buckets and only
-    those pairs are exactly rescored — see lsh_shortlist_knn_topk.
-    Same output schema, approximate membership (recall pinned in
-    tests/test_knn_shortlist.py), NO probe cap (bucketing, not n²,
-    is the point)."""
-    if shortlist == "lsh":
-        return lsh_shortlist_knn_topk(spark, sf_dir, k=k)
-    if shortlist == "ivf":
-        return ivf_shortlist_knn_topk(spark, sf_dir, k=k)
-    if shortlist != "exact":
-        raise ValueError(f"exact_knn_topk: unknown shortlist mode {shortlist!r}")
-
+    shortlists' job (``lsh_shortlist_knn_topk``,
+    ``ivf_shortlist_knn_topk``: same output schema, approximate
+    membership, recall pinned in tests/test_knn_shortlist.py); this
+    kernel is their exact reference."""
     # probe-size the input BEFORE persisting it (a mis-aimed corpus
     # must be refused, not first materialized)
-    q = _quantized(spark, sf_dir)
+    q = intdot.quantized(spark, sf_dir)
     guard.assert_probe_sized(q, "exact_knn_topk", cap)
-    # ONE scan+quantize feeds both cogroup sides; the block grid is
-    # built once and broadcast to both replication joins.
+    # ONE scan+quantize feeds both cogroup sides
     base = (
         q.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
         .persist()
     )
-    grid = local_df(
-        spark,
-        [(i, j) for i in range(n_blocks) for j in range(n_blocks)],
-        "blk_l int, blk_r int",
-    )
-
-    def replicated(side: str) -> DataFrame:
-        # both sides derive from the SAME checkpointed base — alias the
-        # datasets and re-alias every projected column (fresh exprIds)
-        # so the self-join ambiguity check resolves each side
-        tag = "l" if side == "blk_l" else "r"
-        b, g = base.alias(f"b{tag}"), grid.alias(f"g{tag}")
-        return b.join(
-            F.broadcast(g), F.col(f"b{tag}.blk") == F.col(f"g{tag}.{side}")
-        ).select(
-            F.col(f"g{tag}.blk_l").alias("blk_l"),
-            F.col(f"g{tag}.blk_r").alias("blk_r"),
-            F.col(f"b{tag}.vec_id").alias("vec_id"),
-            F.col(f"b{tag}.label").alias("label"),
-            F.col(f"b{tag}.qe").alias("qe"),
-        )
-
-    left, right = replicated("blk_l"), replicated("blk_r")
 
     def partial_topk(key, pl: pd.DataFrame, pr: pd.DataFrame) -> pd.DataFrame:
         if pl.empty or pr.empty:
@@ -151,46 +101,22 @@ def exact_knn_topk(
             )
         ids_l = pl["vec_id"].to_numpy(dtype=np.int64)
         ids_r = pr["vec_id"].to_numpy(dtype=np.int64)
-        lab_l = pl["label"].to_numpy(dtype=np.int32)
-        lab_r = pr["label"].to_numpy(dtype=np.int32)
-        ml = np.vstack(pl["qe"].map(lambda a: np.asarray(a, dtype=np.int64)).to_numpy())
-        mr = np.vstack(pr["qe"].map(lambda a: np.asarray(a, dtype=np.int64)).to_numpy())
-        # runtime wrap guard: numpy int64 matmul overflows SILENTLY, so
-        # bound the worst-case |dot| = dim·max|ql|·max|qr| before
-        # computing — inputs ≳ ~600 absolute value at dim 64 would
-        # otherwise corrupt top-K membership with no error
-        max_l = int(np.abs(ml).max(initial=0))
-        max_r = int(np.abs(mr).max(initial=0))
-        worst = ml.shape[1] * max_l * max_r
-        if worst >= 2**62:
-            raise OverflowError(
-                "label_noise: quantized dot product may exceed int64 "
-                f"(dim={ml.shape[1]}, max|ql|={max_l}, max|qr|={max_r}, "
-                f"worst-case |dot|={worst}); reduce the quantization "
-                "scale or input magnitude"
-            )
-        dots = ml @ mr.T  # exact int64
-        out = {c: [] for c in ("vec_id", "label", "nbr", "nbr_label", "dot")}
-        kk = min(k, dots.shape[1])
-        for i in range(dots.shape[0]):
-            row = dots[i]
-            # self never qualifies as its own neighbor
-            self_mask = ids_r == ids_l[i]
-            # (dot desc, nbr asc) via lexsort (last key is primary)
-            order = np.lexsort((ids_r, -row))
-            order = order[~self_mask[order]][:kk]
-            out["vec_id"].extend([ids_l[i]] * len(order))
-            out["label"].extend([lab_l[i]] * len(order))
-            out["nbr"].extend(ids_r[order].tolist())
-            out["nbr_label"].extend(lab_r[order].tolist())
-            out["dot"].extend(row[order].tolist())
-        return pd.DataFrame(out)
+        dots = intdot.int_matmul(
+            _matrix(pl["qe"], np.int64), _matrix(pr["qe"], np.int64)
+        )
+        i, j = intdot.topk_rows(dots, ids_l, ids_r, k)
+        return pd.DataFrame(
+            {
+                "vec_id": ids_l[i],
+                "label": pl["label"].to_numpy(dtype=np.int32)[i],
+                "nbr": ids_r[j],
+                "nbr_label": pr["label"].to_numpy(dtype=np.int32)[j],
+                "dot": dots[i, j],
+            }
+        )
 
-    cands = (
-        left.groupBy("blk_l", "blk_r")
-        .cogroup(right.groupBy("blk_l", "blk_r"))
-        .applyInPandas(partial_topk, _CAND_SCHEMA)
-    )
+    grid = [(i, j) for i in range(n_blocks) for j in range(n_blocks)]
+    cands = intdot.block_cogroup(base, base, grid, partial_topk, _CAND_SCHEMA)
     w = Window.partitionBy("vec_id").orderBy(F.desc("dot"), F.asc("nbr"))
     return cands.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
@@ -288,7 +214,7 @@ def lsh_shortlist_knn_topk(
     the EXACT int64 dot is computed JVM-side (zip_with + aggregate —
     whole-stage codegen, no Python in the per-pair hot path; ANSI
     mode turns a hypothetical int64 overflow into a loud error, the
-    expression-tree twin of partial_topk's explicit wrap guard), then
+    expression-tree twin of intdot.int_matmul's wrap guard), then
     the per-query top-k is a rank-limited window (rank <= k compiles
     to WindowGroupLimit — per-partition top-k, no global sort).
 
@@ -299,7 +225,7 @@ def lsh_shortlist_knn_topk(
     # reused 4x (two signature fan-outs via the flag column + the two
     # rescore vector joins) — materialize the narrow quantized table
     # once instead of re-scanning parquet per consumer
-    base = _quantized(spark, sf_dir).persist()
+    base = intdot.quantized(spark, sf_dir).persist()
     tagged = lsh_bucket_probes(base, n_planes, n_tables)
     corp = tagged.where(F.col("probe") == 0).select(
         "tbl", "sig", F.col("vec_id").alias("cid")
@@ -313,54 +239,7 @@ def lsh_shortlist_knn_topk(
         .select("qid", "cid")
         .dropDuplicates(["qid", "cid"])
     )
-    return _rescore_topk(base, pairs, k)
-
-
-def exact_int_dot(left_col: str, right_col: str):
-    """Exact int64 inner product of two quantized-int array columns,
-    as a JVM expression tree (whole-stage codegen; ANSI mode turns a
-    hypothetical int64 overflow into a loud error). Shared by the
-    LSH/IVF shortlists and the bitext candidate rescore — ONE
-    definition so a tie-break/overflow change can't diverge."""
-    return F.aggregate(
-        F.zip_with(left_col, right_col, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
-def _rescore_topk(base: DataFrame, pairs: DataFrame, k: int) -> DataFrame:
-    """Shared exact-rescore tail of the LSH and IVF shortlists: join
-    the candidate (qid, cid) pairs back to their quantized vectors,
-    compute the exact JVM int64 dot, and take the per-query top-k with
-    a rank-limited window (WindowGroupLimit). Output schema matches
-    exact_knn_topk."""
-    lq = base.select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("q_label"),
-        F.col("qe").alias("q_qe"),
-    )
-    rq = base.select(
-        F.col("vec_id").alias("cid"),
-        F.col("label").alias("c_label"),
-        F.col("qe").alias("c_qe"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("dot"), F.asc("cid"))
-    return (
-        pairs.join(lq, "qid")
-        .join(rq, "cid")
-        .withColumn("dot", exact_int_dot("q_qe", "c_qe"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("q_label").alias("label"),
-            F.col("cid").alias("nbr"),
-            F.col("c_label").alias("nbr_label"),
-            "dot",
-            "rn",
-        )
-    )
+    return intdot.rescore_topk(base, pairs, k)
 
 
 IVF_CLUSTERS = 16
@@ -410,7 +289,7 @@ def ivf_shortlist_knn_topk(
             [], "vec_id long, label int, nbr long, nbr_label int, dot long, rn long"
         )
     C = train_centroids(emb, k=n_clusters)
-    base = _quantized(spark, sf_dir).persist()
+    base = intdot.quantized(spark, sf_dir).persist()
     npb = min(max(nprobe, soft), len(C))
     soft = min(soft, npb)
 
@@ -447,7 +326,7 @@ def ivf_shortlist_knn_topk(
         .select("qid", "cid")
         .dropDuplicates(["qid", "cid"])
     )
-    return _rescore_topk(base, pairs, k)
+    return intdot.rescore_topk(base, pairs, k)
 
 
 def emb_label_noise_knn(

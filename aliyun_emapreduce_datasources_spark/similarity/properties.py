@@ -51,6 +51,8 @@ def ann_rank_consistency_violations(
     job's straggler tail back-fills with the next variant's work
     (guide §2.6); the assembled plan — and therefore the result — is
     identical, as each thread only CONSTRUCTS its variant's DataFrame.
+    The pool runs ``inheritable_thread_target`` builds, so the variants'
+    eager jobs stay in the caller's job group.
     """
     from aliyun_emapreduce_datasources_spark.similarity import ivf, lsh, pq, quantize
 
@@ -96,8 +98,16 @@ def ann_rank_consistency_violations(
     if concurrent:
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         with ThreadPoolExecutor(max_workers=len(variants)) as pool:
-            viols = list(pool.map(build, variants.items()))
+            # one wrap per build, so each thread gets its own copy of
+            # the caller's local properties
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(build), item)
+                for item in variants.items()
+            ]
+            viols = [f.result() for f in futures]
     else:
         viols = [build(item) for item in variants.items()]
     out = viols[0]
@@ -107,46 +117,19 @@ def ann_rank_consistency_violations(
 
 
 def _scratch_index_dir(spark: SparkSession, sf_dir: str, tag: str) -> str:
-    """Per-(fixture, applicationId) scratch path for a filed IVF index
-    under the system tempdir, with the sibling-copy reaper. Staleness
-    is keyed on a per-copy HEARTBEAT file the owning session touches
-    on every run (r10 advice: the bare dir mtime narrowed but did not
-    close the reap-a-live-sibling race), with a 24 h window — a
-    sibling is reaped only if its owner has not re-run the check for a
-    full day, far beyond any bench/test session's idle-then-re-read
-    gap. Within one session repeated runs overwrite the same bounded
-    copy; concurrent sessions get disjoint paths (a shared
-    deterministic path raced — r09 ADVICE)."""
-    import glob
+    """Per-fixture scratch path for a filed IVF index under the Spark
+    application's SparkFiles root. That directory belongs to one
+    application and Spark deletes it when the context stops, so
+    concurrent sessions get disjoint paths (a shared deterministic
+    path raced — r09 ADVICE), repeated runs in one session overwrite
+    the same bounded copy, and nothing outlives the session."""
     import hashlib
     import os
-    import shutil
-    import tempfile
-    import time
+
+    from pyspark import SparkFiles
 
     fixture_key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    prefix = os.path.join(tempfile.gettempdir(), f"ivf_{tag}_" + fixture_key)
-    dst = prefix + "_" + spark.sparkContext.applicationId
-    for old in glob.glob(prefix + "_*"):
-        if old == dst:
-            continue
-        hb = os.path.join(old, "HEARTBEAT")
-        try:
-            mark = hb if os.path.exists(hb) else old
-            stale = time.time() - os.path.getmtime(mark) > 24 * 3600
-        except OSError:
-            continue
-        if stale:
-            shutil.rmtree(old, ignore_errors=True)
-    return dst
-
-
-def _touch_heartbeat(dst: str) -> None:
-    import os
-    import time
-
-    with open(os.path.join(dst, "HEARTBEAT"), "w") as fh:
-        fh.write(str(time.time()))
+    return os.path.join(SparkFiles.getRootDirectory(), f"ivf_{tag}_{fixture_key}")
 
 
 def ann_ivf_file_consistency_violations(
@@ -175,17 +158,15 @@ def ann_ivf_file_consistency_violations(
     silently retrained or re-bucketed, a scoring-kernel fork)
     surfaces as a non-empty, hash-mismatching result.
 
-    The index lives under the system tempdir at a path keyed by
-    (fixture, Spark applicationId): within one session repeated runs
-    (bench sweeps, parity tests) overwrite the same bounded copy, and
-    CONCURRENT sessions on the same fixture get disjoint paths — a
-    shared deterministic path raced (one session's mode("overwrite")
-    deleted parquet files another session's lazily-evaluated result
-    still planned to read; r09 ADVICE). It cannot be deleted here
-    because the returned DataFrame still reads from it; boundedness
-    across sessions is kept by reaping sibling copies whose mtime is
-    hours old (a live concurrent session's copy is always fresher).
-    The quantizer is trained once and passed to both paths. At 100 TB
+    The index lives under the application's SparkFiles root
+    (``_scratch_index_dir``), keyed by fixture: within one session
+    repeated runs (bench sweeps, parity tests) overwrite the same
+    bounded copy, and CONCURRENT sessions on the same fixture get
+    disjoint paths — a shared deterministic path raced (one session's
+    mode("overwrite") deleted parquet files another session's
+    lazily-evaluated result still planned to read; r09 ADVICE). It
+    cannot be deleted here because the returned DataFrame still reads
+    from it; Spark deletes it when the context stops. The quantizer is trained once and passed to both paths. At 100 TB
     the write is the one-off index build and every query batch reads
     nprobe/K of the bytes through directory pruning."""
     from aliyun_emapreduce_datasources_spark.similarity import ivf
@@ -201,7 +182,6 @@ def ann_ivf_file_consistency_violations(
     # the in-memory twin (handed C directly) also proves no retrain
     ivf.write_clustered(base, C, dst)
     ivf.append_clustered(increment, dst)
-    _touch_heartbeat(dst)
     via_file = ivf.ivf_file_search_topk(spark, dst, queries).select(
         "query_id", "rnk", F.col("neighbor_id").alias("file_neighbor")
     )
@@ -245,7 +225,6 @@ def ann_ivf_drift_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     dst = _scratch_index_dir(spark, sf_dir, "drift_check")
     ivf.write_clustered(base, C, dst)
     ivf.append_clustered(increment, dst)
-    _touch_heartbeat(dst)
     return (
         ivf.drift_report(spark, dst)
         .where(F.col("drifted"))

@@ -66,9 +66,9 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-def _matrix(col: pd.Series) -> np.ndarray:
-    """(n, dim) float64 matrix of a batch's array column."""
-    return np.vstack(col.map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
+def _matrix(col: pd.Series, dtype=np.float64) -> np.ndarray:
+    """(n, dim) matrix of a batch's array column."""
+    return np.vstack(col.map(lambda a: np.asarray(a, dtype=dtype)).to_numpy())
 
 
 def query_batch(queries: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:

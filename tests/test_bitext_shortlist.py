@@ -1,6 +1,6 @@
 """LSH shortlist for the bitext miner (round-7 verdict ask #3
 stretch: SCALING.md's 'block matmul swaps for the IVF/LSH shortlist'
-bullet, now code). emb_bitext_mine(shortlist="lsh") generates
+bullet, now code). lsh_shortlist_bitext_mine generates
 candidates from the shared hyperplane bucket table (probes of each
 parity against corpus entries of the other) and exactly rescores only
 those — measured vs the exact block-cogroup variant on the
@@ -14,6 +14,7 @@ import pytest
 
 from aliyun_emapreduce_datasources_spark.similarity.bitext import (
     emb_bitext_mine,
+    lsh_shortlist_bitext_mine,
 )
 
 
@@ -25,7 +26,7 @@ def both(spark, sf_dir):
     }
     appr = {
         (r.src_id, r.dst_id): (r.dot, r.margin)
-        for r in emb_bitext_mine(spark, sf_dir, shortlist="lsh").collect()
+        for r in lsh_shortlist_bitext_mine(spark, sf_dir).collect()
     }
     return exact, appr
 
@@ -51,8 +52,3 @@ def test_output_contract(both):
     dsts = [d for _, d in appr]
     assert len(dsts) == len(set(dsts))
     assert all(m > 1.0 for _, m in appr.values())
-
-
-def test_unknown_shortlist_mode_raises(spark, sf_dir):
-    with pytest.raises(ValueError, match="unknown shortlist mode"):
-        emb_bitext_mine(spark, sf_dir, shortlist="faiss")

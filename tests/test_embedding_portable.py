@@ -30,13 +30,13 @@ import pytest
 from aliyun_emapreduce_datasources_spark.dedup import embedding
 from aliyun_emapreduce_datasources_spark.dedup.embedding import (
     LSH_PLANES,
-    QUANT_SCALE,
     TARGET_BUCKET,
     _int_plane_matrix,
     auto_planes,
     auto_tables,
 )
 from aliyun_emapreduce_datasources_spark.dedup.properties import QUANT_COS_SLACK
+from aliyun_emapreduce_datasources_spark.similarity.intdot import QSCALE
 
 
 def _float_law(n: int, target: int = TARGET_BUCKET) -> int:
@@ -77,7 +77,7 @@ def test_quantized_cosine_shift_bound():
         .fetchnumpy()["embedding"]
     )
     M = np.vstack([np.asarray(v, dtype=np.float64) for v in V])
-    Q = np.floor(M * QUANT_SCALE)
+    Q = np.floor(M * QSCALE)
     def cosmat(X):
         n = np.linalg.norm(X, axis=1, keepdims=True)
         n[n == 0] = 1.0
@@ -155,7 +155,7 @@ def test_portable_recall_at_auto_scaled_planes(spark, tmp_path):
 
     # the portable law's own exact ground truth: quantized ints,
     # integer threshold predicate (float64 stays exact: dot < 2^53)
-    Q = np.floor(vecs.astype(np.float64) * QUANT_SCALE)
+    Q = np.floor(vecs.astype(np.float64) * QSCALE)
     dots = Q @ Q.T
     n2 = np.einsum("ij,ij->i", Q, Q)
     ok = (dots > 0) & (25.0 * dots * dots >= 4.0 * np.outer(n2, n2))

@@ -274,3 +274,30 @@ def test_shifted_append_trips_drift(spark, sf_dir, tmp_path):
     rep = drift_report(spark, dst).toPandas()
     hit = rep[rep["drifted"]]
     assert len(hit) > 0, rep
+
+
+def test_check_index_lives_under_sparkfiles_root(spark, sf_dir):
+    """The consistency check files its scratch index under the
+    application's SparkFiles root, which Spark deletes when the context
+    stops, and leaves no ``ivf_*`` copy in the system tempdir."""
+    import glob
+    import os
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    from aliyun_emapreduce_datasources_spark.similarity.properties import (
+        _scratch_index_dir,
+        ann_ivf_file_consistency_violations,
+    )
+
+    def tmp_copies():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "ivf_*")))
+
+    before = tmp_copies()
+    assert ann_ivf_file_consistency_violations(spark, sf_dir).count() == 0
+    dst = _scratch_index_dir(spark, sf_dir, "file_check")
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    assert os.path.commonpath([root, os.path.realpath(dst)]) == root
+    assert os.path.isdir(os.path.join(dst, "centroids"))
+    assert tmp_copies() - before == set()

@@ -48,14 +48,16 @@ BUDGET = {  # entry: (build jobs, build + noop write jobs)
     # against a second, broadcast read of the query side (was (2, 7))
     "ann_int8_topk": (2, 6),
     "ann_pq_topk": (3, 7),
-    # the companions' variant builds run on pool threads outside the
-    # job group, so only their own jobs count; the rank check's int8
-    # variant lost its query-side join like ann_int8_topk (was (1, 17))
-    "ann_rank_consistency_check": (1, 16),
+    # the variant builds run on pool threads that now carry the job
+    # group, so their eager jobs count (was (1, 16) with a bare pool)
+    "ann_rank_consistency_check": (11, 26),
     "ann_ivf_file_consistency_check": (21, 30),
     "ann_ivf_drift_check": (16, 24),
     "dedup_bloom_decontaminate": (3, 4),
     "dedup_semantic": (1, 5),
+    # both sides build on group-carrying pool threads (a bare pool
+    # counted (0, 9))
+    "dedup_minhash_cluster_containment_check": (21, 30),
     "emb_label_noise_knn": (3, 13),
     "emb_bitext_mine": (3, 21),
     "emb_hard_negatives": (3, 13),

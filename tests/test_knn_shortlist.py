@@ -1,6 +1,6 @@
 """LSH shortlist for the exact-kNN rescore path (round-7 verdict ask
 #3: the '100 TB swap' previously existed only as SCALING.md prose).
-exact_knn_topk(shortlist="lsh") must: share the exact kernel's output
+lsh_shortlist_knn_topk must: share the exact kernel's output
 schema; compute bit-identical integer dots for every pair it
 surfaces; recover a pinned fraction of the true top-k (measured
 0.8668 recall@5 on the deterministic sf0.001 embeddings with B=6,
@@ -13,6 +13,8 @@ import pytest
 
 from aliyun_emapreduce_datasources_spark.similarity.label_noise import (
     exact_knn_topk,
+    ivf_shortlist_knn_topk,
+    lsh_shortlist_knn_topk,
 )
 
 K = 5
@@ -21,7 +23,7 @@ K = 5
 @pytest.fixture(scope="module")
 def both(spark, sf_dir):
     exact = exact_knn_topk(spark, sf_dir, k=K).collect()
-    appr = exact_knn_topk(spark, sf_dir, k=K, shortlist="lsh").collect()
+    appr = lsh_shortlist_knn_topk(spark, sf_dir, k=K).collect()
     return exact, appr
 
 
@@ -68,16 +70,11 @@ def test_ranks_consistent_with_dots(both):
 
 
 def test_plan_group_limited_no_cartesian(spark, sf_dir):
-    df = exact_knn_topk(spark, sf_dir, k=K, shortlist="lsh")
+    df = lsh_shortlist_knn_topk(spark, sf_dir, k=K)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan, "top-k must be per-partition limited"
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_unknown_shortlist_mode_raises(spark, sf_dir):
-    with pytest.raises(ValueError, match="unknown shortlist mode"):
-        exact_knn_topk(spark, sf_dir, shortlist="faiss")
 
 
 def test_shortlist_empty_corpus(spark, tmp_path_factory):
@@ -87,7 +84,7 @@ def test_shortlist_empty_corpus(spark, tmp_path_factory):
     spark.createDataFrame(
         [], "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    assert exact_knn_topk(spark, d, k=K, shortlist="lsh").count() == 0
+    assert lsh_shortlist_knn_topk(spark, d, k=K).count() == 0
 
 
 def test_ivf_shortlist_recall_and_exact_dots(spark, sf_dir):
@@ -100,7 +97,7 @@ def test_ivf_shortlist_recall_and_exact_dots(spark, sf_dir):
     soft=2 default — pinned at 0.7; surfaced dots must still be
     bit-exact."""
     exact = exact_knn_topk(spark, sf_dir, k=K).collect()
-    appr = exact_knn_topk(spark, sf_dir, k=K, shortlist="ivf").collect()
+    appr = ivf_shortlist_knn_topk(spark, sf_dir, k=K).collect()
     e = {(r.vec_id, r.nbr): r.dot for r in exact}
     a = {(r.vec_id, r.nbr): r.dot for r in appr}
     inter = set(e) & set(a)
@@ -114,10 +111,6 @@ def test_ivf_soft_assignment_improves_recall(spark, sf_dir):
     (the old hard assignment) strictly under soft=2 on this fixture
     (0.587 vs 0.791 measured), and the soft=2 candidates are a
     superset of what a shared-rank-0 bucket join could surface."""
-    from aliyun_emapreduce_datasources_spark.similarity.label_noise import (
-        ivf_shortlist_knn_topk,
-    )
-
     exact = exact_knn_topk(spark, sf_dir, k=K).collect()
     e = set((r.vec_id, r.nbr) for r in exact)
     hard = ivf_shortlist_knn_topk(spark, sf_dir, k=K, soft=1).collect()
@@ -129,7 +122,7 @@ def test_ivf_soft_assignment_improves_recall(spark, sf_dir):
 
 
 def test_ivf_shortlist_plan_group_limited(spark, sf_dir):
-    df = exact_knn_topk(spark, sf_dir, k=K, shortlist="ivf")
+    df = ivf_shortlist_knn_topk(spark, sf_dir, k=K)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
     assert "CartesianProduct" not in plan

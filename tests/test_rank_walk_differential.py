@@ -377,11 +377,11 @@ def test_score_deciles_closed_form_equals_ntile(spark, emb_dir):
     from aliyun_emapreduce_datasources_spark.similarity.evalmetrics import (
         _coef_binary,
         _dot,
-        _quantized,
         eval_score_deciles,
     )
+    from aliyun_emapreduce_datasources_spark.similarity.intdot import quantized
 
-    scored = _quantized(spark, emb_dir).select(
+    scored = quantized(spark, emb_dir).select(
         "vec_id",
         _dot(F.col("qe"), _coef_binary()).alias("s"),
         F.when(F.col("label") >= 5, F.lit(1)).otherwise(F.lit(0)).alias("y"),
@@ -415,11 +415,11 @@ def test_auc_range_partitioned_equals_global_prefix(spark, emb_dir):
     from aliyun_emapreduce_datasources_spark.similarity.evalmetrics import (
         _coef_binary,
         _dot,
-        _quantized,
         eval_auc_binary,
     )
+    from aliyun_emapreduce_datasources_spark.similarity.intdot import quantized
 
-    scored = _quantized(spark, emb_dir).select(
+    scored = quantized(spark, emb_dir).select(
         _dot(F.col("qe"), _coef_binary()).alias("s"),
         F.when(F.col("label") >= 5, F.lit(1)).otherwise(F.lit(0)).alias("y"),
     )
