@@ -88,14 +88,11 @@ def embedding_neardup_blocked(
     upper triangle of the block grid (see module docstring). Matches
     the O(n²) SQL oracle bit-for-bit on pair membership with no
     driver-side data movement."""
-    def side() -> DataFrame:
-        # fresh scan per side: two scans carry identical pushed-down
-        # plans with distinct attribute ids
-        return (
-            t(spark, sf_dir, "embeddings")
-            .select("vec_id", "embedding")
-            .withColumn("blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
-        )
+    emb = (
+        t(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .withColumn("blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
+    )
 
     def score(key, pa: pd.DataFrame, pb: pd.DataFrame) -> pd.DataFrame:
         if pa.empty or pb.empty:
@@ -117,7 +114,7 @@ def embedding_neardup_blocked(
         return pd.DataFrame({"vec_a": lo, "vec_b": hi})
 
     grid = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
-    return block_cogroup(side(), side(), grid, score, PAIRS_SCHEMA, ("blk_a", "blk_b"))
+    return block_cogroup(emb, emb, grid, score, PAIRS_SCHEMA, ("blk_a", "blk_b"))
 
 
 LSH_PLANES = 3  # minimum; auto_planes raises it with corpus size

@@ -166,9 +166,10 @@ def ann_ivf_file_consistency_violations(
     mode("overwrite") deleted parquet files another session's
     lazily-evaluated result still planned to read; r09 ADVICE). It
     cannot be deleted here because the returned DataFrame still reads
-    from it; Spark deletes it when the context stops. The quantizer is trained once and passed to both paths. At 100 TB
-    the write is the one-off index build and every query batch reads
-    nprobe/K of the bytes through directory pruning."""
+    from it; Spark deletes it when the context stops. The quantizer is
+    trained once and passed to both paths. At 100 TB the write is the
+    one-off index build and every query batch reads nprobe/K of the
+    bytes through directory pruning."""
     from aliyun_emapreduce_datasources_spark.similarity import ivf
 
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")

@@ -122,13 +122,11 @@ def test_catalog_check_empty_and_falsifiable(spark, sf_dir, tmp_path):
     import shutil
     import os
 
-    from aliyun_emapreduce_datasources_spark.similarity.ivf import (
-        ann_ivf_topk,
-        N_QUERIES,
-    )
+    from aliyun_emapreduce_datasources_spark.similarity.ivf import ann_ivf_topk
     from aliyun_emapreduce_datasources_spark.similarity.properties import (
         ann_ivf_file_consistency_violations,
     )
+    from aliyun_emapreduce_datasources_spark.similarity.score import N_QUERIES
 
     assert ann_ivf_file_consistency_violations(spark, sf_dir).count() == 0
 
